@@ -15,13 +15,10 @@ chain the reference implements as wrapper indexes/readers
 DataFrame filters prepended to every selector:
 
 * tenant / forced matcher (A27)  -> ``points.filter(tenant == X)`` up front
-* series limit (A25)             -> count guard on the matched series dim
-* points limit (A26)             -> count guard on the scanned fact slice
+* series limit (A25)             -> distinct-series count of the query's
+                                    windowed fact slice
+* points limit (A26)             -> row count of that same slice
 * time clamp (A28)               -> ``greatest/least`` on the request bounds
-
-Remote write protobuf/snappy codecs are not reimplemented: ingestion is the
-Structured Streaming path (``streaming.ingest``); see
-:func:`decode_remote_write` for the gated stub.
 """
 
 from __future__ import annotations
@@ -31,6 +28,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from squirreldb_spark.model import series_json
 from squirreldb_spark.promql.planner import PromQLEngine
 
 # reference api/promql/time_range_index.go:29-87: clamp query times into
@@ -123,6 +121,8 @@ class PromAPI:
     """The /api/v1 endpoint set over a points DataFrame.
 
     ``points`` columns: ``(*label_cols, ts, value)`` (+ optional ``tenant``).
+    ``mutable_mapping`` is the mutable-label mapping as driver-side rows
+    (:mod:`squirreldb_spark.tsdb.mutable`).
     """
 
     def __init__(
@@ -132,7 +132,7 @@ class PromAPI:
         name_label: str = "event_type",
         lookback_ms: int = 300_000,
         tenant_col: str = "tenant",
-        mutable_mapping: DataFrame | None = None,
+        mutable_mapping: list | None = None,
         downsample: DataFrame | None = None,
         preagg_resolution_ms: int = 300_000,
         preagg_until_ms: int | None = None,
@@ -192,49 +192,17 @@ class PromAPI:
                 raise ValueError(f"unknown forced matcher label {name!r}")
         return pts
 
-    def _guard(self, pts: DataFrame, start_ms: int, end_ms: int,
-               opts: RequestOptions | None,
-               promql: str | None = None) -> None:
+    def _guard(self, scanned: DataFrame,
+               opts: RequestOptions | None) -> None:
         """A25/A26 series/points limits plus the engine sample budget
-        (``max_samples``) on the query's fact slice — one scanned-rows
-        count over the pruned scan, only when a guard is configured.
-
-        When the query string is known, the counted slice is the AST's
-        OWN sample window (planner.time_window) — a ``rate(m[30d])``
-        scans 30 days, and the budget must see those rows, not just the
-        default lookback slice.
-        """
+        (``max_samples``), counted on the relation the query reads
+        (:attr:`PromQLEngine.scanned`: tenant-scoped, time-bounded to the
+        AST's own sample window and partition-pruned) — one scanned-rows
+        count, only when a limit is configured."""
         max_points = opts.max_evaluated_points if opts else None
         max_series = opts.max_evaluated_series if opts else None
-        if max_points is None and max_series is None and self.max_samples is None:
-            return
-        behind, ahead = self.lookback_ms, 0
-        if promql is not None:
-            from squirreldb_spark.promql.parser import parse
-            from squirreldb_spark.promql.planner import time_window
-
-            try:
-                behind, ahead, anchors = time_window(
-                    parse(promql), self.lookback_ms
-                )
-                # An @-anchored selector reads its whole window around
-                # the anchor, not around [start,end] — widen by the
-                # expression's OWN pre-anchor window (behind/ahead as
-                # computed above), so e.g. rate(m[30d] @ t) with t
-                # outside the query range still budgets the 30d it scans.
-                behind_expr, ahead_expr = behind, ahead
-                for a in anchors:
-                    behind = max(behind, start_ms - (a - behind_expr))
-                    ahead = max(ahead, (a + ahead_expr) - end_ms)
-            except Exception:
-                # unparseable here -> engine raises the real error later;
-                # guard conservatively on the default slice
-                behind, ahead = self.lookback_ms, 0
-        sl = pts.filter(
-            (F.col("ts") > start_ms - behind) & (F.col("ts") <= end_ms + ahead)
-        )
         if max_points is not None or self.max_samples is not None:
-            n = sl.count()
+            n = scanned.count()
             if self.max_samples is not None and n > self.max_samples:
                 raise LimitExceeded(
                     f"{n} samples > engine budget max_samples={self.max_samples}"
@@ -243,33 +211,24 @@ class PromAPI:
                 raise LimitExceeded(
                     f"{n} points > max_evaluated_points={max_points}"
                 )
-        if opts is not None and opts.max_evaluated_series is not None:
+        if max_series is not None:
             if self.label_cols:
-                ident = sl.select(*self.label_cols)
-            elif self.labels_map_col is not None:
+                ident = scanned.select(*self.label_cols)
+            elif "__series__" in scanned.columns:
                 # dynamic-label store: the canonical map IS the identity
-                ident = sl.select(
-                    F.to_json(
-                        F.expr(
-                            "map_from_entries(array_sort(map_entries("
-                            f"{self.labels_map_col})))"
-                        )
-                    )
-                )
+                ident = scanned.select("__series__")
             else:
-                ident = sl
+                ident = scanned
             n = ident.distinct().count()
-            if n > opts.max_evaluated_series:
+            if n > max_series:
                 raise LimitExceeded(
-                    f"{n} series > max_evaluated_series={opts.max_evaluated_series}"
+                    f"{n} series > max_evaluated_series={max_series}"
                 )
 
     def _engine(self, start_ms: int, end_ms: int, step_ms: int,
-                opts: RequestOptions | None,
-                promql: str | None = None) -> PromQLEngine:
+                opts: RequestOptions | None) -> PromQLEngine:
         start_ms, end_ms = clamp_time(start_ms), clamp_time(end_ms)
         pts = self._scoped(opts)
-        self._guard(pts, start_ms, end_ms, opts, promql=promql)
         ds = self.downsample
         if ds is not None:
             ds = self._scoped(opts, ds)
@@ -294,12 +253,14 @@ class PromAPI:
                     enrich_mutable: str | None = None) -> DataFrame:
         """/api/v1/query_range -> (labels..., step_ts, value).
 
+        The query is parsed and time-windowed once, by the engine; the
+        limits then count the windowed relation it read (:meth:`_guard`).
         ``enrich_mutable`` (A32): attach the named mutable label to result
         series via a broadcast join against the mapping.
         """
-        out = self._engine(
-            start_ms, end_ms, step_ms, opts, promql=promql
-        ).query_range(promql)
+        eng = self._engine(start_ms, end_ms, step_ms, opts)
+        out = eng.query_range(promql)
+        self._guard(eng.scanned, opts)
         if enrich_mutable is not None:
             from squirreldb_spark.tsdb import mutable as mut
 
@@ -418,12 +379,7 @@ class PromAPI:
         )
         if self.labels_map_col is not None and not self.label_cols:
             return pts.select(
-                F.to_json(
-                    F.expr(
-                        "map_from_entries(array_sort(map_entries("
-                        f"{self.labels_map_col})))"
-                    )
-                ).alias("_lbl"),
+                series_json(F.col(self.labels_map_col)).alias("_lbl"),
                 "ts", "value",
             )
         return pts.select(
@@ -587,28 +543,3 @@ class PromAPI:
             "data": {"resultType": "matrix", "result": list(series.values())},
         }
 
-
-def decode_remote_write(body: bytes, spark=None) -> DataFrame | list:
-    """Prometheus remote-write decode (reference A1,
-    api/remotestorage/write.go:80-170): snappy block body -> prompb
-    WriteRequest, via the dependency-free wire codec in
-    :mod:`squirreldb_spark.codec`.
-
-    With ``spark``, returns a tall DataFrame
-    ``(labels MAP<STRING,STRING>, ts BIGINT, value DOUBLE)`` ready for
-    the streaming ingest path; without it, the decoded
-    ``codec.TimeSeries`` list.
-    """
-    from squirreldb_spark import codec
-
-    series = codec.decode_remote_write_body(body)
-    if spark is None:
-        return series
-    rows = [
-        (ts.labels, s.timestamp_ms, s.value)
-        for ts in series
-        for s in ts.samples
-    ]
-    return spark.createDataFrame(
-        rows, "labels map<string,string>, ts long, value double"
-    )

@@ -10,13 +10,19 @@ prompb+snappy wire bytes. No third-party framework: ``http.server`` is
 enough because every endpoint is one DataFrame program + one driver-side
 serialization.
 
-Remote write ingests into a server-held buffer that is unioned into the
-query store as a ``labels MAP<STRING,STRING>`` tall frame — the same
-dynamic-label model the streaming ingest path produces — so a written
-sample is immediately queryable (write -> /query_range round-trip is
-tested end-to-end in tests/test_http_api.py). The tenant header injects
-the tenant as a label at write and filters it at query, mirroring the
-reference's __account_id flow (api/remotestorage/write.go:80-170).
+Every request that reads sees ONE points relation, built once on first
+use: the parquet history (``base_points``) unioned with the remote-write
+buffer. The buffer relation is built in the history's schema — the same
+``labels MAP<STRING,STRING>`` tall frame the streaming ingest path
+produces, including its ``date`` partition column — so a written sample
+is immediately queryable and survives the planner's partition pruning
+(write -> /query_range round trips over an empty store and over a
+date-partitioned history are tested end-to-end in
+tests/test_http_api.py). One ``PromAPI`` over that relation serves the
+query and its JSON formatting. Write requests only append to the buffer;
+they build nothing. The tenant header injects the tenant as a label at
+write and filters it at query, mirroring the reference's __account_id
+flow (api/remotestorage/write.go:80-170).
 
 Headers honored (types/types.go:171-195):
 
@@ -29,6 +35,7 @@ Headers honored (types/types.go:171-195):
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 import threading
@@ -46,6 +53,8 @@ from squirreldb_spark.api import (
     RequestOptions,
     run_with_timeout,
 )
+from squirreldb_spark.model import series_json
+from squirreldb_spark.streaming.ingest import partition_date
 
 #: reference api/api.go: decoded request bodies are size-limited
 MAX_BODY_BYTES = 32 << 20
@@ -73,13 +82,8 @@ def _now_ms() -> int:
     return int(time.time() * 1000)
 
 
-#: canonical sorted-labels JSON — the interning key the debug dumps and
-#: /debug/index_verify share
-_SERIES_JSON = "to_json(map_from_entries(array_sort(map_entries(labels))))"
-
-
 def _canonical_series_json(labels: dict) -> str:
-    """The driver-side replay of ``_SERIES_JSON``'s
+    """The driver-side replay of :func:`model.series_json`'s
     ``to_json(map<string,string>)`` canonical form: sorted keys, compact
     separators, every value STRINGIFIED (a long label column would
     otherwise print unquoted and give the same series a different 60-bit
@@ -166,13 +170,36 @@ def _dump_csv(series_jsons) -> bytes:
     return ("\n".join(lines) + "\n").encode() if lines else b""
 
 
+def _unpack_series(out: dict) -> dict:
+    """Finish a formatted query body for the wire: dynamic-label stores
+    return the fingerprint columns; unpack the canonical sorted-JSON
+    ``__series__`` back into the metric object and hide the auxiliary
+    fingerprints."""
+    for entry in out["data"]["result"]:
+        metric = entry["metric"]
+        fp = metric.pop("__series__", None)
+        for k in list(metric):
+            if k.startswith("__series_"):
+                del metric[k]
+        if fp is not None:
+            parsed = json.loads(fp)
+            # promoted columns carry "" for a label the series lacks
+            # (Prometheus missing-label semantics) — not a real label
+            parsed.update({k: v for k, v in metric.items() if v != ""})
+            entry["metric"] = parsed
+    return out
+
+
 class PromHTTPServer:
     """A live /api/v1 endpoint set over Spark.
 
-    ``base_points`` (optional) seeds the store; remote writes accumulate
-    in a driver-side buffer (config-sized for tests; the production
-    ingest path is Structured Streaming, streaming/ingest.py) and are
-    unioned into every query's points frame.
+    ``base_points`` (optional) is the history, e.g. the date-partitioned
+    parquet the streaming ingest path writes. Remote writes accumulate in
+    a driver-side buffer (config-sized for tests; the production ingest
+    path is Structured Streaming, streaming/ingest.py). A reading request
+    builds one points relation — the history plus the buffer in the
+    history's schema (:meth:`_points`) — and one :class:`PromAPI` over it
+    (:meth:`_api`) that serves both the query and its formatting.
     """
 
     def __init__(
@@ -208,7 +235,7 @@ class PromHTTPServer:
         #: /mutable/values — reference api/api.go:230-233)
         from squirreldb_spark.tsdb.mutable import MutableLabelStore
 
-        self.mutable_store = MutableLabelStore(spark)
+        self.mutable_store = MutableLabelStore()
         #: rows written via /api/v1/write: (labels, ts, value, ttl_s)
         self._written: list[tuple[dict, int, float, int | None]] = []
         self._lock = threading.Lock()
@@ -227,20 +254,27 @@ class PromHTTPServer:
     # ------------------------------------------------------------- store
 
     def _points(self) -> DataFrame:
+        """The points relation: the history unioned with the write buffer.
+
+        The buffer relation carries exactly the history's columns, the
+        ``date`` partition derived as the streaming sink derives it, so
+        the planner's partition pruning keeps written rows."""
         with self._lock:
             rows = list(self._written)
-        written = (
-            self.spark.createDataFrame(rows, _WRITE_SCHEMA).drop("ttl_s")
-            if rows
-            else None
-        )
-        if self.base_points is not None and written is not None:
-            return self.base_points.unionByName(written, allowMissingColumns=True)
-        if written is not None:
-            return written
-        if self.base_points is not None:
-            return self.base_points
-        return self.spark.createDataFrame([], _WRITE_SCHEMA).drop("ttl_s")
+        base = self.base_points
+        if base is not None and not rows:
+            return base
+        written = self.spark.createDataFrame(rows, _WRITE_SCHEMA)
+        if base is None:
+            return written.drop("ttl_s")
+        cols = {c: F.col(c) for c in written.columns}
+        cols["date"] = partition_date(F.col("ts"))
+        missing = [c for c in base.columns if c not in cols]
+        if missing:
+            raise ValueError(f"remote writes cannot fill history columns {missing}")
+        return base.unionByName(written.select(*[
+            cols[f.name].cast(f.dataType).alias(f.name) for f in base.schema
+        ]))
 
     def _api(self) -> PromAPI:
         kwargs = dict(
@@ -249,7 +283,7 @@ class PromHTTPServer:
             labels_map_col="labels",
             tenant_col=self.tenant_label,
             lookback_ms=self.lookback_ms,
-            mutable_mapping=self.mutable_store.mapping(),
+            mutable_mapping=self.mutable_store.rows(),
             max_samples=self.max_samples,
         )
         kwargs.update(self.api_kwargs)
@@ -399,45 +433,45 @@ class PromHTTPServer:
             vals = params.get(name)
             return vals[0] if vals else default
 
+        # the request's one points relation and PromAPI, built on first
+        # use; write requests never build it
+        api = functools.cache(self._api)
+
         try:
             path = url.path
-            if path == "/api/v1/write":
-                # version negotiation per the remote-write 2.0 spec: the
-                # proto= Content-Type parameter names the message
-                # (reference allows both, api/api.go:63-66)
-                ctype = handler.headers.get("Content-Type", "")
-                proto = None
-                for part in ctype.split(";"):
-                    part = part.strip()
-                    if part.startswith("proto="):
-                        proto = part[len("proto="):]
-                series = codec.decode_remote_write_body(body, proto=proto)
-                ttl = handler.headers.get("X-SquirrelDB-TTL")
-                self.ingest(
-                    series,
-                    handler.headers.get("X-SquirrelDB-Tenant"),
-                    int(ttl) if ttl else None,
-                )
-                handler.send_response(204)
-                handler.send_header("Content-Length", "0")
-                handler.end_headers()
-                return
-            if path == "/api/v1/otlp/v1/metrics":
-                # OTLP metrics ingest (reference enables the handler
-                # alongside remote write, api/api.go:157-195); body is
-                # uncompressed or gzip protobuf, never snappy
-                if handler.headers.get("Content-Encoding") == "gzip":
-                    import gzip
+            if path in ("/api/v1/write", "/api/v1/otlp/v1/metrics"):
+                if path == "/api/v1/write":
+                    # version negotiation per the remote-write 2.0 spec:
+                    # the proto= Content-Type parameter names the message
+                    # (reference allows both, api/api.go:63-66)
+                    ctype = handler.headers.get("Content-Type", "")
+                    proto = None
+                    for part in ctype.split(";"):
+                        part = part.strip()
+                        if part.startswith("proto="):
+                            proto = part[len("proto="):]
+                    series = codec.decode_remote_write_body(body, proto=proto)
+                else:
+                    # OTLP metrics ingest (reference enables the handler
+                    # alongside remote write, api/api.go:157-195); body is
+                    # uncompressed or gzip protobuf, never snappy
+                    if handler.headers.get("Content-Encoding") == "gzip":
+                        import gzip
 
-                    body = gzip.decompress(body)
-                series = codec.decode_otlp_metrics(body)
+                        body = gzip.decompress(body)
+                    series = codec.decode_otlp_metrics(body)
                 ttl = handler.headers.get("X-SquirrelDB-TTL")
                 self.ingest(
                     series,
                     handler.headers.get("X-SquirrelDB-Tenant"),
                     int(ttl) if ttl else None,
                 )
-                self._send_bytes(handler, 200, b"", encoding=None)
+                if path == "/api/v1/write":
+                    handler.send_response(204)
+                    handler.send_header("Content-Length", "0")
+                    handler.end_headers()
+                else:
+                    self._send_bytes(handler, 200, b"", encoding=None)
                 return
             if path == "/api/v1/read":
                 # response-type negotiation (prompb ReadRequest
@@ -457,7 +491,7 @@ class PromHTTPServer:
                     codec.READ_SAMPLES,
                 )
                 if choice == codec.READ_STREAMED_XOR_CHUNKS:
-                    frames = self._api().remote_read_frames(
+                    frames = api().remote_read_frames(
                         raw, frame_bytes=self.read_frame_bytes,
                         decompressed=True,
                     )
@@ -489,7 +523,7 @@ class PromHTTPServer:
                         # mid-stream chunk error)
                         handler.close_connection = True
                     return
-                out = self._api().remote_read(raw, decompressed=True)
+                out = api().remote_read(raw, decompressed=True)
                 self._send_bytes(handler, 200, out)
                 return
             if path == "/api/v1/query_range":
@@ -500,10 +534,11 @@ class PromHTTPServer:
                 step = int(float(p("step", "60")) * 1000)
 
                 def run_range():
-                    df = self._api().query_range(
+                    store = api()
+                    df = store.query_range(
                         p("query"), start, end, step, opts=opts
                     )
-                    return self._format(df, "matrix")
+                    return _unpack_series(store.format_matrix(df))
 
                 self._send_json(
                     handler, 200,
@@ -521,8 +556,9 @@ class PromHTTPServer:
                 t = _now_ms() if traw is None else _parse_time_s(traw)
 
                 def run_instant():
-                    df = self._api().query(p("query"), t, opts=opts)
-                    return self._format(df, "vector")
+                    store = api()
+                    df = store.query(p("query"), t, opts=opts)
+                    return _unpack_series(store.format_vector(df))
 
                 self._send_json(
                     handler, 200,
@@ -536,9 +572,8 @@ class PromHTTPServer:
                 # match[] is REPEATED with union semantics (upstream API)
                 start = _parse_time_s(p("start", "0"))
                 end = _parse_time_s(p("end", "32503680000"))
-                api = self._api()
                 dfs = [
-                    api.series(mq, start, end, opts=opts)
+                    api().series(mq, start, end, opts=opts)
                     for mq in params.get("match[]", ["{}"])
                 ]
                 df = dfs[0]
@@ -558,13 +593,13 @@ class PromHTTPServer:
                 opts = self._opts(handler)
                 self._send_json(
                     handler, 200,
-                    {"status": "success", "data": self._api().labels(opts)},
+                    {"status": "success", "data": api().labels(opts)},
                 )
                 return
             m = re.match(r"^/api/v1/label/([^/]+)/values$", path)
             if m:
                 opts = self._opts(handler)
-                rows = self._api().label_values(m.group(1), opts).collect()
+                rows = api().label_values(m.group(1), opts).collect()
                 self._send_json(
                     handler, 200,
                     {"status": "success",
@@ -658,13 +693,10 @@ class PromHTTPServer:
                 )
                 return
             if path == "/debug/index_info":
-                pts = self._points()
-                fp = F.to_json(F.expr(
-                    "map_from_entries(array_sort(map_entries(labels)))"
-                ))
+                pts = api().points
                 info = pts.agg(
                     F.count(F.lit(1)).alias("n_points"),
-                    F.countDistinct(fp).alias("n_series"),
+                    F.countDistinct(series_json(F.col("labels"))).alias("n_series"),
                 ).collect()[0]
                 tenants = [
                     r[0] for r in pts.select(
@@ -684,11 +716,8 @@ class PromHTTPServer:
                 # /debug/index_verify, cassandra/index/verify.go)
                 from squirreldb_spark.tsdb.maintenance import verify_index
 
-                pts = self._points().withColumn(
-                    "__series__",
-                    F.to_json(F.expr(
-                        "map_from_entries(array_sort(map_entries(labels)))"
-                    )),
+                pts = api().points.withColumn(
+                    "__series__", series_json(F.col("labels"))
                 )
                 dim = pts.select("__series__").distinct()
                 rows = verify_index(pts, dim, ["__series__"]).collect()
@@ -703,7 +732,7 @@ class PromHTTPServer:
 
                 lo = _parse_time_s(p("from", "0"))
                 hi = _parse_time_s(p("to", str(1 << 40)))
-                pts = self._points().filter(
+                pts = api().points.filter(
                     (F.col("ts") >= lo) & (F.col("ts") < hi)
                 )
                 n = downsample_map(pts).count()
@@ -776,8 +805,8 @@ class PromHTTPServer:
                 # A40: full id -> labels dump as CSV lines, like the
                 # reference IndexDumper.Dump (cassandra/index/verify.go)
                 rows = (
-                    self._points()
-                    .select(F.expr(_SERIES_JSON).alias("s"))
+                    api().points
+                    .select(series_json(F.col("labels")).alias("s"))
                     .distinct().limit(10_000).collect()
                 )
                 self._send_bytes(
@@ -789,12 +818,11 @@ class PromHTTPServer:
                 # matcher-restricted dump (reference indexDumpByLabels):
                 # match[] is a PromQL selector, same union semantics as
                 # /api/v1/series
-                api = self._api()
                 lo = _parse_time_s(p("start", "0"))
                 hi = _parse_time_s(p("end", "32503680000"))
                 df = None
                 for mq in params.get("match[]", ["{}"]):
-                    part = api.series(mq, lo, hi)
+                    part = api().series(mq, lo, hi)
                     df = part if df is None else df.unionByName(part)
                 df = df.distinct()
                 rows = df.limit(10_000).collect()
@@ -853,9 +881,9 @@ class PromHTTPServer:
                 lo = int(day.timestamp() * 1000)
                 hi = lo + 86_400_000
                 rows = (
-                    self._points()
+                    api().points
                     .filter((F.col("ts") >= lo) & (F.col("ts") < hi))
-                    .select(F.expr(_SERIES_JSON).alias("s"))
+                    .select(series_json(F.col("labels")).alias("s"))
                     .distinct().limit(10_000).collect()
                 )
                 self._send_bytes(
@@ -917,8 +945,7 @@ class PromHTTPServer:
     def _mutable_route(self, handler, path: str, body: bytes) -> None:
         """Mutable-label management (reference api/api.go:230-233,
         cassandra/mutable/cassandra.go:78-96): JSON arrays in, mutating
-        the store; the next query sees a fresh mapping (cache
-        invalidation is object identity — see MutableLabelStore)."""
+        the store; the next request reads the updated rows."""
         entries = json.loads(body.decode() or "[]")
         store = self.mutable_store
         for e in entries:
@@ -938,29 +965,3 @@ class PromHTTPServer:
         handler.send_response(204)
         handler.send_header("Content-Length", "0")
         handler.end_headers()
-
-    def _format(self, df: DataFrame, result_type: str) -> dict:
-        api = self._api()
-        out = (
-            api.format_matrix(df)
-            if result_type == "matrix"
-            else api.format_vector(df)
-        )
-        # dynamic-label stores return the fingerprint columns; unpack the
-        # canonical sorted-JSON __series__ back into the metric object and
-        # hide the auxiliary fingerprints from the wire format
-        for entry in out["data"]["result"]:
-            metric = entry["metric"]
-            fp = metric.pop("__series__", None)
-            for k in list(metric):
-                if k.startswith("__series_"):
-                    del metric[k]
-            if fp is not None:
-                parsed = json.loads(fp)
-                # promoted columns carry "" for a label the series lacks
-                # (Prometheus missing-label semantics) — not a real label
-                parsed.update(
-                    {k: v for k, v in metric.items() if v != ""}
-                )
-                entry["metric"] = parsed
-        return out

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from squirreldb_spark.session import configure_session
@@ -89,6 +89,15 @@ def points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     return ev.select("user_id", "event_type", "ts", "value")
+
+
+def series_json(labels: Column) -> Column:
+    """Canonical identity of a ``labels MAP<STRING,STRING>`` series: its
+    entries sorted by key, as compact JSON — equal label sets give equal
+    strings whatever the map's insertion order. Every dynamic-label
+    fingerprint (planner, API budgets, debug dumps, downsample) is this
+    expression."""
+    return F.to_json(F.map_from_entries(F.array_sort(F.map_entries(labels))))
 
 
 #: 60-bit content hash of the canonical label encoding — the series_id.

@@ -22,8 +22,7 @@ negation does too. Two result series left with an identical label set
 raise ``vector cannot contain metrics with the same labelset`` exactly
 like Prometheus — implemented as an in-plan window count over the
 result identity (the exchange it adds is usually reused by the
-downstream aggregation, which groups on the same keys). Disable with
-``collision_check=False`` to trade the guard for the exchange.
+downstream aggregation, which groups on the same keys).
 """
 
 from __future__ import annotations
@@ -33,6 +32,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from squirreldb_spark.model import series_json
 from squirreldb_spark.promql import ast as A
 from squirreldb_spark.promql.parser import parse
 from squirreldb_spark.tsdb import aggregation as agg_ops
@@ -317,6 +317,8 @@ class PromQLEngine:
     ``points`` columns: ``(*label_cols, ts, value)``; ``name_label`` is the
     column playing the ``__name__`` role. The evaluation grid derives from
     the full points table (shared across every selector in the query).
+    ``mutable_mapping`` is the mutable-label mapping as driver-side rows
+    (:mod:`squirreldb_spark.tsdb.mutable`).
     """
 
     def __init__(
@@ -328,7 +330,7 @@ class PromQLEngine:
         lookback_ms: int = 432_000_000,
         start_ms: int | None = None,
         end_ms: int | None = None,
-        mutable_mapping: DataFrame | None = None,
+        mutable_mapping: list | None = None,
         tenant: str = "",
         downsample: DataFrame | None = None,
         preagg_resolution_ms: int = 300_000,
@@ -336,7 +338,6 @@ class PromQLEngine:
         force_raw: bool = False,
         force_preagg: bool = False,
         labels_map_col: str | None = None,
-        collision_check: bool = True,
     ):
         self.points = points
         self.label_cols = tuple(label_cols)
@@ -353,7 +354,10 @@ class PromQLEngine:
         self.force_raw = force_raw
         self.force_preagg = force_preagg
         self.labels_map_col = labels_map_col
-        self.collision_check = collision_check
+        #: the time-bounded fact relation the last :meth:`query_range`
+        #: read — every sample the plan can touch; the API's sample and
+        #: series budgets count it
+        self.scanned: DataFrame | None = None
         #: fingerprint columns added by _with_dynamic_labels (empty for
         #: promoted-column stores)
         self._fp_cols: frozenset[str] = frozenset()
@@ -373,7 +377,9 @@ class PromQLEngine:
     def query_range(self, promql: str) -> DataFrame:
         """Evaluate and return (labels..., step_ts, value)."""
         node = parse(promql)
-        result = self._with_dynamic_labels(node)._bounded(node)._eval(node)
+        eng = self._with_dynamic_labels(node)._bounded(node)
+        self.scanned = eng.points
+        result = eng._eval(node)
         if isinstance(result, Vec):
             return result.df
         if isinstance(result, (int, float)):
@@ -411,7 +417,7 @@ class PromQLEngine:
             # an empty column and defeat the rewrite
             refs -= {
                 r.mutable_name
-                for r in self._mutable_rows()
+                for r in self.mutable_mapping
                 if r.tenant == self.tenant
             }
         needs_nole = contains_function(node, "histogram_quantile")
@@ -436,9 +442,7 @@ class PromQLEngine:
                 inner = f"map_filter({m}, (k, v) -> k NOT IN ({lits}))"
             else:
                 inner = m
-            return F.to_json(
-                F.expr(f"map_from_entries(array_sort(map_entries({inner})))")
-            )
+            return series_json(F.expr(inner))
 
         def promote(df: DataFrame) -> tuple[DataFrame, list[str]]:
             names: list[str] = []
@@ -565,14 +569,6 @@ class PromQLEngine:
             pts = pts.filter(c)
         return pts
 
-    def _mutable_rows(self):
-        """The mutable mapping via the shared per-DataFrame row cache
-        (tsdb.mutable.cached_rows) — one collect per mapping object,
-        none at all when the mapping comes from a MutableLabelStore."""
-        from squirreldb_spark.tsdb.mutable import cached_rows
-
-        return cached_rows(self.mutable_mapping)
-
     def _apply_mutable_matcher(self, pts: DataFrame, m, name: str) -> DataFrame:
         """Rewrite a matcher on a mutable label to concrete values
         (reference cassandra/mutable/processor.go:52-241): select the
@@ -584,7 +580,7 @@ class PromQLEngine:
         import re
 
         rows = [
-            r for r in self._mutable_rows()
+            r for r in self.mutable_mapping
             if r.tenant == self.tenant and r.mutable_name == name
         ]
         if not rows:
@@ -787,8 +783,6 @@ class PromQLEngine:
         exchange partitions on (labels, step_ts) — the same keys any
         downstream per-step aggregation shuffles on, so Catalyst reuses
         it in the common sum(rate(...)) shape."""
-        if not self.collision_check:
-            return df
         from pyspark.sql import Window
 
         w = Window.partitionBy(*labels, "step_ts")

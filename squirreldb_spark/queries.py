@@ -1136,7 +1136,7 @@ def q_mutable_labels(spark, sf_dir):
     mapping = spark.createDataFrame(
         [("t1", "group", "high", "user_id", [str(u) for u in range(5)])],
         mut.MAPPING_SCHEMA,
-    )
+    ).collect()
     pts = mut.rewrite_filter(_pts(spark, sf_dir), mapping, "t1", "group", "high")
     grid = data_grid(_pts(spark, sf_dir), STEP_MS)
     vec = selectors.instant_select(pts, KEYS, STEP_MS, LOOKBACK_MS, grid=grid)

@@ -26,7 +26,7 @@ Ingest-time rules mirrored from the reference:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -127,6 +127,13 @@ def validate(stream: DataFrame, tenant: str = "default", now_ms: int | None = No
     return out.withColumn("tenant", F.lit(tenant))
 
 
+def partition_date(ts: Column) -> Column:
+    """The UTC ``date`` partition of an epoch-ms timestamp: the raw
+    store's partition column, and what the planner's time-bound pruning
+    filters on (the session time zone is UTC)."""
+    return F.to_date(F.timestamp_millis(ts))
+
+
 def points_sink(
     valid: DataFrame, path: str, checkpoint: str, available_now: bool = True
 ) -> StreamingQuery:
@@ -134,7 +141,7 @@ def points_sink(
     (the Spark analogue of the 5-day base_ts partitions, tsdb.go:39)."""
     pts = valid.select(
         "user_id", "event_type", "tenant", "ts", "value",
-        F.to_date(F.timestamp_millis(F.col("ts"))).alias("date"),
+        partition_date(F.col("ts")).alias("date"),
     )
     writer = (
         pts.writeStream.format("parquet")

@@ -27,6 +27,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from squirreldb_spark.model import series_json
+
 RESOLUTION_MS = 300_000  # 5 min, cassandra/tsdb/tsdb.go:41
 
 #: PromQL hint function -> downsample column (cassandra/tsdb/read.go:548-613)
@@ -73,9 +75,7 @@ def downsample_map(
     consumable by the PromQL engine with ``labels_map_col`` (the
     per-query label promotion applies to this table too).
     """
-    key = F.to_json(
-        F.expr(f"map_from_entries(array_sort(map_entries({map_col})))")
-    )
+    key = series_json(F.col(map_col))
     bucket = (F.col("ts") - F.col("ts") % F.lit(resolution_ms)).alias("bucket_ts")
     return (
         points.withColumn("__series__", key)

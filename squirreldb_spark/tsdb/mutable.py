@@ -6,7 +6,10 @@ lets users query ``group="mygroup"`` and have it rewritten to
 ``instance=~"server1|server2"`` before the index search; matched series are
 then *enriched* with the mutable label on the way out.
 
-Spark mapping (SURVEY §1.5): the mapping is a small DataFrame;
+Spark mapping (SURVEY §1.5): the mapping is config-sized, so it lives
+driver-side as plain rows (``MAPPING_SCHEMA`` fields as attributes), the
+analogue of the reference's in-process cached store — resolving against it
+runs no Spark job;
 
 * **matcher rewrite** = resolve the mutable matcher against the mapping
   and turn it into an ``isin(values)`` filter on the associated column
@@ -25,26 +28,6 @@ MAPPING_SCHEMA = (
 )
 
 
-def cached_rows(mapping: DataFrame):
-    """The mapping rows, collected ONCE per mapping DataFrame and cached
-    on it — mirroring the reference's in-process cached store
-    (cassandra/mutable/processor.go keeps the mapping in memory and
-    resolves against it without I/O). The mapping is config-sized by
-    construction; :class:`MutableLabelStore` pre-seeds this cache so no
-    Spark job ever runs for it."""
-    rows = getattr(mapping, "_sq_mutable_rows", None)
-    if rows is None:
-        rows = mapping.select(
-            "tenant", "mutable_name", "mutable_value",
-            "associated_name", "associated_values",
-        ).collect()
-        try:
-            mapping._sq_mutable_rows = rows
-        except AttributeError:  # pragma: no cover
-            pass
-    return rows
-
-
 class MutableLabelStore:
     """Management API over the mutable-label mapping (A31/A32 write side).
 
@@ -53,14 +36,11 @@ class MutableLabelStore:
     (cassandra/mutable/cassandra.go:78-96): per-tenant
     ``name -> associated_name`` registrations and
     ``(tenant, name, value) -> associated values`` sets. Rows live
-    driver-side (config data); every mutation produces a FRESH mapping
-    DataFrame with the row cache pre-seeded, so cache invalidation is
-    object identity and neither the planner's matcher rewrite nor
-    :func:`enrich` runs a Spark job to read the mapping.
+    driver-side (config data); :meth:`rows` is the current mapping, read
+    fresh by every request.
     """
 
-    def __init__(self, spark):
-        self.spark = spark
+    def __init__(self):
         #: (tenant, name) -> associated_name
         self._names: dict[tuple[str, str], str] = {}
         #: (tenant, name, value) -> [associated values]
@@ -92,7 +72,8 @@ class MutableLabelStore:
 
     # ----------------------------------------------------------- reads
 
-    def rows(self):
+    def rows(self) -> list:
+        """The current mapping rows (``MAPPING_SCHEMA`` fields)."""
         from pyspark.sql import Row
 
         return [
@@ -104,31 +85,13 @@ class MutableLabelStore:
             for (t, n, v), vals in sorted(self._values.items())
         ]
 
-    def mapping(self) -> DataFrame:
-        """The current mapping as a DataFrame, row cache pre-seeded."""
-        rows = self.rows()
-        df = (
-            self.spark.createDataFrame(rows, MAPPING_SCHEMA)
-            if rows
-            else self.spark.createDataFrame([], MAPPING_SCHEMA)
-        )
-        df._sq_mutable_rows = rows
-        return df
-
 
 def resolve_values(
-    mapping: DataFrame, tenant: str, mutable_name: str, mutable_value: str
+    mapping: list, tenant: str, mutable_name: str, mutable_value: str
 ) -> tuple[str, list[str]]:
-    """A31: mutable matcher -> (associated column, concrete values).
-
-    Driver-side lookup through the per-DataFrame row cache
-    (:func:`cached_rows`) — the same cache :func:`enrich` and the
-    planner's matcher rewrite read, so a pre-seeded mapping (the
-    :class:`MutableLabelStore` path) resolves with ZERO Spark jobs,
-    mirroring the reference's in-process cached store
-    (cassandra/mutable/processor.go).
-    """
-    for r in cached_rows(mapping):
+    """A31: mutable matcher -> (associated column, concrete values), a
+    driver-side lookup over the mapping rows."""
+    for r in mapping:
         if (
             r.tenant == tenant
             and r.mutable_name == mutable_name
@@ -140,7 +103,7 @@ def resolve_values(
 
 def rewrite_filter(
     points: DataFrame,
-    mapping: DataFrame,
+    mapping: list,
     tenant: str,
     mutable_name: str,
     mutable_value: str,
@@ -153,18 +116,14 @@ def rewrite_filter(
 
 
 def enrich(
-    result: DataFrame, mapping: DataFrame, tenant: str, mutable_name: str
+    result: DataFrame, mapping: list, tenant: str, mutable_name: str
 ) -> DataFrame:
     """A32: attach the mutable label to result series via broadcast join
-    on the associated column.
-
-    Reads the mapping through the per-DataFrame row cache
-    (:func:`cached_rows`) — the same cache the planner's matcher rewrite
-    uses — so enrichment itself runs no Spark job; the lookup side is a
-    local relation built from the cached rows.
+    on the associated column. The lookup side is a local relation built
+    from the mapping rows, so enrichment itself runs no Spark job.
     """
     rows = [
-        r for r in cached_rows(mapping)
+        r for r in mapping
         if r.tenant == tenant and r.mutable_name == mutable_name
     ]
     if not rows:

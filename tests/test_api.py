@@ -223,17 +223,16 @@ def test_api_dynamic_labels_endpoints(spark):
 
 def test_remote_write_codec_decodes_payload():
     from squirreldb_spark import codec
-    from squirreldb_spark.api import decode_remote_write
 
     body = codec.encode_remote_write_body([
         codec.TimeSeries(labels={"__name__": "up", "job": "api"},
                          samples=[codec.Sample(1.0, 1000)]),
     ])
-    series = decode_remote_write(body)
+    series = codec.decode_remote_write_body(body)
     assert series[0].labels["job"] == "api"
     assert series[0].samples[0].timestamp_ms == 1000
     with pytest.raises(ValueError):
-        decode_remote_write(b"")  # not a valid snappy body
+        codec.decode_remote_write_body(b"")  # not a valid snappy body
 
 
 # ------------------------------------------------- mutable labels (A31/A32)
@@ -256,7 +255,7 @@ def mapi(spark):
             ("t1", "group", "db", "host", ["c"]),
         ],
         mut.MAPPING_SCHEMA,
-    )
+    ).collect()
     return PromAPI(pts, label_cols=("host", "name"), name_label="name",
                    lookback_ms=2 * H, mutable_mapping=mapping)
 
@@ -319,6 +318,33 @@ def test_sample_budget_sees_long_range_selector(spark):
         capped.query("rate(cpu[23h])", time_ms=24 * H)
     # a narrow selector over the same store stays under budget
     assert capped.query("rate(cpu[2h])", time_ms=24 * H).count() >= 0
+
+
+def test_guarded_query_range_parses_once(spark, monkeypatch):
+    """A query under every limit is parsed and time-windowed once: the
+    budgets count the relation the engine's own window produced, with
+    no second parse to re-derive it."""
+    from squirreldb_spark.promql import parser, planner
+
+    calls = []
+    parse = parser.parse
+
+    def counting_parse(text):
+        calls.append(text)
+        return parse(text)
+
+    monkeypatch.setattr(parser, "parse", counting_parse)
+    monkeypatch.setattr(planner, "parse", counting_parse)
+    rows = [("a", "cpu", h * H, float(h)) for h in range(1, 25)]
+    pts = spark.createDataFrame(
+        rows, "host string, name string, ts long, value double"
+    )
+    capped = PromAPI(pts, label_cols=("host", "name"), name_label="name",
+                     lookback_ms=H, max_samples=1_000)
+    opts = RequestOptions(max_evaluated_series=10, max_evaluated_points=1_000)
+    out = capped.query_range("rate(cpu[2h])", 12 * H, 14 * H, H, opts=opts)
+    assert calls == ["rate(cpu[2h])"]
+    assert out.count() == 3
 
 
 def test_sample_budget_sees_at_anchored_selector_window(spark):

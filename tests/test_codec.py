@@ -144,18 +144,6 @@ def test_remote_write_body_roundtrip():
     assert out[0].labels == _ts().labels and len(out[0].samples) == 2
 
 
-def test_api_decode_remote_write_to_dataframe(spark):
-    from squirreldb_spark.api import decode_remote_write
-
-    body = codec.encode_remote_write_body([_ts()])
-    df = decode_remote_write(body, spark=spark)
-    rows = df.collect()
-    assert len(rows) == 2
-    assert rows[0].labels["job"] == "api"
-    assert {r.value for r in rows} == {1027.0, 1028.5}
-    assert dict(df.dtypes)["labels"] == "map<string,string>"
-
-
 def test_api_remote_read_end_to_end(spark):
     from squirreldb_spark.api import PromAPI
 

@@ -47,7 +47,7 @@ def test_linreg_slope_and_prediction(spark):
 def test_mutable_label_rewrite_and_enrich(spark):
     mapping = spark.createDataFrame(
         [("t1", "group", "web", "host", ["a", "b"])], mut.MAPPING_SCHEMA
-    )
+    ).collect()
     pts = spark.createDataFrame(
         [("a", 1, 1.0), ("b", 1, 2.0), ("c", 1, 3.0)], "host string, ts long, value double"
     )
@@ -57,25 +57,6 @@ def test_mutable_label_rewrite_and_enrich(spark):
     assert all(r.group == "web" for r in enriched.collect())
     # unknown mutable value -> empty
     assert mut.rewrite_filter(pts, mapping, "t1", "group", "nope").count() == 0
-
-
-def test_resolve_values_reads_row_cache_not_spark(spark):
-    """Matcher resolution must go through the per-DataFrame row cache
-    (zero Spark jobs on the pre-seeded MutableLabelStore path). Seed the
-    cache with rows that DIFFER from the DataFrame contents: if a Spark
-    filter/collect ran, the DataFrame's values would come back instead."""
-    from pyspark.sql import Row
-
-    mapping = spark.createDataFrame(
-        [("t1", "group", "web", "host", ["from_spark"])], mut.MAPPING_SCHEMA
-    )
-    mapping._sq_mutable_rows = [Row(
-        tenant="t1", mutable_name="group", mutable_value="web",
-        associated_name="host", associated_values=["from_cache"],
-    )]
-    col, vals = mut.resolve_values(mapping, "t1", "group", "web")
-    assert (col, vals) == ("host", ["from_cache"])
-    assert mut.resolve_values(mapping, "t1", "group", "nope") == ("", [])
 
 
 def test_export_pivot_wide_layout(spark):
@@ -131,7 +112,7 @@ def test_enrich_preserves_row_count_on_multi_bound_values(spark):
             ("t1", "group", "g2", "host", ["server1", "server2"]),
         ],
         mut.MAPPING_SCHEMA,
-    )
+    ).collect()
     result = spark.createDataFrame(
         [("server1", 1.0), ("server2", 2.0)], "host string, value double"
     )
@@ -150,7 +131,7 @@ def test_enrich_rejects_conflicting_associated_names(spark):
             ("t1", "group", "g2", "instance", ["b"]),
         ],
         mut.MAPPING_SCHEMA,
-    )
+    ).collect()
     result = spark.createDataFrame([("a", 1.0)], "host string, value double")
     import pytest as _pt
 

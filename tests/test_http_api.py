@@ -735,17 +735,18 @@ def test_timeout_accepts_duration_string(base, written):
 
 def test_canonical_series_json_matches_spark_to_json(spark):
     """ADVICE r4: the /debug/index_dump_by_labels fallback must emit the
-    SAME canonical labels JSON as _SERIES_JSON's to_json(map) — values
+    SAME canonical labels JSON as model.series_json's to_json(map) — values
     stringified (longs quoted), keys sorted, compact separators, null
     labels dropped — so the 60-bit ids agree across the two dumps."""
     from pyspark.sql import functions as F
 
-    from squirreldb_spark.http_api import _SERIES_JSON, _canonical_series_json
+    from squirreldb_spark.http_api import _canonical_series_json
+    from squirreldb_spark.model import series_json
 
     df = spark.createDataFrame(
         [({"job": "api", "shard": "7", "inst": "a"},)], "labels map<string,string>"
     )
-    want = df.select(F.expr(_SERIES_JSON).alias("s")).collect()[0]["s"]
+    want = df.select(series_json(F.col("labels")).alias("s")).collect()[0]["s"]
     # column-store row shape: a long-typed label and a NULL label
     got = _canonical_series_json(
         {"job": "api", "shard": 7, "inst": "a", "extra": None}
@@ -823,3 +824,60 @@ def test_parse_query_endpoint(base):
     }
     code, body3 = _get(f"{base}/api/v1/parse_query?query=sum%20by%20(")
     assert code == 400 and body3["errorType"] == "bad_data"
+
+
+def test_writes_after_partitioned_history_are_queryable(spark, tmp_path):
+    """Remote writes after a date-partitioned history (built the
+    streaming-ingest way: decode_write_stream -> validate_map ->
+    partitionBy("date")) are read together with it. The write buffer is
+    built in the history's schema, so the planner's date pruning keeps
+    the written rows instead of dropping them for a null ``date``."""
+    from pyspark.sql import functions as F
+
+    from squirreldb_spark.streaming import ingest
+
+    labels = {"__name__": "m", "job": "node"}
+    history = codec.TimeSeries(
+        labels=labels,
+        samples=[codec.Sample(float(k), 10_000 * k) for k in range(1, 31)],
+    )
+    bodies = spark.createDataFrame(
+        [(bytearray(codec.encode_remote_write_body([history])),)], "body binary"
+    )
+    path = str(tmp_path / "history")
+    (
+        ingest.validate_map(ingest.decode_write_stream(bodies), tenant="t1")
+        .withColumn("date", ingest.partition_date(F.col("ts")))
+        .write.partitionBy("date").parquet(path)
+    )
+    srv = PromHTTPServer(spark, base_points=spark.read.parquet(path)).start()
+    try:
+        b = f"http://127.0.0.1:{srv.port}"
+        written = codec.TimeSeries(
+            labels=labels,
+            samples=[codec.Sample(float(k), 10_000 * k) for k in range(31, 61)],
+        )
+        status, _ = _post(
+            f"{b}/api/v1/write", codec.encode_remote_write_body([written]),
+            {"X-SquirrelDB-Tenant": "t1", "Content-Encoding": "snappy",
+             "Content-Type": "application/x-protobuf"},
+        )
+        assert status == 204
+        tenant = {"X-SquirrelDB-Tenant": "t1"}
+        q = urllib.parse.quote("count_over_time(m[10m])")
+        status, out = _get(f"{b}/api/v1/query?query={q}&time=600", tenant)
+        assert status == 200
+        [sample] = out["data"]["result"]
+        assert float(sample["value"][1]) == 60.0
+        status, out = _get(
+            f"{b}/api/v1/query_range?query=m&start=240&end=600&step=60", tenant
+        )
+        assert status == 200
+        [series] = out["data"]["result"]
+        assert series["metric"] == {**labels, "__account_id": "t1"}
+        # 240 and 300 come from the history, 360.. from the writes
+        assert [(int(t), float(v)) for t, v in series["values"]] == [
+            (t, t / 10) for t in range(240, 601, 60)
+        ]
+    finally:
+        srv.stop()
