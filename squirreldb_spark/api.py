@@ -7,7 +7,7 @@ forced matchers, limits and raw/pre-agg routing
 (api/promql/queryable.go:122-249, types/types.go:171-195).
 
 Here the same surface is a driver-side façade over the PromQL engine:
-each endpooint builds ONE DataFrame program; HTTP/JSON serialization is a
+each endpoint builds ONE DataFrame program; HTTP/JSON serialization is a
 thin shell around :meth:`PromAPI.query_range` etc. (any WSGI server can
 wrap this — the engine itself stays transport-agnostic). The per-request
 chain the reference implements as wrapper indexes/readers
@@ -19,6 +19,14 @@ DataFrame filters prepended to every selector:
                                     windowed fact slice
 * points limit (A26)             -> row count of that same slice
 * time clamp (A28)               -> ``greatest/least`` on the request bounds
+
+Every read selects through the engine over that tenant-scoped relation,
+like the reference's one queryable (api/promql/queryable.go:153-165):
+queries through :meth:`PromQLEngine.query_range`; ``/series`` and remote
+read (and so the daemon's matcher dump) take raw samples in an inclusive
+``[start, end]`` through :meth:`PromQLEngine.select_raw` — the same
+matcher lowering, label promotion, mutable-label rewrite, ``ts`` bound
+and ``date`` partition pruning, with no lookback.
 """
 
 from __future__ import annotations
@@ -28,7 +36,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from squirreldb_spark.model import series_json
+from squirreldb_spark.promql import parser
+from squirreldb_spark.promql.ast import Matcher, VectorSelector
 from squirreldb_spark.promql.planner import PromQLEngine
 
 # reference api/promql/time_range_index.go:29-87: clamp query times into
@@ -246,6 +255,15 @@ class PromAPI:
             labels_map_col=self.labels_map_col,
         )
 
+    def _select(self, sel: VectorSelector, start_ms: int, end_ms: int,
+                opts: RequestOptions | None) -> DataFrame:
+        """``sel``'s raw samples in the inclusive ``[start, end]`` of the
+        tenant-scoped relation (:meth:`PromQLEngine.select_raw`)."""
+        start_ms, end_ms = clamp_time(start_ms), clamp_time(end_ms)
+        return self._engine(start_ms, end_ms, 1, opts).select_raw(
+            sel, start_ms, end_ms
+        )
+
     # ------------------------------------------------------------ endpoints
 
     def query_range(self, promql: str, start_ms: int, end_ms: int, step_ms: int,
@@ -285,22 +303,7 @@ class PromAPI:
         the reference's early-exit "series" scan (tsdb/read.go:392-396):
         Catalyst stops at the distinct of the pruned slice — no values read.
         """
-        eng = PromQLEngine(
-            self._scoped(opts), label_cols=self.label_cols,
-            name_label=self.name_label, step_ms=1, lookback_ms=self.lookback_ms,
-            start_ms=0, end_ms=0, labels_map_col=self.labels_map_col,
-            # same mutable/tenant wiring as query_range — a mutable-label
-            # matcher must resolve identically on /series
-            mutable_mapping=self.mutable_mapping,
-            tenant=(opts.tenant if opts and opts.tenant else ""),
-        )
-        from squirreldb_spark.promql.parser import parse
-
-        sel = parse(matchers)
-        eng = eng._with_dynamic_labels(sel)
-        pts = eng._select_points(sel).filter(
-            (F.col("ts") >= clamp_time(start_ms)) & (F.col("ts") <= clamp_time(end_ms))
-        )
+        pts = self._select(parser.parse(matchers), start_ms, end_ms, opts)
         if self.labels_map_col is not None:
             # dynamic labels: the canonical sorted-JSON label set IS the
             # series identity
@@ -344,79 +347,55 @@ class PromAPI:
 
     # ----------------------------------------------------------- remote read
 
-    def _read_query_slice(self, q) -> DataFrame:
-        """A remote-read Query as a ``(_lbl, ts, value)`` DataFrame: the
-        matchers become plain scan filters (the same pushed-filter path
-        every selector uses) and ``_lbl`` is the canonical sorted-JSON
-        label set."""
-        pts = self.points
-        for op, name, value in q.matchers:
-            col_name = self.name_label if name == "__name__" else name
-            if col_name in pts.columns:
-                col = F.col(col_name).cast("string")
-            elif self.labels_map_col is not None:
-                # dynamic-label store: match against the map entry
-                # (missing key compares as "", upstream semantics)
-                col = F.coalesce(
-                    F.element_at(
-                        F.col(self.labels_map_col), F.lit(name)
-                    ),
-                    F.lit(""),
-                )
-            else:
-                raise ValueError(f"unknown label {name!r}")
-            if op == "=":
-                pts = pts.filter(col == value)
-            elif op == "!=":
-                pts = pts.filter(col != value)
-            elif op == "=~":
-                pts = pts.filter(col.rlike(f"^(?:{value})$"))
-            else:
-                pts = pts.filter(~col.rlike(f"^(?:{value})$"))
-        pts = pts.filter(
-            (F.col("ts") >= clamp_time(q.start_timestamp_ms))
-            & (F.col("ts") <= clamp_time(q.end_timestamp_ms))
-        )
+    def _read_query_slice(self, q, opts: RequestOptions | None) -> DataFrame:
+        """A remote-read Query as a ``(_lbl, ts, value)`` DataFrame,
+        selected like /series; ``_lbl`` is the canonical sorted-JSON label
+        set."""
+        sel = VectorSelector(None, tuple(
+            Matcher(name, op, value) for op, name, value in q.matchers
+        ))
+        pts = self._select(sel, q.start_timestamp_ms, q.end_timestamp_ms, opts)
         if self.labels_map_col is not None and not self.label_cols:
-            return pts.select(
-                series_json(F.col(self.labels_map_col)).alias("_lbl"),
-                "ts", "value",
-            )
-        return pts.select(
-            F.to_json(
-                F.struct(
-                    *[
-                        F.col(c).cast("string").alias(c)
-                        for c in self.label_cols
-                    ]
-                )
-            ).alias("_lbl"),
-            "ts", "value",
-        )
+            # the engine's model.series_json fingerprint of the labels map
+            lbl = F.col("__series__")
+        else:
+            lbl = F.to_json(F.struct(*[
+                F.col(c).cast("string").alias(c) for c in self.label_cols
+            ]))
+        return pts.select(lbl.alias("_lbl"), "ts", "value")
 
     def remote_read(self, body: bytes, limit: int = 100_000, *,
-                    decompressed: bool = False) -> bytes:
+                    decompressed: bool = False,
+                    opts: RequestOptions | None = None) -> bytes:
         """/api/v1/read SAMPLES response: snappy+prompb ReadRequest in,
-        one ReadResponse out (reference api/api.go:58-61; A33/A34).
+        one ReadResponse out (reference api/api.go:58-61; A33/A34), each
+        query selected like /series over the ``opts``-scoped relation.
 
         ``limit`` bounds the rows collected per query — the non-streamed
-        response is a driver-side materialization by construction; large
-        reads should negotiate STREAMED_XOR_CHUNKS
-        (:meth:`remote_read_frames`) instead. ``decompressed=True`` means
-        ``body`` is the raw protobuf (the HTTP layer already paid the
-        snappy decode for response-type negotiation — don't pay it twice).
+        response is a driver-side materialization by construction; a
+        query matching more raises :class:`LimitExceeded` rather than
+        cutting a series short (large reads should negotiate
+        STREAMED_XOR_CHUNKS, :meth:`remote_read_frames`).
+        ``decompressed=True`` means ``body`` is the raw protobuf (the HTTP
+        layer already paid the snappy decode for response-type
+        negotiation — don't pay it twice).
         """
+        import json as _json
+
         from squirreldb_spark import codec
 
         buf = body if decompressed else codec.snappy_decompress(body)
         results: list[list[codec.TimeSeries]] = []
         for q in codec.decode_read_request(buf):
             rows = (
-                self._read_query_slice(q).orderBy("_lbl", "ts")
-                .limit(limit).collect()
+                self._read_query_slice(q, opts).orderBy("_lbl", "ts")
+                .limit(limit + 1).collect()
             )
-            import json as _json
-
+            if len(rows) > limit:
+                raise LimitExceeded(
+                    f"remote read matched more than {limit} samples; "
+                    "negotiate STREAMED_XOR_CHUNKS"
+                )
             by_series: dict[str, codec.TimeSeries] = {}
             for r in rows:
                 ts = by_series.get(r["_lbl"])
@@ -435,11 +414,13 @@ class PromAPI:
         samples_per_chunk: int = 120,
         *,
         decompressed: bool = False,
+        opts: RequestOptions | None = None,
     ):
         """/api/v1/read STREAMED_XOR_CHUNKS response: yields framed
         ``ChunkedReadResponse`` messages, each at most ~``frame_bytes``
         (the reference's 1 MiB ChunkedReadLimit, api/api.go:58-61;
-        chunk streaming in api/promql/queryable.go:436-445).
+        chunk streaming in api/promql/queryable.go:436-445). Queries are
+        selected as in :meth:`remote_read`.
 
         Driver memory is bounded by ONE frame: rows stream through
         ``toLocalIterator`` over the ts-sorted per-series slices (one
@@ -454,7 +435,7 @@ class PromAPI:
         buf = body if decompressed else codec.snappy_decompress(body)
         for qi, q in enumerate(codec.decode_read_request(buf)):
             it = (
-                self._read_query_slice(q).orderBy("_lbl", "ts")
+                self._read_query_slice(q, opts).orderBy("_lbl", "ts")
                 .toLocalIterator()
             )
             frame: list[codec.ChunkedSeries] = []

@@ -1,10 +1,10 @@
-"""Prometheus remote-storage wire codecs, dependency-free.
+"""Prometheus remote-storage wire codecs.
 
 The reference accepts remote-write/read bodies as snappy-compressed
 protobuf (reference api/remotestorage/write.go:80-170, api/api.go:58-61,
-using the published prompb schema). Neither ``python-snappy`` nor
-generated prompb bindings exist in this environment, so both codecs are
-implemented directly from the public specifications:
+using the published prompb schema). No generated prompb bindings are
+used: the protobuf codec is implemented directly from the public
+specification:
 
 * protobuf wire format (base-128 varints, little-endian fixed64,
   length-delimited submessages) for the prompb message subset::
@@ -24,17 +24,17 @@ implemented directly from the public specifications:
   wire type, so payloads from current Prometheus versions decode fine.
 
 * snappy *block* format (what remote write/read use — not the framing
-  format): a varint uncompressed length followed by literal and
-  copy elements. The decompressor handles all four element tags; the
-  compressor emits a single literal run — valid snappy output (what
-  golang/snappy produces for incompressible input), enough for
-  wire-compatible responses without implementing the matcher.
+  format) goes through pyarrow's snappy codec, which Spark's Arrow
+  exchange already loads. Untrusted bodies are checked before pyarrow
+  sees them (:func:`snappy_decompress`).
 """
 
 from __future__ import annotations
 
 import struct
 from dataclasses import dataclass, field
+
+import pyarrow as pa
 
 # --------------------------------------------------------------- varints
 
@@ -704,81 +704,31 @@ def decode_write_request_any(buf: bytes) -> list[TimeSeries]:
 
 
 def snappy_decompress(data: bytes) -> bytes:
-    """Snappy block-format decompress (google/snappy format description)."""
+    """Snappy block-format decompress; malformed input raises ValueError.
+
+    pyarrow allocates the preamble's declared length up front, so a
+    length above what the body can expand to is rejected first: the
+    densest element, a 3-byte copy, yields 64 bytes.
+    """
     try:
-        return _snappy_decompress(data)
-    except IndexError as exc:  # truncated stream
+        size, pos = read_uvarint(data, 0)
+    except IndexError as exc:
         raise ValueError("truncated snappy body") from exc
-
-
-def _snappy_decompress(data: bytes) -> bytes:
-    expected, pos = read_uvarint(data, 0)
-    out = bytearray()
-    n = len(data)
-    while pos < n:
-        tag = data[pos]
-        pos += 1
-        kind = tag & 3
-        if kind == 0:  # literal
-            ln = tag >> 2
-            if ln >= 60:  # 60..63 -> 1..4 extra length bytes (LE)
-                extra = ln - 59
-                ln = int.from_bytes(data[pos:pos + extra], "little")
-                pos += extra
-            ln += 1
-            out += data[pos:pos + ln]
-            pos += ln
-            continue
-        if kind == 1:  # copy, 1-byte offset
-            ln = ((tag >> 2) & 0x7) + 4
-            offset = ((tag >> 5) << 8) | data[pos]
-            pos += 1
-        elif kind == 2:  # copy, 2-byte offset
-            ln = (tag >> 2) + 1
-            offset = int.from_bytes(data[pos:pos + 2], "little")
-            pos += 2
-        else:  # copy, 4-byte offset
-            ln = (tag >> 2) + 1
-            offset = int.from_bytes(data[pos:pos + 4], "little")
-            pos += 4
-        if offset == 0 or offset > len(out):
-            raise ValueError("corrupt snappy copy offset")
-        # copies may overlap forward (RLE-style): byte-at-a-time semantics
-        start = len(out) - offset
-        for i in range(ln):
-            out.append(out[start + i])
-    if len(out) != expected:
-        raise ValueError(f"snappy length mismatch: {len(out)} != {expected}")
-    return bytes(out)
+    if size > (len(data) - pos) * 64 // 3:
+        raise ValueError(
+            f"snappy length {size} exceeds what {len(data)} bytes can hold"
+        )
+    try:
+        return pa.decompress(
+            data, decompressed_size=size, codec="snappy", asbytes=True
+        )
+    except (OSError, pa.ArrowException) as exc:
+        raise ValueError(f"corrupt snappy body: {exc}") from exc
 
 
 def snappy_compress(data: bytes) -> bytes:
-    """Minimal valid snappy block stream: the whole input as literal runs.
-
-    Produces standard-conformant output any snappy reader accepts (no
-    back-references, so no compression — fine for wire compatibility).
-    """
-    out = bytearray(write_uvarint(len(data)))
-    pos = 0
-    while pos < len(data) or not data:
-        chunk = data[pos:pos + 65536]
-        ln = len(chunk) - 1
-        if not data:
-            break
-        if ln < 60:
-            out.append(ln << 2)
-        elif ln < 1 << 8:
-            out.append(60 << 2)
-            out += ln.to_bytes(1, "little")
-        elif ln < 1 << 16:
-            out.append(61 << 2)
-            out += ln.to_bytes(2, "little")
-        else:
-            out.append(62 << 2)
-            out += ln.to_bytes(3, "little")
-        out += chunk
-        pos += len(chunk)
-    return bytes(out)
+    """Snappy block-format compress."""
+    return pa.compress(data, codec="snappy", asbytes=True)
 
 
 # ------------------------------------------------------------ public API

@@ -21,8 +21,10 @@ date-partitioned history are tested end-to-end in
 tests/test_http_api.py). One ``PromAPI`` over that relation serves the
 query and its JSON formatting. Write requests only append to the buffer;
 they build nothing. The tenant header injects the tenant as a label at
-write and filters it at query, mirroring the reference's __account_id
-flow (api/remotestorage/write.go:80-170).
+write and filters it on every read — queries, /series, label lookups,
+remote read and the matcher dump — mirroring the reference's
+__account_id flow (api/remotestorage/write.go:80-170,
+api/promql/queryable.go:153-165).
 
 Headers honored (types/types.go:171-195):
 
@@ -58,6 +60,9 @@ from squirreldb_spark.streaming.ingest import partition_date
 
 #: reference api/api.go: decoded request bodies are size-limited
 MAX_BODY_BYTES = 32 << 20
+
+#: most series one /api/v1/series or /debug/index_dump_by_labels answers
+SERIES_LIMIT = 10_000
 
 _WRITE_SCHEMA = "labels map<string,string>, ts long, value double, ttl_s long"
 
@@ -155,6 +160,25 @@ _MOCKED_V1_ROUTES: dict[str, tuple[int, dict]] = {
     # mockExemplarQueryable.ExemplarQuerier errors (api/mock.go:36-40)
     "/api/v1/query_exemplars": _NOT_IMPLEMENTED,
 }
+
+
+def _match_series(api: PromAPI, params: dict,
+                  opts: RequestOptions) -> list[str]:
+    """Canonical label-set JSON of every series a ``match[]`` selector
+    picks in ``[start, end]``; repeated ``match[]`` params are a union
+    (upstream API semantics). More than :data:`SERIES_LIMIT` raises
+    :class:`LimitExceeded` instead of answering with a partial list."""
+    start = _parse_time_s(params.get("start", ["0"])[0])
+    end = _parse_time_s(params.get("end", ["32503680000"])[0])
+    df = functools.reduce(DataFrame.unionByName, [
+        api.series(m, start, end, opts) for m in params.get("match[]", ["{}"])
+    ]).distinct()
+    rows = df.limit(SERIES_LIMIT + 1).collect()
+    if len(rows) > SERIES_LIMIT:
+        raise LimitExceeded(f"more than {SERIES_LIMIT} series match")
+    if "series" in df.columns:
+        return [r["series"] for r in rows]
+    return [_canonical_series_json(r.asDict()) for r in rows]
 
 
 def _dump_csv(series_jsons) -> bytes:
@@ -490,10 +514,11 @@ class PromHTTPServer:
                     (t for t in accepted if t in supported),
                     codec.READ_SAMPLES,
                 )
+                opts = self._opts(handler)
                 if choice == codec.READ_STREAMED_XOR_CHUNKS:
                     frames = api().remote_read_frames(
                         raw, frame_bytes=self.read_frame_bytes,
-                        decompressed=True,
+                        decompressed=True, opts=opts,
                     )
                     # pull the FIRST frame before committing the 200:
                     # planning/matcher errors surface here and must go
@@ -523,7 +548,7 @@ class PromHTTPServer:
                         # mid-stream chunk error)
                         handler.close_connection = True
                     return
-                out = api().remote_read(raw, decompressed=True)
+                out = api().remote_read(raw, decompressed=True, opts=opts)
                 self._send_bytes(handler, 200, out)
                 return
             if path == "/api/v1/query_range":
@@ -568,25 +593,10 @@ class PromHTTPServer:
                 )
                 return
             if path == "/api/v1/series":
-                opts = self._opts(handler)
-                # match[] is REPEATED with union semantics (upstream API)
-                start = _parse_time_s(p("start", "0"))
-                end = _parse_time_s(p("end", "32503680000"))
-                dfs = [
-                    api().series(mq, start, end, opts=opts)
-                    for mq in params.get("match[]", ["{}"])
-                ]
-                df = dfs[0]
-                for other in dfs[1:]:
-                    df = df.unionByName(other)
-                df = df.distinct()
-                rows = df.limit(10_000).collect()
-                if "series" in df.columns:
-                    data = [json.loads(r["series"]) for r in rows]
-                else:
-                    data = [r.asDict() for r in rows]
+                sjs = _match_series(api(), params, self._opts(handler))
                 self._send_json(
-                    handler, 200, {"status": "success", "data": data}
+                    handler, 200,
+                    {"status": "success", "data": [json.loads(s) for s in sjs]},
                 )
                 return
             if path == "/api/v1/labels":
@@ -816,21 +826,8 @@ class PromHTTPServer:
                 return
             if path == "/debug/index_dump_by_labels":
                 # matcher-restricted dump (reference indexDumpByLabels):
-                # match[] is a PromQL selector, same union semantics as
-                # /api/v1/series
-                lo = _parse_time_s(p("start", "0"))
-                hi = _parse_time_s(p("end", "32503680000"))
-                df = None
-                for mq in params.get("match[]", ["{}"]):
-                    part = api().series(mq, lo, hi)
-                    df = part if df is None else df.unionByName(part)
-                df = df.distinct()
-                rows = df.limit(10_000).collect()
-                sjs = [
-                    r["series"] if "series" in df.columns
-                    else _canonical_series_json(r.asDict())
-                    for r in rows
-                ]
+                # the /api/v1/series selection
+                sjs = _match_series(api(), params, self._opts(handler))
                 self._send_bytes(
                     handler, 200, _dump_csv(sjs),
                     content_type="text/csv; charset=utf-8", encoding=None,
@@ -849,9 +846,7 @@ class PromHTTPServer:
                 for labels, ts_ms, _val, ttl_s in rows:
                     if ttl_s is None:
                         continue
-                    sj = json.dumps(
-                        dict(sorted(labels.items())), separators=(",", ":")
-                    )
+                    sj = _canonical_series_json(labels)
                     exp = ts_ms / 1000 + ttl_s
                     expiry[sj] = max(expiry.get(sj, 0), exp)
                 import datetime as _dt

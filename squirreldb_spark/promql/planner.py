@@ -54,8 +54,8 @@ class Vec:
 class Mat:
     """A range vector: the underlying (shifted, filtered) points + range.
 
-    ``labels`` is None for plain matrix selectors (full label set); a
-    subquery's inner aggregation may have reduced it.
+    ``labels`` is the series identity: the engine's label columns for a
+    matrix selector; a subquery's inner aggregation may have reduced it.
 
     ``pinned_grid`` is set for ``@``-pinned subqueries: a 1-row grid
     holding the effective pinned timestamp. The window content is then
@@ -69,7 +69,7 @@ class Mat:
 
     points: DataFrame
     range_ms: int
-    labels: tuple[str, ...] | None = None
+    labels: tuple[str, ...]
     pinned_grid: DataFrame | None = None
 
 
@@ -311,6 +311,25 @@ def aligned_grid(spark, lo_ms: int, hi_ms: int, step_ms: int) -> DataFrame:
     )
 
 
+def _time_bounded(points: DataFrame, lo: int, hi: int) -> DataFrame:
+    """``points`` with ``ts in (lo, hi]``. On the production layout (A9)
+    the raw store is partitionBy("date"); an equivalent predicate on the
+    partition column turns the time bound into real partition pruning at
+    the source."""
+    out = points.filter((F.col("ts") > F.lit(lo)) & (F.col("ts") <= F.lit(hi)))
+    if "date" in points.columns:
+        import datetime as _dt
+
+        lo_d, hi_d = (
+            _dt.datetime.fromtimestamp(t // 1000, tz=_dt.timezone.utc).date()
+            for t in (lo, hi)
+        )
+        out = out.filter(
+            F.col("date").between(lo_d.isoformat(), hi_d.isoformat())
+        )
+    return out
+
+
 class PromQLEngine:
     """Evaluates PromQL range queries over a points DataFrame.
 
@@ -387,6 +406,23 @@ class PromQLEngine:
                 "step_ts", F.lit(float(result)).alias("value")
             )
         raise ValueError("query did not evaluate to an instant vector")
+
+    def select_raw(self, sel: A.VectorSelector, lo_ms: int,
+                   hi_ms: int) -> DataFrame:
+        """The raw points ``sel`` selects with ``ts`` in the inclusive
+        ``[lo_ms, hi_ms]`` (after ``sel``'s offset), no lookback: what
+        /series and remote read return. Labels are promoted
+        as for a query (a missing label compares as ""), mutable-label
+        matchers are rewritten, and the bound prunes like
+        :meth:`_bounded`'s."""
+        if not isinstance(sel, A.VectorSelector):
+            raise ValueError("expected a series selector")
+        eng = self._with_dynamic_labels(sel)
+        # integer-ms timestamps: [lo, hi] is (lo - 1, hi]
+        pts = _time_bounded(
+            eng.points, lo_ms - 1 - sel.offset_ms, hi_ms - sel.offset_ms
+        )
+        return eng._select_points(sel, pts)
 
     def _with_dynamic_labels(self, node) -> "PromQLEngine":
         """Dynamic label model (reference index.go:1903-2136 creates label
@@ -510,24 +546,7 @@ class PromQLEngine:
         import copy
 
         eng = copy.copy(self)
-        eng.points = self.points.filter(
-            (F.col("ts") > F.lit(lo)) & (F.col("ts") <= F.lit(hi))
-        )
-        if "date" in self.points.columns:
-            # production layout (A9): the raw store is partitionBy("date");
-            # an equivalent predicate on the partition column turns the
-            # time bound into real partition pruning at the source
-            import datetime as _dt
-
-            lo_d = _dt.datetime.fromtimestamp(
-                lo // 1000, tz=_dt.timezone.utc
-            ).date()
-            hi_d = _dt.datetime.fromtimestamp(
-                hi // 1000, tz=_dt.timezone.utc
-            ).date()
-            eng.points = eng.points.filter(
-                F.col("date").between(lo_d.isoformat(), hi_d.isoformat())
-            )
+        eng.points = _time_bounded(self.points, lo, hi)
         if self.downsample is not None:
             # pre-agg buckets are labelled by bucket start; a bucket
             # starting up to one resolution before ``lo`` can still hold
@@ -635,7 +654,7 @@ class PromQLEngine:
         else:
             pts = ds_mod.as_points(self.downsample, list(self.label_cols), fn_name)
         return Mat(self._select_points(node_arg.inner, points=pts),
-                   node_arg.range_ms)
+                   node_arg.range_ms, labels=self.label_cols)
 
     # ---------------------------------------------------------- evaluate
 
@@ -678,7 +697,8 @@ class PromQLEngine:
             )
             return Vec(df, self.label_cols)
         if isinstance(node, A.MatrixSelector):
-            return Mat(self._select_points(node.inner), node.range_ms)
+            return Mat(self._select_points(node.inner), node.range_ms,
+                       labels=self.label_cols)
         if isinstance(node, A.Subquery):
             # evaluate the inner expression on its own finer grid, then feed
             # the results back in as points of a range vector
@@ -845,62 +865,56 @@ class PromQLEngine:
         if name in _RANGE_FNS:
             mat = self._routed_mat(node.args[0], name) or self._eval(node.args[0])
             assert isinstance(mat, Mat), f"{name} needs a range vector"
-            keys = mat.labels if mat.labels is not None else self.label_cols
             df = range_fns.extrapolated(
-                mat.points, keys, self.step_ms, mat.range_ms,
+                mat.points, mat.labels, self.step_ms, mat.range_ms,
                 grid=self._mat_grid(mat), **_RANGE_FNS[name],
             )
             df = self._spread_pinned(mat, df)
-            return self._drop_name(Vec(df, tuple(keys)))
+            return self._drop_name(Vec(df, mat.labels))
         if name in _INSTANT_RANGE:
             mat = self._routed_mat(node.args[0], name) or self._eval(node.args[0])
-            keys = mat.labels if mat.labels is not None else self.label_cols
             df = range_fns.instantaneous(
-                mat.points, keys, self.step_ms, mat.range_ms,
+                mat.points, mat.labels, self.step_ms, mat.range_ms,
                 is_rate=_INSTANT_RANGE[name], grid=self._mat_grid(mat),
             )
             df = self._spread_pinned(mat, df)
-            return self._drop_name(Vec(df, tuple(keys)))
+            return self._drop_name(Vec(df, mat.labels))
         if name in _OVER_TIME_FNS:
             mat = self._routed_mat(node.args[0], name) or self._eval(node.args[0])
-            keys = mat.labels if mat.labels is not None else self.label_cols
             df = range_fns.over_time(
-                mat.points, keys, self.step_ms, mat.range_ms,
+                mat.points, mat.labels, self.step_ms, mat.range_ms,
                 _OVER_TIME_FNS[name], grid=self._mat_grid(mat),
             )
             df = self._spread_pinned(mat, df)
-            vec = Vec(df, tuple(keys))
+            vec = Vec(df, mat.labels)
             # last_over_time is the one *_over_time that KEEPS the metric
             # name (upstream functions.go funcLastOverTime)
             return vec if name == "last_over_time" else self._drop_name(vec)
         if name == "quantile_over_time":
             q = self._eval(node.args[0])
             mat = self._eval(node.args[1])
-            keys = mat.labels if mat.labels is not None else self.label_cols
             df = range_fns.over_time(
-                mat.points, keys, self.step_ms, mat.range_ms,
+                mat.points, mat.labels, self.step_ms, mat.range_ms,
                 "quantile", quantile=q, grid=self._mat_grid(mat),
             )
             df = self._spread_pinned(mat, df)
-            return self._drop_name(Vec(df, tuple(keys)))
+            return self._drop_name(Vec(df, mat.labels))
         if name == "mad_over_time":
             mat = self._eval(node.args[0])
-            keys = mat.labels if mat.labels is not None else self.label_cols
             df = range_fns.mad_over_time(
-                mat.points, keys, self.step_ms, mat.range_ms,
+                mat.points, mat.labels, self.step_ms, mat.range_ms,
                 grid=self._mat_grid(mat),
             )
             df = self._spread_pinned(mat, df)
-            return self._drop_name(Vec(df, tuple(keys)))
+            return self._drop_name(Vec(df, mat.labels))
         if name in ("resets", "changes"):
             mat = self._eval(node.args[0])
-            keys = mat.labels if mat.labels is not None else self.label_cols
             df = range_fns.resets_changes(
-                mat.points, keys, self.step_ms, mat.range_ms, name,
+                mat.points, mat.labels, self.step_ms, mat.range_ms, name,
                 grid=self._mat_grid(mat),
             )
             df = self._spread_pinned(mat, df)
-            return self._drop_name(Vec(df, tuple(keys)))
+            return self._drop_name(Vec(df, mat.labels))
         if name in _SCALAR_FNS:
             vec = self._eval(node.args[0])
             if isinstance(vec, (int, float)):
@@ -992,26 +1006,21 @@ class PromQLEngine:
             )
             return Vec(df, ())
         if name == "deriv":
-            # mat.labels, NOT self.label_cols: a subquery input may carry
-            # a reduced label set (deriv(sum by (x)(m)[30m:5m]))
             mat = self._eval(node.args[0])
-            keys = mat.labels if mat.labels is not None else self.label_cols
-            df = fns.linreg(mat.points, keys, self.step_ms, mat.range_ms,
+            df = fns.linreg(mat.points, mat.labels, self.step_ms, mat.range_ms,
                             grid=self._mat_grid(mat))
             df = self._spread_pinned(mat, df)
-            return self._drop_name(Vec(df, keys))
+            return self._drop_name(Vec(df, mat.labels))
         if name == "predict_linear":
             mat = self._eval(node.args[0])
-            keys = mat.labels if mat.labels is not None else self.label_cols
             t = float(self._eval(node.args[1]))
-            df = fns.linreg(mat.points, keys, self.step_ms, mat.range_ms,
+            df = fns.linreg(mat.points, mat.labels, self.step_ms, mat.range_ms,
                             predict_s=t, grid=self._mat_grid(mat))
             df = self._spread_pinned(mat, df)
-            return self._drop_name(Vec(df, keys))
+            return self._drop_name(Vec(df, mat.labels))
         if name in ("holt_winters", "double_exponential_smoothing"):
             # Prometheus 3.x renamed holt_winters; both spellings accepted
             mat = self._eval(node.args[0])
-            keys = mat.labels if mat.labels is not None else self.label_cols
             sf = float(self._eval(node.args[1]))
             tf = float(self._eval(node.args[2]))
             # upstream funcDoubleExponentialSmoothing rejects factors
@@ -1025,11 +1034,11 @@ class PromQLEngine:
                 raise ValueError(
                     f"invalid trend factor. Expected: 0 < tf < 1, got: {tf}"
                 )
-            df = fns.holt_winters(mat.points, keys, self.step_ms,
+            df = fns.holt_winters(mat.points, mat.labels, self.step_ms,
                                   mat.range_ms, sf=sf, tf=tf,
                                   grid=self._mat_grid(mat))
             df = self._spread_pinned(mat, df)
-            return self._drop_name(Vec(df, keys))
+            return self._drop_name(Vec(df, mat.labels))
         if name == "pi":
             import math
 
@@ -1051,15 +1060,14 @@ class PromQLEngine:
             )
         if name == "absent_over_time":
             mat = self._eval(node.args[0])
-            keys = mat.labels if mat.labels is not None else self.label_cols
             present = range_fns.over_time(
-                mat.points, keys, self.step_ms, mat.range_ms, "present",
+                mat.points, mat.labels, self.step_ms, mat.range_ms, "present",
                 grid=self._mat_grid(mat),
             )
             present = self._spread_pinned(mat, present)
             lbls = self._absent_const_labels(node.args[0])
             return Vec(
-                fns.absent(present, self.grid, keys, const_labels=lbls),
+                fns.absent(present, self.grid, mat.labels, const_labels=lbls),
                 tuple(lbls),
             )
         if name == "histogram_quantile":

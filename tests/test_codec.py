@@ -135,6 +135,15 @@ def test_snappy_corrupt_raises():
         codec.snappy_decompress(codec.write_uvarint(99) + bytes([0]) + b"a")
 
 
+def test_snappy_oversized_preamble_raises():
+    """A preamble claiming far more than the body can expand to is
+    rejected before anything is allocated for it."""
+    with pytest.raises(ValueError):
+        codec.snappy_decompress(codec.write_uvarint(1 << 40) + bytes(16))
+    with pytest.raises(ValueError):
+        codec.decode_remote_write_body(codec.write_uvarint(1 << 40) + bytes(16))
+
+
 # --------------------------------------------------------- remote read/write
 
 
@@ -164,6 +173,28 @@ def test_api_remote_read_end_to_end(spark):
     assert [(s.value, s.timestamp_ms) for s in a_cpu.samples] == [(1.0, 1000), (2.0, 2000)]
     assert (("host", "b"), ("name", "cpu")) in by_labels
     assert (("host", "a"), ("name", "mem")) not in by_labels
+
+
+def test_api_remote_read_past_limit_raises(spark):
+    """A SAMPLES remote read matching more than ``limit`` samples raises
+    rather than returning a series cut short."""
+    from squirreldb_spark.api import LimitExceeded, PromAPI
+
+    pts = spark.createDataFrame(
+        [("a", "cpu", 1000, 1.0), ("a", "cpu", 2000, 2.0), ("b", "cpu", 1500, 5.0)],
+        "host string, name string, ts long, value double",
+    )
+    api = PromAPI(pts, label_cols=("host", "name"), name_label="name")
+    body = codec.snappy_compress(codec.encode_read_request([
+        Query(start_timestamp_ms=0, end_timestamp_ms=3000,
+              matchers=[("=", "__name__", "cpu")]),
+    ]))
+    with pytest.raises(LimitExceeded):
+        api.remote_read(body, limit=2)
+    [result] = codec.decode_read_response(
+        codec.snappy_decompress(api.remote_read(body, limit=3))
+    )
+    assert sum(len(ts.samples) for ts in result) == 3
 
 
 def test_write_request_v2_roundtrip():

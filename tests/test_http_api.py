@@ -176,6 +176,92 @@ def test_remote_read_roundtrip(base, written):
     ]
 
 
+def _remote_read(base: str, matchers, streamed: bool,
+                 headers: dict | None = None) -> dict[str, list]:
+    """POST one remote-read query; ``inst`` -> [(value, ts)] of the reply,
+    from a SAMPLES or a STREAMED_XOR_CHUNKS response."""
+    body = codec.encode_read_request(
+        [codec.Query(start_timestamp_ms=0, end_timestamp_ms=200_000,
+                     matchers=matchers)],
+        accepted_response_types=[
+            codec.READ_STREAMED_XOR_CHUNKS if streamed else codec.READ_SAMPLES
+        ],
+    )
+    status, raw = _post(
+        f"{base}/api/v1/read", codec.snappy_compress(body),
+        {"Content-Encoding": "snappy", "Content-Type": "application/x-protobuf",
+         **(headers or {})},
+    )
+    assert status == 200
+    got: dict[str, list] = {}
+    if streamed:
+        for fr in codec.iter_chunked_frames(raw):
+            for cs in codec.decode_chunked_read_response(fr)[0]:
+                for _mn, _mx, _enc, data in cs.chunks:
+                    got.setdefault(cs.labels["inst"], []).extend(
+                        (s.value, s.timestamp_ms)
+                        for s in codec.decode_xor_chunk(data)
+                    )
+    else:
+        [result] = codec.decode_read_response(codec.snappy_decompress(raw))
+        for ts in result:
+            got[ts.labels["inst"]] = [(s.value, s.timestamp_ms) for s in ts.samples]
+    return got
+
+
+@pytest.mark.parametrize("streamed", [False, True])
+def test_remote_read_is_tenant_scoped(base, written, streamed):
+    """Remote read enforces the tenant header like /api/v1/query does:
+    another tenant reads nothing, the writer's tenant reads its samples,
+    and a forced matcher narrows them."""
+    matchers = [("=", "__name__", "http_requests_total")]
+    assert _remote_read(
+        base, matchers, streamed, {"X-SquirrelDB-Tenant": "other"}
+    ) == {}
+    want = {
+        inst: [(s.value, s.timestamp_ms) for s in ts.samples]
+        for inst, ts in zip(("a", "b"), written)
+    }
+    assert _remote_read(
+        base, matchers, streamed, {"X-SquirrelDB-Tenant": "t0"}
+    ) == want
+    assert _remote_read(
+        base, matchers, streamed,
+        {"X-SquirrelDB-Tenant": "t0", "X-SquirrelDB-Forced-Matcher": "inst=b"},
+    ) == {"b": want["b"]}
+
+
+def test_series_past_limit_is_rejected(spark):
+    """/api/v1/series and /debug/index_dump_by_labels answer at most
+    10,000 series; more is a 422, not a silently partial list."""
+    SERIES_LIMIT = 10_000
+    srv = PromHTTPServer(spark).start()
+    try:
+        b = f"http://127.0.0.1:{srv.port}"
+        series = [
+            codec.TimeSeries(labels={"__name__": "many", "i": str(i)},
+                             samples=[codec.Sample(1.0, 1_000)])
+            for i in range(SERIES_LIMIT + 1)
+        ]
+        status, _ = _post(
+            f"{b}/api/v1/write", codec.encode_remote_write_body(series),
+            {"Content-Encoding": "snappy",
+             "Content-Type": "application/x-protobuf"},
+        )
+        assert status == 204
+        status, out = _get(f"{b}/api/v1/series?match[]=many")
+        assert status == 422 and out["errorType"] == "execution"
+        status, out = _get(f"{b}/debug/index_dump_by_labels?match[]=many")
+        assert status == 422 and out["errorType"] == "execution"
+        # one series fewer is answered whole
+        status, out = _get(
+            f"{b}/api/v1/series?match[]=" + urllib.parse.quote('many{i!="0"}')
+        )
+        assert status == 200 and len(out["data"]) == SERIES_LIMIT
+    finally:
+        srv.stop()
+
+
 def test_remote_read_streamed_chunks(spark):
     """Negotiating STREAMED_XOR_CHUNKS returns MULTIPLE framed
     ChunkedReadResponse messages (uvarint + crc32c framing, XOR-encoded
@@ -879,5 +965,46 @@ def test_writes_after_partitioned_history_are_queryable(spark, tmp_path):
         assert [(int(t), float(v)) for t, v in series["values"]] == [
             (t, t / 10) for t in range(240, 601, 60)
         ]
+    finally:
+        srv.stop()
+
+
+def test_series_over_partitioned_history_prunes_dates(spark, tmp_path):
+    """/api/v1/series selects through the engine's time bound, so over a
+    date-partitioned history (built the streaming-ingest way) its scan
+    carries a ``date`` partition filter, and it stays tenant-scoped."""
+    from pyspark.sql import functions as F
+
+    from squirreldb_spark.api import RequestOptions
+    from squirreldb_spark.streaming import ingest
+
+    labels = {"__name__": "m", "job": "node"}
+    history = codec.TimeSeries(
+        labels=labels,
+        samples=[codec.Sample(float(k), 10_000 * k) for k in range(1, 31)],
+    )
+    bodies = spark.createDataFrame(
+        [(bytearray(codec.encode_remote_write_body([history])),)], "body binary"
+    )
+    path = str(tmp_path / "history")
+    (
+        ingest.validate_map(ingest.decode_write_stream(bodies), tenant="t1")
+        .withColumn("date", ingest.partition_date(F.col("ts")))
+        .write.partitionBy("date").parquet(path)
+    )
+    srv = PromHTTPServer(spark, base_points=spark.read.parquet(path)).start()
+    try:
+        b = f"http://127.0.0.1:{srv.port}"
+        url = f"{b}/api/v1/series?match[]=m&start=0&end=600"
+        status, out = _get(url, {"X-SquirrelDB-Tenant": "t1"})
+        assert status == 200
+        assert out["data"] == [{**labels, "__account_id": "t1"}]
+        status, out = _get(url, {"X-SquirrelDB-Tenant": "other"})
+        assert status == 200 and out["data"] == []
+
+        df = srv._api().series("m", 0, 600_000, RequestOptions(tenant="t1"))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        seg = plan[plan.index("PartitionFilters: [") + len("PartitionFilters: ["):]
+        assert not seg.startswith("]") and "date" in seg[:seg.index("]")], plan
     finally:
         srv.stop()
