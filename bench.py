@@ -1,11 +1,26 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""Benchmark harness: catalog queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints ONE JSON line:
+One process, one Spark session, these blocks in order:
+
+1. warm-up, then the headline block: every plan warmed at sf0.001, then
+   5 reps per query;
+2. the QPS harness (concurrent API queriers);
+3. the secondary block, the iterative block and the ingest bench.
+
+Each query is forced end-to-end with a noop-format write (full
+computation, no driver collect overhead); construction stays outside the
+timer except in the iterative block, whose kernels materialize inside
+``fn()``.  ``$SPARK_GRAFT_BENCH_BUDGET`` (seconds, default 3600) bounds
+the run: the headline block always completes, and a later block that
+does not fit is skipped and named in ``budget_skipped``.
+
+Prints a ``{"detail": ...}`` line, then ONE final JSON line (the last
+stdout line):
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
-
-Each query is forced end-to-end with a noop-format write (full computation,
-no driver collect overhead). Wall time per query plus the total.
+``value`` is the sum of per-query best-of-first-2; medians, mins and
+per-query spreads sit beside it.  The harness reads no history: a claim
+is judged by an interleaved A/B of two commits, not by this line alone.
 """
 
 from __future__ import annotations
@@ -13,60 +28,40 @@ from __future__ import annotations
 import json
 import os
 import signal
-import subprocess
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-# --------------------------------------------------------------------------
-# Global wall budget (VERDICT r14 #1): the r14 driver bench timed out
-# (rc 124) at BOTH 32 and 8 CPUs and shipped *nothing*, because the
-# sentinel/respawn protocol had unbounded worst-case wall and the one
-# JSON line printed only at the very end.  The harness now (a) tracks a
-# hard deadline checked between blocks and between queries, skipping
-# retime passes / ingest / QPS when short; (b) prints the headline JSON
-# line as soon as it exists and re-prints the enriched line at the end;
-# (c) installs a SIGTERM/SIGINT handler so even a killed run emits a
-# parseable line as its last output; (d) caps respawns RUN-wide, not
-# per child.  None of this changes the timed region, reps protocol,
-# query set or the final line format.
 BENCH_BUDGET = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "3600"))
 _T0 = time.monotonic()
+#: the driver tail-captures 2000 chars of output
+LINE_MAX = 1800
 
 
 def _remaining() -> float:
-    """Seconds left before the run-wide deadline.  The parent exports the
-    absolute deadline via env so child processes share the same clock."""
-    dl = os.environ.get("SPARK_GRAFT_BENCH_DEADLINE")
-    if dl:
-        try:
-            return float(dl) - time.time()
-        except ValueError:
-            pass
+    """Seconds left before the run-wide deadline."""
     return BENCH_BUDGET - (time.monotonic() - _T0)
 
 
 def _log(msg: str) -> None:
-    """Phase log on stderr: the driver tail-captures output, and a log of
-    which phase was running beats 2000 chars of progress bars when a run
-    is diagnosed post-mortem."""
+    """Phase log on stderr, so a killed run shows which phase it was in."""
     print(f"[bench +{time.monotonic() - _T0:.0f}s] {msg}",
           file=sys.stderr, flush=True)
 
 
-#: Most-recent parseable final line + detail doc; refreshed after every
-#: completed block so a killed run still ships its progress.
+#: Most recent final line + detail doc, refreshed after every block so a
+#: killed run still ships its progress.
 _EMIT: dict = {"line": None, "detail": None}
 _DETAIL_PATH = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "bench_detail.json")
-_ACTIVE_CHILD: list = [None]
+#: query -> error text, for queries whose reps raised
+_ERRORS: dict[str, str] = {}
 
 
 def _flush_state() -> None:
-    """Persist the current detail doc (incremental flush, VERDICT r14 #1)."""
+    """Persist the current detail doc."""
     if _EMIT["detail"] is not None:
         try:
             with open(_DETAIL_PATH, "w") as fh:
@@ -76,207 +71,100 @@ def _flush_state() -> None:
 
 
 def _on_signal(signum, frame) -> None:
-    """Last-gasp emitter: kill the live child (its progress output would
-    otherwise trail our line), flush detail, and print the most recent
-    final-format line so the driver's tail capture parses even on a
-    timeout kill."""
-    child = _ACTIVE_CHILD[0]
-    if child is not None:
-        try:
-            child.terminate()
-            child.wait(timeout=5)
-        except Exception:
-            try:
-                child.kill()
-            except Exception:
-                pass
+    """Last-gasp emitter: flush, re-print the freshest final line so the
+    tail capture parses even on a timeout kill, exit 128+signum."""
+    signal.signal(signal.SIGTERM, signal.SIG_DFL)
+    signal.signal(signal.SIGINT, signal.SIG_DFL)
+    try:
+        sys.stdout.flush()
+    except Exception:  # re-entrant flush from inside a print
+        pass
     _flush_state()
     if _EMIT["line"]:
         try:
             os.write(1, ("\n" + _EMIT["line"] + "\n").encode())
         except OSError:
             pass
-    os._exit(1)
+    os._exit(128 + signum)
 
-# The bench session is the one long heavy local[N] JVM that needs a big
-# heap (8g GC-thrashed once shuffle/broadcast state accumulated — the
-# round-2 drift); this is bench-harness tuning, NOT the library default,
-# which stays conservative for small hosts. Keeps the round-3 bench basis
-# (warm cache, best-of-2, 48g) frozen.
+
+# The bench session is one long heavy local[N] JVM that needs a big heap
+# (8g GC-thrashed once shuffle/broadcast state accumulated); this is
+# bench tuning, not the library default, which stays small.
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-# No \r-progress bars in bench sessions: the driver tail-captures output,
-# and the r14 post-mortem had 2000 chars of progress bar where the phase
-# trace should have been.
+# No \r-progress bars: the driver tail-captures output.
 os.environ.setdefault("SPARK_GRAFT_CONSOLE_PROGRESS", "false")
 
-#: headline set: TSDB hot paths + relational joins + pre-agg routing
+#: headline set: TSDB hot paths + relational joins + pre-agg routing, the
+#: PromQL-string path, a bounded /query_range scan and the LLM-data
+#: pipeline operators
 BENCH_QUERIES = [
-    "ts_rate",
-    "ts_instant_selector",
-    "ts_downsample_5m",
-    "ts_agg_sum_by",
-    "ts_topk",
-    "ts_quantile_over_time",
-    "ts_preagg_route_rate",
-    "ts_stitch_preagg_raw",
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier",
-    # PromQL-string path (parser + planner -> one Catalyst plan)
-    "promql_rate_sum",
-    # bounded /query_range: time-bound pushdown prunes the fact scan
-    "api_bounded_scan",
-    # LLM-data pipeline operators
-    "doc_exact_dedup",
-    "doc_minhash_lsh_pairs",
-    "doc_simhash",
-    "emb_cosine_knn",
-    "emb_ann_ivf",
+    "ts_rate", "ts_instant_selector", "ts_downsample_5m", "ts_agg_sum_by",
+    "ts_topk", "ts_quantile_over_time", "ts_preagg_route_rate",
+    "ts_stitch_preagg_raw", "tpch_q1_pricing_summary",
+    "tpch_q3_shipping_priority", "tpch_q5_local_supplier",
+    "promql_rate_sum", "api_bounded_scan", "doc_exact_dedup",
+    "doc_minhash_lsh_pairs", "doc_simhash", "emb_cosine_knn", "emb_ann_ivf",
 ]
 
-#: iterative graph ops tracked OUTSIDE the headline total: their cost is
-#: LSH candidate generation + O(log d) pointer-jumping passes — an order
-#: of magnitude above any headline query by nature, but regressions here
-#: need round-over-round visibility. Timed once (no best-of-2): the
-#: pointer-jumping loop materializes per pass, so a repeat would mostly
-#: re-measure checkpointed state.
+#: iterative kernels (LSH candidates + pointer-jumping CC, PageRank, power
+#: iteration) materialize their passes eagerly inside fn(), so the timer
+#: brackets construction too; tracked outside the headline total
 ITERATIVE_QUERIES = [
-    "doc_dedup_clusters",
-    "emb_semantic_dedup",
-    # round 9: these rerun the CC DAG, so they bench with the iterative block
-    "doc_dedup_savings",
-    "mm_audio_dedup_clusters",
-    # round 11: fixed-iteration PageRank materializes its transition
-    # table eagerly inside fn(), so it benches with the iterative block
-    "doc_pagerank",
-    # round 12: power iteration localCheckpoints its moment table and
-    # runs the per-round collects inside fn(), so it benches here too
-    "emb_top_pc",
+    "doc_dedup_clusters", "emb_semantic_dedup", "doc_dedup_savings",
+    "mm_audio_dedup_clusters", "doc_pagerank", "emb_top_pc",
 ]
 
-#: round-4 operator families, tracked OUTSIDE the frozen headline set so
-#: the headline total stays comparable round-over-round; best-of-2 like
-#: the headliners
+#: every other operator family, tracked outside the headline total so
+#: the headline stays comparable across commits; an operator outside the
+#: bench has no perf record when it regresses
 SECONDARY_QUERIES = [
-    "ev_sessionize",
-    "ev_asof_join",
-    "ev_hopping_counts",
-    "doc_dup_spans",
-    "doc_winnowing",
-    "emb_scalar_quantize",
-    "emb_pq_codes",
-    "emb_diversity_sample",
-    "mm_video_neardup",
-    "doc_chunk_sliding",
-    "doc_novelty",
-    "doc_quality_logreg",
-    "emb_matryoshka_recall",
-    "ev_anomaly_mad",
-    "emb_ann_ivfpq",
-    "doc_segment_dedup",
-    "emb_range_search",
-    "emb_mmr_rerank",
-    "doc_dsir_weights",
-    "ev_hll_distinct",
-    "doc_cm_heavyhitters",
-    "doc_curation_verdict",
-    "ev_attribution",
-    "emb_ann_ivfpq_refine",
-    # round-6 additions
-    "doc_segment_dedup_hashkey",
-    "doc_cdc_chunks",
-    "emb_binary_hamming",
-    "ev_rfm_segments",
-    # round-7 additions
-    "doc_cdc_chunks_fast",
-    "ev_hll_rollup",
-    "ev_sample_quantiles",
-    "doc_domain_cap",
-    "ev_hll_setops",
-    "doc_canonical_dedup",
-    "ev_decayed_counts",
-    "doc_vocab_coverage",
-    "doc_bm25_topk",
-    "mm_audio_matches",
-    "doc_cluster_split",
-    "emb_threshold_sweep",
-    "ev_hll_sliding",
-    # round-8 additions (VERDICT r8 #4: an operator outside the bench
-    # has no perf history when it regresses)
-    "ev_peak_concurrency",
-    "mm_audio_align",
-    "doc_token_pmi",
-    "doc_source_overlap",
-    "doc_source_minhash_sim",
-    # round-9 additions
-    "doc_simhash_neardup",
-    "doc_simhash_accuracy",
-    "ev_bot_cadence",
-    "ev_key_skew",
-    "doc_ccnet_buckets",
-    "emb_ivf_cell_balance",
-    "ev_funnel_timing",
-    "ev_stickiness",
-    "doc_length_quantiles",
-    "emb_qc",
-    "doc_dup_source_attribution",
-    "ev_anomaly_seasonal",
-    "doc_boilerplate_prefixes",
-    "doc_corpus_growth",
-    "ev_session_duration_stats",
-    "doc_source_sketch_accuracy",
-    "emb_ivf_nprobe_sweep",
-    # round-10 additions
-    "ev_user_concentration",
-    "ev_interarrival",
-    "emb_dim_variance",
-    "emb_pq_distortion",
-    "doc_lsh_s_curve",
-    "doc_source_drift",
-    "doc_minhash_k_sweep",
-    "doc_packing_efficiency",
-    "doc_lang_confusion",
-    "ev_funnel_windowed",
-    # round-11 additions
-    "doc_repetition_profile",
-    "doc_tokenizer_fertility",
-    "doc_minhash_containment",
-    "emb_centroid_drift",
-    "ev_powerlaw_fit",
-    "ev_survival_curve",
-    "ev_transition_entropy",
-    "doc_split_leakage_rate",
-    "ev_ab_test",
-    "ev_cohort_ltv",
-    "ev_cusum_changepoint",
-    "ev_benford",
-    "ev_lag_autocorr",
-    "emb_hubness",
-    "emb_intrinsic_dim",
-    "doc_dedup_threshold_sweep",
-    "doc_lexical_diversity",
-    "emb_kmeans_elbow",
-    "doc_term_burstiness",
-    "mm_keyframe_select",
-    # round-12 additions
-    "ev_user_cap_sweep",
-    "ev_ab_cuped",
-    "ev_poisson_dispersion",
-    "doc_kn_logprob",
-    "doc_ngram_entropy_rate",
-    "doc_shard_balance",
-    "doc_cluster_size_dist",
-    "emb_knn_reciprocity",
-    "emb_ood_mahalanobis",
-    # round-13 additions (review: every new kernel enters a bench block
-    # in the round that adds it, so it gets a committed basis)
-    "promql_at_subquery",
-    "doc_oph_minhash",
-    "emb_effective_rank",
-    "ev_power_mde",
-    "ev_diff_in_diff",
-    "mm_phash_dct",
+    "ev_sessionize", "ev_asof_join", "ev_hopping_counts", "doc_dup_spans",
+    "doc_winnowing", "emb_scalar_quantize", "emb_pq_codes",
+    "emb_diversity_sample", "mm_video_neardup", "doc_chunk_sliding",
+    "doc_novelty", "doc_quality_logreg", "emb_matryoshka_recall",
+    "ev_anomaly_mad", "emb_ann_ivfpq", "doc_segment_dedup",
+    "emb_range_search", "emb_mmr_rerank", "doc_dsir_weights",
+    "ev_hll_distinct", "doc_cm_heavyhitters", "doc_curation_verdict",
+    "ev_attribution", "emb_ann_ivfpq_refine", "doc_segment_dedup_hashkey",
+    "doc_cdc_chunks", "emb_binary_hamming", "ev_rfm_segments",
+    "doc_cdc_chunks_fast", "ev_hll_rollup", "ev_sample_quantiles",
+    "doc_domain_cap", "ev_hll_setops", "doc_canonical_dedup",
+    "ev_decayed_counts", "doc_vocab_coverage", "doc_bm25_topk",
+    "mm_audio_matches", "doc_cluster_split", "emb_threshold_sweep",
+    "ev_hll_sliding", "ev_peak_concurrency", "mm_audio_align",
+    "doc_token_pmi", "doc_source_overlap", "doc_source_minhash_sim",
+    "doc_simhash_neardup", "doc_simhash_accuracy", "ev_bot_cadence",
+    "ev_key_skew", "doc_ccnet_buckets", "emb_ivf_cell_balance",
+    "ev_funnel_timing", "ev_stickiness", "doc_length_quantiles", "emb_qc",
+    "doc_dup_source_attribution", "ev_anomaly_seasonal",
+    "doc_boilerplate_prefixes", "doc_corpus_growth",
+    "ev_session_duration_stats", "doc_source_sketch_accuracy",
+    "emb_ivf_nprobe_sweep", "ev_user_concentration", "ev_interarrival",
+    "emb_dim_variance", "emb_pq_distortion", "doc_lsh_s_curve",
+    "doc_source_drift", "doc_minhash_k_sweep", "doc_packing_efficiency",
+    "doc_lang_confusion", "ev_funnel_windowed", "doc_repetition_profile",
+    "doc_tokenizer_fertility", "doc_minhash_containment",
+    "emb_centroid_drift", "ev_powerlaw_fit", "ev_survival_curve",
+    "ev_transition_entropy", "doc_split_leakage_rate", "ev_ab_test",
+    "ev_cohort_ltv", "ev_cusum_changepoint", "ev_benford",
+    "ev_lag_autocorr", "emb_hubness", "emb_intrinsic_dim",
+    "doc_dedup_threshold_sweep", "doc_lexical_diversity", "emb_kmeans_elbow",
+    "doc_term_burstiness", "mm_keyframe_select", "ev_user_cap_sweep",
+    "ev_ab_cuped", "ev_poisson_dispersion", "doc_kn_logprob",
+    "doc_ngram_entropy_rate", "doc_shard_balance", "doc_cluster_size_dist",
+    "emb_knn_reciprocity", "emb_ood_mahalanobis", "promql_at_subquery",
+    "doc_oph_minhash", "emb_effective_rank", "ev_power_mde",
+    "ev_diff_in_diff", "mm_phash_dct",
 ]
+
+#: Seconds a block must leave for the blocks after it: the secondary and
+#: iterative blocks stop between queries below their reserve; the rest
+#: start only with more than this left.
+QPS_RESERVE = 360.0
+SECONDARY_RESERVE = 360.0
+ITERATIVE_START, ITERATIVE_RESERVE = 420.0, 240.0
+INGEST_RESERVE = 300.0
 
 
 def _median(xs: list[float]) -> float:
@@ -286,10 +174,8 @@ def _median(xs: list[float]) -> float:
 
 
 def _buff_cache_gb() -> float | None:
-    """OS page-cache size (Buffers+Cached) from /proc/meminfo — the
-    round-4 verdict traced per-query outliers to microVM cache reclaim;
-    logging the pre-run cache state makes that attributable instead of
-    guessed."""
+    """OS page-cache size (Buffers+Cached), so per-query outliers can be
+    traced to cache reclaim instead of guessed."""
     try:
         kv = {}
         with open("/proc/meminfo") as fh:
@@ -341,38 +227,26 @@ def ingest_bench(spark) -> dict:
             bodies.append((codec.encode_remote_write_body(series),))
     payloads = spark.createDataFrame(bodies, "body binary").repartition(32)
 
-    with tempfile.TemporaryDirectory() as tmp:
-        runs: list[float] = []
-        # One UNTIMED warm-up run first (r12): Python-worker spin-up for
-        # the mapInPandas codec takes 2-3 full batches to amortize
-        # (measured [10.2, 5.9, 1.5, 1.6, 1.4, 1.4] s on a quiet host),
-        # so a 3-timed-run protocol starting cold sometimes never reached
-        # the plateau — r12's first in-bench ingest read 137k samples/s
-        # against an isolated plateau of 438k on the same code.  A
-        # long-lived ingest service pays spin-up once per executor.
+    def write(path: str) -> None:
         out = validate_map(decode_write_stream(payloads), tenant="bench")
         (
             out.withColumn("date", F.to_date(F.timestamp_millis(F.col("ts"))))
             .write.partitionBy("date")
             .mode("overwrite")
-            .parquet(f"{tmp}/warmup")
+            .parquet(path)
         )
-        # four timed runs; the BEST stays the headline basis (the first
-        # timed run may still pay residual spin-up) and the full sample
-        # list + spread make round-over-round noise attributable
-        # (round-4 verdict: ingest drifted 540k -> 371k samples/s on
-        # identical code; the single printed number hid the variance)
+
+    with tempfile.TemporaryDirectory() as tmp:
+        # One untimed run first: Python-worker spin-up for the mapInPandas
+        # codec takes 2-3 full batches to amortize, and a long-lived
+        # ingest service pays it once per executor.
+        write(f"{tmp}/warmup")
+        # four timed runs; the best is the record, and the full list +
+        # spread make run-to-run noise attributable
+        runs: list[float] = []
         for i in range(4):
             t0 = time.perf_counter()
-            out = validate_map(decode_write_stream(payloads), tenant="bench")
-            (
-                out.withColumn(
-                    "date", F.to_date(F.timestamp_millis(F.col("ts")))
-                )
-                .write.partitionBy("date")
-                .mode("overwrite")
-                .parquet(f"{tmp}/points{i}")
-            )
+            write(f"{tmp}/points{i}")
             runs.append(time.perf_counter() - t0)
     sec = min(runs)
     return {
@@ -385,13 +259,13 @@ def ingest_bench(spark) -> dict:
 
 
 def _warm(spark, CATALOG) -> None:
-    """JVM + OS page-cache warm-up, shared by both bench processes.
+    """JVM + OS page-cache warm-up.
 
     JVM: run the two dominant plan shapes (windowed range-agg, exact
     percentile) against the tiny sf0.001 data — production query services
     are warm; cold-start JIT is not the thing this benchmark tracks.
-    Page cache: round-2 diagnosis traced first-in-list inflation (up to
-    1.9x) to cold parquet IO; a production cluster reads hot storage.
+    Page cache: cold parquet IO inflated the first query in the list (up
+    to 1.9x); a production cluster reads hot storage.
     """
     import glob
 
@@ -407,56 +281,10 @@ def _warm(spark, CATALOG) -> None:
                 pass
 
 
-def _time_reps(
-    spark, CATALOG, names: list[str], reps: int,
-    extra_reps: dict[str, int] | None = None,
-    full: bool = False,
-    reserve: float | None = None,
-) -> tuple[dict[str, float], dict[str, list[float]]]:
-    """Per-query: value stays the round-3/4 frozen basis — best of the
-    FIRST TWO reps (steady state; a single sample conflates GC pauses and
-    stage-scheduling jitter with plan cost, which is what burned the
-    round-2 comparison).  Every sample is recorded so median/min/spread
-    can be read against the query's own variance (VERDICT r4 #3).
-    `extra_reps` adds reps for named queries (VERDICT r11 #1: the top-N
-    secondary queries by cost get 5 reps so a round-over-round move is
-    adjudicable against their own spread).  ``full`` brackets
-    CONSTRUCTION too — the iterative kernels (pointer-jumping CC,
-    pagerank, power iteration, k-means) materialize their passes
-    eagerly inside fn(), so timing only the final write would miss
-    almost all the work."""
-    best: dict[str, float] = {}
-    samples: dict[str, list[float]] = {}
-    for name in names:
-        if reserve is not None and _remaining() < reserve:
-            # VERDICT r14 #1a: hard deadline — stop the block and let the
-            # caller record the truncation rather than overrun the driver
-            # budget and ship nothing.  Headline timing passes reserve=None
-            # (it must complete; it IS the driver record).
-            _log(f"budget: truncating block before {name!r} "
-                 f"({_remaining():.0f}s left, reserve {reserve:.0f}s)")
-            break
-        runs: list[float] = []
-        for _ in range(reps + (extra_reps or {}).get(name, 0)):
-            t0 = time.perf_counter()
-            df = CATALOG[name].fn(spark, SF_DIR)
-            if not full:
-                t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        best[name] = round(min(runs[:2]), 3)  # frozen basis
-        samples[name] = [round(s, 3) for s in runs]
-        _release_pins()  # scope builder pins to their own query's reps
-    return best, samples
-
-
 def _release_pins() -> int:
-    """Drain the builders' scoped persists between queries (VERDICT r14
-    #5): pins are rebuilt per invocation inside the timed region, but
-    without a release point every pinned table of a 250-builder session
-    stays in the storage pool until the JVM dies.  Called OUTSIDE every
-    timed region (after a query's last rep / after a warm loop), so no
-    timed rep's warm-cache state changes within its own query."""
+    """Drain the builders' scoped persists.  Called outside every timed
+    region (after a query's last rep, after a warm-up), so no timed rep's
+    warm-cache state changes within its own query."""
     try:
         from squirreldb_spark.pipeline._pins import release_pins
         return release_pins()
@@ -464,40 +292,64 @@ def _release_pins() -> int:
         return 0
 
 
-def _time_reps_full(
+def _time_reps(
     spark, CATALOG, names: list[str], reps: int,
-    extra_reps: dict[str, int] | None = None,
+    full: bool = False,
     reserve: float | None = None,
 ) -> tuple[dict[str, float], dict[str, list[float]]]:
-    """_time_reps with the timer bracketing construction (full=True)."""
-    return _time_reps(spark, CATALOG, names, reps, extra_reps, full=True,
-                      reserve=reserve)
+    """Time ``reps`` noop writes per query.  Returns (best of the first
+    two reps, every sample): a single sample conflates GC pauses and
+    stage-scheduling jitter with plan cost, and the full list lets
+    median/min/spread be read against the query's own variance.
+
+    ``full`` brackets construction too.  ``reserve`` stops the block
+    between queries once fewer seconds than that are left (the headline
+    passes None: it must complete).  A query that raises is logged, kept
+    in ``_ERRORS`` and left out of the result."""
+    best: dict[str, float] = {}
+    samples: dict[str, list[float]] = {}
+    for name in names:
+        if reserve is not None and _remaining() < reserve:
+            _log(f"budget: truncating block before {name!r} "
+                 f"({_remaining():.0f}s left, reserve {reserve:.0f}s)")
+            break
+        runs: list[float] = []
+        try:
+            for _ in range(reps):
+                t0 = time.perf_counter()
+                df = CATALOG[name].fn(spark, SF_DIR)
+                if not full:
+                    t0 = time.perf_counter()
+                df.write.format("noop").mode("overwrite").save()
+                runs.append(time.perf_counter() - t0)
+        except Exception as exc:
+            _log(f"{name} failed: {exc!r:.300}")
+            _ERRORS[name] = f"{exc!r:.200}"
+        else:
+            best[name] = round(min(runs[:2]), 3)
+            samples[name] = [round(s, 3) for s in runs]
+        _release_pins()  # scope builder pins to their own query's reps
+    return best, samples
 
 
 def _warm_plans(spark, CATALOG, names: list[str],
                 reserve: float | None = None) -> None:
-    """Warm every named plan at sf0.001 (VERDICT r11 #1, extending the
-    r11 headline instrument to the secondary block): the emb_ann_ivfpq
-    'regression' (secondary median 7.60 s vs its own r9 record 0.92 s,
-    zero code change) was adjudicated this round as protocol bias — a
-    fresh process with the plan warmed at sf0.001 measures 0.98-1.23 s
-    over 5 reps.  First-compile codegen premium plus run-order state in
-    a 96-query block is not what this benchmark tracks; a production
-    query service is plan-warm.
-
-    ``reserve`` budget-gates the loop (VERDICT r14 #1a): warming 108
-    plans on a degraded rig can itself eat minutes; past the deadline
-    reserve the remaining warms are skipped (their queries will be
-    truncated by the same reserve anyway)."""
+    """Warm every named plan at sf0.001: each query's first rep otherwise
+    pays a 1.5-3x per-plan compilation/codegen premium, and a production
+    query service is plan-warm.  ``reserve`` stops the loop like
+    :func:`_time_reps` does."""
     for i, name in enumerate(names):
         if reserve is not None and _remaining() < reserve:
             _log(f"budget: stopping plan warm-up at {i}/{len(names)} "
                  f"({_remaining():.0f}s left, reserve {reserve:.0f}s)")
             break
-        CATALOG[name].fn(spark, "/root/testdata/sf0.001").write.format(
-            "noop"
-        ).mode("overwrite").save()
-        _release_pins()  # sf0.001 warm pins must not shadow sf0.1 reps
+        try:
+            CATALOG[name].fn(spark, "/root/testdata/sf0.001").write.format(
+                "noop"
+            ).mode("overwrite").save()
+        except Exception as exc:  # its timed reps will record the error
+            _log(f"{name} warm-up failed: {exc!r:.300}")
+        _release_pins()  # sf0.001 warm pins must not shadow timed reps
 
 
 def _stats(samples: dict[str, list[float]]) -> tuple[dict, dict]:
@@ -509,461 +361,15 @@ def _stats(samples: dict[str, list[float]]) -> tuple[dict, dict]:
     return med, spread
 
 
-#: Degraded-child sentinel (VERDICT r13 #1): all three r13
-#: `standing_after_retime` flags were instrument artifacts — one fresh
-#: child read emb_effective_rank at 63.7 s, a second child minutes
-#: later, same code, read 2.5 s (basis 2.909).  Entire fresh children
-#: occasionally land in a multi-minute degradation window even on an
-#: idle guest, so every fresh child now times a cheap known-basis
-#: sentinel BEFORE its payload; a child whose sentinel runs >3x the
-#: committed basis is discarded and respawned (bounded), and a record
-#: produced by a degraded final attempt carries `rig_degraded` instead
-#: of shipping silently as a regression.  r14 addition: the sentinel is
-#: re-timed AFTER the payload too (`sentinel_post`, outside the timed
-#: region) — the round-close episode showed a child can pass the start
-#: gate and degrade mid-payload; a degraded post-read discards the
-#: payload and respawns just like a degraded pre-read.
-SENTINEL_QUERY = "doc_exact_dedup"
-SENTINEL_BASIS = 0.099  # committed r13 headline basis (BENCH_HISTORY)
-SENTINEL_FACTOR = 3.0
-SENTINEL_MAX_SPAWNS = 3
-#: Run-wide respawn allowance (VERDICT r14 #1c): r14's per-child cap of 3
-#: multiplied across headline + up to 3 retime passes + QPS into an
-#: unbounded worst-case wall.  Extra (non-first) spawns now draw from one
-#: shared budget; when it is spent, the next attempt is parent-forced
-#: final (times its payload, ships flagged if still degraded).
-RESPAWN_BUDGET = int(os.environ.get("SPARK_GRAFT_RESPAWN_BUDGET", "4"))
-_SPAWNS_LEFT = [RESPAWN_BUDGET]
-
-#: Single-thread md5-over-64MiB probe basis on the reference rig
-#: (measured 0.128 s min-of-5).  VERDICT r14 #1d: the absolute 0.099 s
-#: sentinel basis is a local-rig wall-clock assumption — on any slower
-#: rig every child reads "degraded", burns max respawns and ~3x wall for
-#: no signal.  The effective basis scales by (i) a deterministic
-#: single-thread CPU probe and (ii) the core count (the committed basis
-#: was measured at local[32]; the driver also benches at 8 CPUs where
-#: the same query is legitimately slower).
-PROBE_BASIS = 0.128
-_BASIS_CACHE: list = [None]
-
-
-def _rig_probe_sec() -> float:
-    import hashlib
-
-    buf = b"\x5a" * (1 << 20)
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        h = hashlib.md5()
-        for _ in range(64):
-            h.update(buf)
-        best = min(best, time.perf_counter() - t0)
-    return best
-
-
-def _effective_sentinel_basis() -> float:
-    """Parent-calibrated sentinel basis: committed basis scaled by the
-    rig's single-thread speed and the core count.  The parent computes
-    it once and exports it so every child gates against the same number
-    (a child probing DURING a degradation window would otherwise scale
-    its own gate up and wave itself through)."""
-    env = os.environ.get("SPARK_GRAFT_SENTINEL_BASIS")
-    if env:
-        try:
-            return float(env)
-        except ValueError:
-            pass
-    if _BASIS_CACHE[0] is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) \
-            or (os.cpu_count() or 32)
-        cpu_f = max(1.0, min(4.0, (32.0 / max(cpus, 1)) ** 0.7))
-        probe_f = max(1.0, min(8.0, _rig_probe_sec() / PROBE_BASIS))
-        _BASIS_CACHE[0] = round(SENTINEL_BASIS * cpu_f * probe_f, 4)
-    return _BASIS_CACHE[0]
-
-
-def _sentinel_check(spark, CATALOG) -> dict:
-    """Time the sentinel in THIS child (plan warmed at sf0.001 first, so
-    first-compile codegen premium is not read as rig degradation)."""
-    _warm_plans(spark, CATALOG, [SENTINEL_QUERY])
-    _, s = _time_reps(spark, CATALOG, [SENTINEL_QUERY], reps=3)
-    med = round(_median(s[SENTINEL_QUERY]), 3)
-    basis_eff = _effective_sentinel_basis()
-    return {
-        "query": SENTINEL_QUERY,
-        "basis": SENTINEL_BASIS,
-        "basis_eff": basis_eff,
-        "samples": s[SENTINEL_QUERY],
-        "median": med,
-        "degraded": med > SENTINEL_FACTOR * basis_eff,
-    }
-
-
-def _sentinel_gate(spark, CATALOG, out_path: str) -> dict | None:
-    """Child-side gate: on a degraded sentinel (unless this is the
-    parent-marked final attempt) write a sentinel-only record and let
-    the parent respawn instead of timing a payload that would only
-    produce a phantom record."""
-    sent = _sentinel_check(spark, CATALOG)
-    if sent["degraded"] and os.environ.get(
-        "SPARK_GRAFT_SENTINEL_FINAL"
-    ) != "1":
-        with open(out_path, "w") as fh:
-            json.dump({"sentinel": sent}, fh)
-        spark.stop()
-        return None
-    return sent
-
-
-def _finish_child(spark, CATALOG, out_path: str, sent: dict,
-                  doc: dict) -> None:
-    """Post-payload sentinel bracket (r14 round-close episode: a child
-    can pass the start-of-child sentinel and degrade MID-payload — one
-    task burned 14+ min of interpreted expression eval on a near-idle
-    rig, on code that had run the same queries in 1-4 s hours earlier).
-    The sentinel is re-timed AFTER the payload, outside the timed
-    region; a degraded post-read discards the payload (unless this is
-    the parent-forced final attempt) so the parent respawns instead of
-    folding a mid-run-degraded adjudication into the record.  A window
-    that hits mid-payload and recovers before this check is still
-    caught downstream by the mover re-time loop."""
-    sent_post = _sentinel_check(spark, CATALOG)
-    if sent_post["degraded"] and os.environ.get(
-        "SPARK_GRAFT_SENTINEL_FINAL"
-    ) != "1":
-        doc = {}
-    doc["sentinel"] = sent
-    doc["sentinel_post"] = sent_post
-    with open(out_path, "w") as fh:
-        json.dump(doc, fh)
-    spark.stop()
-
-
-def _spawn(argv: list[str], env: dict) -> int:
-    """Run a child process, tracking it so the parent's signal handler
-    can terminate it before emitting the last-gasp line."""
-    proc = subprocess.Popen(argv, env=env)
-    _ACTIVE_CHILD[0] = proc
-    try:
-        return proc.wait()
-    finally:
-        _ACTIVE_CHILD[0] = None
-
-
-def _run_sentinel_child(
-    argv: list[str], out_path: str, est_sec: float = 240.0,
-) -> tuple[dict, dict]:
-    """Parent side: spawn a fresh child, respawning while its sentinel —
-    timed BEFORE the payload, and again AFTER it (`sentinel_post`, the
-    mid-payload bracket) — reads degraded.  Respawns are bounded three
-    ways (VERDICT r14 #1): per child slot (SENTINEL_MAX_SPAWNS), by the
-    run-wide _SPAWNS_LEFT budget, and by the wall deadline (an attempt
-    is parent-forced final when there would be no budget left to retry
-    it).  The final attempt always times the payload; if even it was
-    degraded the returned report carries ``rig_degraded`` so the verdict
-    can adjudicate instead of reading a phantom regression."""
-    attempts: list[dict] = []
-    payload: dict = {}
-    for attempt in range(SENTINEL_MAX_SPAWNS):
-        final = (
-            attempt == SENTINEL_MAX_SPAWNS - 1
-            or _SPAWNS_LEFT[0] <= 0
-            or _remaining() < 2.2 * est_sec + 120.0
-        )
-        env = dict(os.environ)
-        if final:
-            env["SPARK_GRAFT_SENTINEL_FINAL"] = "1"
-        if os.path.exists(out_path):
-            os.unlink(out_path)
-        t0 = time.monotonic()
-        rc = _spawn(argv, env)
-        est_sec = max(est_sec, time.monotonic() - t0)
-        doc: dict = {}
-        if rc == 0:
-            try:
-                with open(out_path) as fh:
-                    doc = json.load(fh)
-            except (OSError, ValueError):
-                doc = {}
-        sent = doc.pop("sentinel", None) or {}
-        sent_post = doc.pop("sentinel_post", None) or {}
-        payload = doc
-        if rc != 0 or (not sent and not payload):
-            # crashed / wrote nothing: treat like a degraded attempt
-            attempts.append({"child_rc": rc, "no_payload": True})
-            payload = {}
-        else:
-            att = dict(sent)
-            if sent_post:
-                att["post"] = sent_post
-            attempts.append(att)
-            if not (sent.get("degraded") or sent_post.get("degraded")):
-                return payload, {"degraded": False, "attempts": attempts}
-        if final:
-            break
-        _SPAWNS_LEFT[0] -= 1
-        _log(f"degraded/failed child, respawning "
-             f"({_SPAWNS_LEFT[0]} run-wide respawns left)")
-    return payload, {
-        "degraded": True, "rig_degraded": True, "attempts": attempts,
-    }
-
-
-def headline_child(out_path: str) -> None:
-    """VERDICT r10 #1: the headline block runs in a FRESH process, before
-    (and isolated from) the 76-query secondary block — run-order effects
-    inside one JVM demonstrably moved a query 6x between rounds.  Five
-    reps per query (up from 3) so a 10% round-over-round move is
-    adjudicable against per-query spread; min and median are reported
-    alongside the frozen best-of-first-2 basis."""
-    from squirreldb_spark.queries import CATALOG
-    from squirreldb_spark.session import get_session
-
-    spark = get_session("squirreldb-spark-bench-headline")
-    spark.sparkContext.setLogLevel("ERROR")
-    cache_cold = _buff_cache_gb()
-    _warm(spark, CATALOG)
-    # Warm EVERY headline plan at sf0.001 (cheap — tiny data, same codegen):
-    # the r11 5-rep samples showed each query's FIRST sf0.1 rep paying a
-    # 1.5-3x per-plan compilation/codegen premium that the frozen
-    # best-of-first-2 basis then reads as regression noise. A production
-    # query service is plan-warm; first-compile cost is not what this
-    # benchmark tracks (same rationale as the two-shape warm-up above,
-    # extended to all headline shapes).
-    _warm_plans(spark, CATALOG, BENCH_QUERIES)
-    sent = _sentinel_gate(spark, CATALOG, out_path)
-    if sent is None:  # degraded child: parent respawns (VERDICT r13 #1)
-        return
-    cache_pre = _buff_cache_gb()
-    timings, samples = _time_reps(spark, CATALOG, BENCH_QUERIES, reps=5)
-    med, spread = _stats(samples)
-    _finish_child(spark, CATALOG, out_path, sent, {
-        "timings": timings,
-        "samples": samples,
-        "median": med,
-        "spread": spread,
-        "min": {n: min(s) for n, s in samples.items()},
-        "buff_cache_gb_cold": cache_cold,
-        "buff_cache_gb_pre": cache_pre,
-    })
-
-
-def _history_rounds() -> dict:
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "docs",
-        "BENCH_HISTORY.json")
-    return json.load(open(path))["rounds"]
-
-
-def _basis_delta(t_median: dict[str, float]) -> dict:
-    """Round-over-round delta vs the last committed basis in
-    docs/BENCH_HISTORY.json (VERDICT r10 #1: deltas are computed from a
-    tracked file, not remembered across verdicts)."""
-    try:
-        rounds = _history_rounds()
-        last = sorted(rounds)[-1]
-        base = rounds[last]
-        base_total = base.get("value_median") or base["value"]
-        cur_total = round(sum(t_median.values()), 3)
-        return {
-            "basis_round": last,
-            "basis_median_sum": base_total,
-            "delta_pct": round(100 * (cur_total - base_total) / base_total, 1),
-        }
-    except Exception as exc:  # missing/corrupt history: report, don't die
-        return {"basis_round": None, "error": str(exc)[:120]}
-
-
-def _block_basis(key: str) -> tuple[str | None, dict[str, float]]:
-    """Last committed per-query basis for a bench block (VERDICT r11 #1:
-    the emb_ann_ivfpq anomaly went undetected because secondary medians
-    were not reconciled round-over-round; r12 #1 extends the same
-    instrument to the iterative block, whose first-of-3 raw record let
-    emb_top_pc enter at 57 s against its own measured 5-8 s)."""
-    try:
-        rounds = _history_rounds()
-        for r in sorted(rounds, reverse=True):
-            basis = rounds[r].get(key)
-            if basis:
-                return r, basis
-    except Exception:
-        pass
-    return None, {}
-
-
-def _secondary_basis() -> tuple[str | None, dict[str, float]]:
-    return _block_basis("secondary_median")
-
-
-def _secondary_delta(
-    s_median: dict[str, float], basis_round: str | None,
-    basis: dict[str, float],
-) -> dict:
-    """Per-query secondary deltas vs the committed basis: the movers list
-    (>40% and >0.3 s absolute) is what the next verdict reads first."""
-    if not basis:
-        return {"basis_round": None}
-    movers = {}
-    for name, cur in s_median.items():
-        old = basis.get(name)
-        if old is None or old <= 0:
-            continue
-        delta = cur - old
-        if abs(delta) / old > 0.40 and abs(delta) > 0.3:
-            movers[name] = {"basis": old, "now": cur,
-                            "delta_pct": round(100 * delta / old, 1)}
-    return {"basis_round": basis_round, "movers": movers}
-
-
-def retime_child(out_path: str, names: list[str], full: bool = False) -> None:
-    """Re-adjudicate detected movers in a FRESH process (r12, extending
-    the r11 headline instrument): a 93-query single-JVM block
-    occasionally hits a degradation window (r12 protocol validation:
-    ev_interarrival timed [7.4, 20.4, 14.8] s in-block vs [1.6, 1.0,
-    0.8] s isolated minutes later, same code) — so any query whose
-    in-block median moves >40% and >0.3 s vs the committed basis gets
-    re-timed isolated and warm before the record is written.  ``full``
-    brackets construction too (iterative kernels materialize eagerly
-    inside fn(); timing only the write would miss almost all the
-    work)."""
-    from squirreldb_spark.queries import CATALOG
-    from squirreldb_spark.session import get_session
-
-    spark = get_session("squirreldb-spark-bench-retime")
-    spark.sparkContext.setLogLevel("ERROR")
-    _warm(spark, CATALOG)
-    _warm_plans(spark, CATALOG, names, reserve=90.0)
-    sent = _sentinel_gate(spark, CATALOG, out_path)
-    if sent is None:  # degraded child: parent respawns (VERDICT r13 #1)
-        return
-    timer = _time_reps_full if full else _time_reps
-    _, samples = timer(spark, CATALOG, names, reps=3, reserve=90.0)
-    _finish_child(spark, CATALOG, out_path, sent, {"samples": samples})
-
-
-def _retime_movers(
-    s_median: dict[str, float],
-    s_samples: dict[str, list[float]],
-    basis_round: str | None,
-    basis: dict[str, float],
-    mode: str = "--retime",
-) -> dict:
-    """Detect movers vs the committed basis, re-time them in a fresh
-    child process, and fold the adjudicated samples back into the
-    block's record.  Returns the movers report (first-pass + retimed
-    medians) for bench_detail.json.
-
-    VERDICT r12 #3: NO cap on how many movers get re-timed (the old
-    top-12 cap shipped 7 of 19 movers unadjudicated exactly when the
-    rig was noisiest).  Instead the child loops: after each fresh-child
-    pass, movers are re-detected against the adjudicated medians, and
-    queries still moving go into another fresh child — up to 3 passes,
-    so a genuine regression terminates with `standing_after_retime`
-    rather than looping forever."""
-    import tempfile
-
-    first = _secondary_delta(s_median, basis_round, basis)
-    if not (first.get("movers") or {}):
-        return first
-    movers: dict[str, dict] = {}
-    retimed_all: set[str] = set()
-    rig_reports: list[dict] = []
-    passes = 0
-    budget_stopped = False
-    for _pass in range(3):
-        current = _secondary_delta(s_median, basis_round, basis)
-        names = sorted(
-            (current.get("movers") or {}),
-            key=lambda n: -abs(current["movers"][n]["delta_pct"]))
-        if not names:
-            break
-        if _remaining() < 600.0:
-            # VERDICT r14 #1a: a degraded-rig block can flag half the
-            # catalog as movers; re-timing them all would overrun the
-            # driver budget.  Unadjudicated movers ship flagged instead.
-            _log(f"budget: skipping retime pass {_pass + 1} "
-                 f"({len(names)} movers unadjudicated, "
-                 f"{_remaining():.0f}s left)")
-            for n in names:
-                movers.setdefault(n, current["movers"][n])
-                movers[n]["unadjudicated_budget"] = True
-            budget_stopped = True
-            break
-        passes = _pass + 1
-        for n in names:
-            movers.setdefault(n, current["movers"][n])
-        with tempfile.NamedTemporaryFile(suffix=".json", delete=False) as tf:
-            path = tf.name
-        payload, rig = _run_sentinel_child(
-            [sys.executable, os.path.abspath(__file__), mode, path] + names,
-            path,
-        )
-        os.unlink(path)
-        rig_reports.append(rig)
-        retimed = payload.get("samples", {})
-        for name, runs in retimed.items():
-            movers[name].setdefault("first_pass_samples", s_samples[name])
-            s_samples[name] = runs
-            s_median[name] = round(_median(runs), 3)
-            movers[name]["retimed_median"] = s_median[name]
-            movers[name]["retime_passes"] = passes
-            if rig.get("rig_degraded"):
-                # Even the final (forced) child failed its sentinel: the
-                # sample is from a degraded rig, not the kernel
-                # (VERDICT r13 #1 — adjudicate, don't read as regression).
-                movers[name]["rig_degraded"] = True
-            old = basis.get(name)
-            if old:
-                movers[name]["delta_pct"] = round(
-                    100 * (s_median[name] - old) / old, 1)
-        retimed_all |= set(retimed)
-    residual = _secondary_delta(s_median, basis_round, basis)
-    for name in (residual.get("movers") or {}):
-        if not movers.get(name, {}).get("unadjudicated_budget"):
-            movers[name]["standing_after_retime"] = True
-    out = {"basis_round": basis_round, "movers": movers,
-           "retimed": sorted(retimed_all), "retime_passes": passes,
-           "sentinel": rig_reports}
-    if budget_stopped:
-        out["budget_stopped"] = True
-    return out
-
-
-def _qps_delta(qps: dict) -> dict:
-    """QPS vs the last committed per-round basis (VERDICT r12 flagged
-    the missing QPS basis: a 6.9 vs 9.1 round-over-round move had no
-    committed number to reconcile against).  Report-only — a 10 s
-    concurrent sample is too noisy for the retime machinery, but the
-    delta lets the verdict separate drift from the documented
-    end-of-run JVM-state noise class."""
-    try:
-        rounds = _history_rounds()
-        for r in sorted(rounds, reverse=True):
-            base = rounds[r].get("qps")
-            if base:
-                return {
-                    "basis_round": r,
-                    "basis": base,
-                    "delta_pct": {
-                        k: round(100 * (qps[k]["qps"] - base[k]) / base[k], 1)
-                        for k in qps
-                        if base.get(k)
-                    },
-                }
-    except Exception:
-        pass
-    return {"basis_round": None}
-
-
 def qps_bench(spark, CATALOG) -> dict:
-    """Concurrent-querier throughput, mirroring the reference's SECOND
+    """Concurrent-querier throughput, mirroring the reference's second
     bench harness (tests/squirreldb-promql-bench/main.go:159-174: an
     instant query and an optional 1 h query_range, 10 parallel queriers,
     10 s run — the reference publishes the harness, not numbers).  Each
     worker loops the full API path (parse → plan → execute, a fresh
     DataFrame per request, like a real request handler); Spark schedules
-    the concurrent jobs across the local[N] cores.  Reported as QPS in
-    the final line; per-mode counts in bench_detail.json."""
+    the concurrent jobs across the local[N] cores.  It runs right after
+    the headline block: at the end of a long process it under-read."""
     import concurrent.futures
 
     out = {}
@@ -995,77 +401,59 @@ def qps_bench(spark, CATALOG) -> dict:
     return out
 
 
-def qps_child(out_path: str) -> None:
-    """VERDICT r13 #3: the in-block QPS record, measured at the very END
-    of the ~90-minute bench process, under-read 17-33% vs its own
-    same-day fresh-process basis (end-of-run JVM state, the documented
-    noise class).  The QPS harness therefore now runs in its own fresh
-    child like the headline block, gated by the same degraded-child
-    sentinel."""
-    from squirreldb_spark.queries import CATALOG
-    from squirreldb_spark.session import get_session
+def _compose_line(timings, t_median, t_min, ingest, qps, sf,
+                  skipped: list[str], failed: bool = False) -> str:
+    """The compact one-line record the driver parses; detail lives in
+    bench_detail.json and the preceding {"detail": ...} line.
 
-    spark = get_session("squirreldb-spark-bench-qps")
-    spark.sparkContext.setLogLevel("ERROR")
-    _warm(spark, CATALOG)
-    sent = _sentinel_gate(spark, CATALOG, out_path)
-    if sent is None:  # degraded child: parent respawns (VERDICT r13 #1)
-        return
-    qps = qps_bench(spark, CATALOG)
-    _finish_child(spark, CATALOG, out_path, sent, {"qps": qps})
+    A headline block with no timings, or with a query that failed, has
+    no total: ``value`` is null and ``headline_failed`` is true.  A line
+    of ``LINE_MAX`` chars or more is trimmed, loudly, until it fits:
+    ingest detail first, then ``qps``, then ``value_min`` and
+    ``value_median``, then the tail of ``queries`` (the key survives)."""
+    failed = failed or not timings
 
+    def total(d: dict) -> float | None:
+        return None if failed else round(sum(d.values()), 3)
 
-def _compose_line(timings, t_median, t_min, ingest, qps, basis, sf,
-                  skipped: list[str]) -> str:
-    """The compact one-line record the driver parses.  Round-5's single
-    enriched line outgrew the driver's tail capture (BENCH_r05 parsed:
-    null); the final line carries ONLY the headline + per-query dict +
-    ingest + qps + sf — detail lives in bench_detail.json and the
-    preceding {"detail": ...} line.  The headline numbers keep the frozen
-    basis (best-of-first-2, warm cache, 48g) — comparable to BENCH_r03+;
-    value_median (median-of-5 per query, summed) prints alongside per the
-    frozen-basis rule."""
     out = {
         "metric": "headline_queries_total_wall",
-        "value": round(sum(timings.values()), 3),
-        "value_median": round(sum(t_median.values()), 3),
-        "value_min": round(sum(t_min.values()), 3),
+        "value": total(timings),
+        "value_median": total(t_median),
+        "value_min": total(t_min),
         "unit": "sec",
         "queries": timings,
         "ingest": ingest,
         "qps": {k: v["qps"] for k, v in qps.items()},
-        "basis": basis,
         "sf": sf,
     }
+    if failed:
+        out["headline_failed"] = True
     if skipped:
         out["budget_skipped"] = skipped
+    trims = [
+        lambda: out.update(ingest={k: v for k, v in ingest.items()
+                                   if k == "samples_per_s"}),
+        lambda: out.pop("qps"),
+        lambda: (out.pop("value_min"), out.pop("value_median")),
+    ]
     line = json.dumps(out)
-    if len(line) >= 1800:
-        # VERDICT r9 #1: the driver tail-captures 2000 chars; an oversized
-        # line ships trimmed rather than unparseable (loud on stderr).
-        _log(f"WARNING: final line {len(line)} chars >= 1800; "
-             "dropping basis/ingest detail from the line")
-        out.pop("basis", None)
-        out["ingest"] = {k: v for k, v in out.get("ingest", {}).items()
-                         if k == "samples_per_s"}
+    if len(line) >= LINE_MAX:
+        _log(f"WARNING: final line {len(line)} chars >= {LINE_MAX}; trimming")
+    while len(line) >= LINE_MAX and (trims or len(out["queries"]) > 1):
+        if trims:
+            trims.pop(0)()
+        else:
+            out["queries"] = dict(list(out["queries"].items())[:-1])
+            out["queries_trimmed"] = len(timings) - len(out["queries"])
         line = json.dumps(out)
     return line
 
 
 def main() -> None:
-    import tempfile
-
-    # Run-wide deadline + calibrated sentinel basis, exported so children
-    # share them (VERDICT r14 #1a/#1d); last-gasp signal emitter (#1b).
-    os.environ.setdefault(
-        "SPARK_GRAFT_BENCH_DEADLINE", str(time.time() + BENCH_BUDGET))
-    os.environ.setdefault(
-        "SPARK_GRAFT_SENTINEL_BASIS", str(_effective_sentinel_basis()))
     signal.signal(signal.SIGTERM, _on_signal)
     signal.signal(signal.SIGINT, _on_signal)
-    _log(f"deadline in {_remaining():.0f}s; sentinel basis "
-         f"{os.environ['SPARK_GRAFT_SENTINEL_BASIS']}s (committed "
-         f"{SENTINEL_BASIS}s); run-wide respawn budget {RESPAWN_BUDGET}")
+    _log(f"budget {BENCH_BUDGET:.0f}s at {SF_DIR}")
 
     sf_raw = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -1073,174 +461,91 @@ def main() -> None:
     except ValueError:
         sf = None  # non-sfN directory name: still print the timings
     skipped: list[str] = []
+    ingest: dict = {}
+    qps: dict = {}
 
-    # Phase 1: headline block in a fresh, dedicated process (see
-    # headline_child).  The child inherits SPARK_GRAFT_* env.
-    _log("phase 1: headline child")
-    with tempfile.NamedTemporaryFile(suffix=".json", delete=False) as tf:
-        headline_path = tf.name
-    head, head_rig = _run_sentinel_child(
-        [sys.executable, os.path.abspath(__file__), "--headline",
-         headline_path],
-        headline_path, est_sec=420.0,
-    )
-    if os.path.exists(headline_path):
-        os.unlink(headline_path)
-    timings = head.get("timings") or {}
-    t_samples = head.get("samples") or {}
-    t_median = head.get("median") or {}
-    t_spread = head.get("spread") or {}
-    t_min = head.get("min") or {}
-    basis = _basis_delta(t_median)
-
-    detail = {
-        "queries_median": t_median,
-        "queries_min": t_min,
-        "queries_samples": t_samples,
-        "queries_rel_spread": t_spread,
-        "buff_cache_gb_cold": head.get("buff_cache_gb_cold"),
-        "buff_cache_gb_headline_pre": head.get("buff_cache_gb_pre"),
-        "basis": basis,
-        "headline_sentinel": head_rig,
-    }
-    _EMIT["detail"] = detail
-
-    def _refresh_line(ingest: dict, qps: dict) -> str:
-        line = _compose_line(timings, t_median, t_min, ingest, qps,
-                             basis, sf, skipped)
-        _EMIT["line"] = line
-        _flush_state()
-        return line
-
-    # VERDICT r14 #1b: the headline line prints the moment it exists —
-    # the enriched copy re-prints as the LAST line on normal completion,
-    # and the signal handler re-prints the freshest copy on a kill.
-    print(_refresh_line({}, {}), flush=True)
-    _log(f"headline done: total {sum(timings.values()):.2f}s "
-         f"({len(timings)} queries)")
-
-    # Phase 2: secondary + iterative + ingest in this process.
     from squirreldb_spark.queries import CATALOG
     from squirreldb_spark.session import get_session
 
     spark = get_session("squirreldb-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    detail: dict = {"buff_cache_gb_cold": _buff_cache_gb(), "errors": _ERRORS}
+    _EMIT["detail"] = detail
+
+    _log("headline block")
     _warm(spark, CATALOG)
-    # Protocol r12 (VERDICT r11 #1): every secondary plan is warmed at
-    # sf0.001 before any timed rep, and the top-10 secondary queries by
-    # committed-basis cost get 5 reps (3 otherwise) so their medians are
-    # adjudicable against their own spread.
-    _log("phase 2: secondary block")
-    _warm_plans(spark, CATALOG, SECONDARY_QUERIES, reserve=360.0)
-    sec_basis_round, sec_basis = _secondary_basis()
-    by_cost = sorted(
-        SECONDARY_QUERIES,
-        key=lambda n: sec_basis.get(n, 0.0), reverse=True)
-    extra = {n: 2 for n in by_cost[:10] if sec_basis.get(n)}
-    buff_cache_pre = _buff_cache_gb()
-    secondary, s_samples = _time_reps(
-        spark, CATALOG, SECONDARY_QUERIES, 3, extra_reps=extra,
-        reserve=360.0)
-    s_median, s_spread = _stats(s_samples)
-    missing = [n for n in SECONDARY_QUERIES if n not in s_samples]
-    if missing:
-        skipped.append(f"secondary:{len(missing)}")
-        detail["secondary_budget_truncated"] = missing
-    detail.update({"secondary_median": s_median, "secondary": secondary,
-                   "secondary_samples": s_samples,
-                   "buff_cache_gb_pre": buff_cache_pre})
-    _refresh_line({}, {})
-    sec_report = _retime_movers(s_median, s_samples, sec_basis_round,
-                                sec_basis)
-    _, s_spread = _stats(s_samples)  # spreads over the adjudicated samples
-    detail.update({"secondary_rel_spread": s_spread,
-                   "secondary_basis": sec_report})
-    _refresh_line({}, {})
+    _warm_plans(spark, CATALOG, BENCH_QUERIES)
+    detail["buff_cache_gb_pre"] = _buff_cache_gb()
+    timings, t_samples = _time_reps(spark, CATALOG, BENCH_QUERIES, reps=5)
+    t_median, t_spread = _stats(t_samples)
+    t_min = {n: min(s) for n, s in t_samples.items()}
+    failed = any(n in _ERRORS for n in BENCH_QUERIES)
+    detail.update({
+        "queries_median": t_median,
+        "queries_min": t_min,
+        "queries_samples": t_samples,
+        "queries_rel_spread": t_spread,
+    })
 
-    # Iterative block, instrumented like the secondary one (VERDICT r12
-    # #1 — the last uninstrumented block: its first-of-3 raw record let
-    # emb_top_pc enter at 57.25 s [57.25, 32.50, 4.35] against its own
-    # measured 5-8 s, the per-plan codegen premium the other two blocks
-    # already adjudicate away).  Plans warm at sf0.001, the record is
-    # the MEDIAN of 3 full-bracket reps, movers vs the committed
-    # `iterative_median` basis re-time in a fresh child (--retime-iter,
-    # which also brackets construction).
-    i_samples: dict[str, list[float]] = {}
-    it_report: dict = {}
-    if _remaining() > 420.0:
-        _log("phase 3: iterative block")
-        _warm_plans(spark, CATALOG, ITERATIVE_QUERIES, reserve=240.0)
-        it_basis_round, it_basis = _block_basis("iterative_median")
-        _, i_samples = _time_reps_full(spark, CATALOG, ITERATIVE_QUERIES, 3,
-                                       reserve=240.0)
-        i_median, _ = _stats(i_samples)
-        it_report = _retime_movers(i_median, i_samples, it_basis_round,
-                                   it_basis, mode="--retime-iter")
+    def refresh() -> str:
+        line = _compose_line(timings, t_median, t_min, ingest, qps, sf,
+                             skipped, failed)
+        _EMIT["line"] = line
+        _flush_state()
+        return line
+
+    # the headline line prints the moment it exists; the enriched copy
+    # re-prints as the last line, or from the signal handler on a kill
+    print(refresh(), flush=True)
+    _log(f"headline done: total {sum(timings.values()):.2f}s "
+         f"({len(timings)} queries)")
+
+    if _remaining() > QPS_RESERVE:
+        _log("qps block")
+        qps = qps_bench(spark, CATALOG)
+        detail["qps_detail"] = qps
     else:
-        _log(f"budget: skipping iterative block ({_remaining():.0f}s left)")
-        skipped.append("iterative")
-        i_median = {}
-    _, i_spread = _stats(i_samples)
-    iterative = dict(i_median)
-    detail.update({"iterative_samples": i_samples,
-                   "iterative_median": i_median,
-                   "iterative_rel_spread": i_spread,
-                   "iterative_basis": it_report, "iterative": iterative})
-    _refresh_line({}, {})
+        skipped.append("qps")
+    refresh()
 
-    if _remaining() > 300.0:
-        _log("phase 4: ingest bench")
+    def block(key: str, names: list[str], reps: int, reserve: float,
+              full: bool = False) -> None:
+        _warm_plans(spark, CATALOG, names, reserve=reserve)
+        best, samples = _time_reps(spark, CATALOG, names, reps, full=full,
+                                   reserve=reserve)
+        med, spread = _stats(samples)
+        missing = [n for n in names if n not in samples and n not in _ERRORS]
+        if missing:
+            skipped.append(f"{key}:{len(missing)}")
+            detail[f"{key}_budget_truncated"] = missing
+        detail.update({key: best, f"{key}_median": med,
+                       f"{key}_samples": samples,
+                       f"{key}_rel_spread": spread})
+        refresh()
+
+    _log("secondary block")
+    block("secondary", SECONDARY_QUERIES, 3, SECONDARY_RESERVE)
+    if _remaining() > ITERATIVE_START:
+        _log("iterative block")
+        block("iterative", ITERATIVE_QUERIES, 3, ITERATIVE_RESERVE, full=True)
+    else:
+        skipped.append("iterative")
+        detail["iterative_median"] = {}  # tools/update_bench_history.py
+    if _remaining() > INGEST_RESERVE:
+        _log("ingest block")
         ingest = ingest_bench(spark)
         detail["ingest_runs_sec"] = ingest.pop("runs_sec")
         detail["ingest_rel_spread"] = ingest.pop("rel_spread")
     else:
-        _log(f"budget: skipping ingest ({_remaining():.0f}s left)")
         skipped.append("ingest")
         ingest = {"skipped": "budget"}
-    _refresh_line(ingest, {})
-
-    # QPS in a fresh, sentinel-gated child (VERDICT r13 #3 — see
-    # qps_child); the parent respawns a child whose sentinel reads
-    # degraded, bounded, and flags `rig_degraded` on the final record.
-    qps: dict = {}
-    qps_rig: dict = {}
-    if _remaining() > 360.0:
-        _log("phase 5: qps child")
-        with tempfile.NamedTemporaryFile(suffix=".json", delete=False) as tf:
-            qps_path = tf.name
-        qps_payload, qps_rig = _run_sentinel_child(
-            [sys.executable, os.path.abspath(__file__), "--qps", qps_path],
-            qps_path, est_sec=240.0,
-        )
-        if os.path.exists(qps_path):
-            os.unlink(qps_path)
-        qps = qps_payload.get("qps", {})
-    else:
-        _log(f"budget: skipping qps ({_remaining():.0f}s left)")
-        skipped.append("qps")
-
-    detail.update({
-        "buff_cache_gb_post": _buff_cache_gb(),
-        "qps_detail": qps,
-        "qps_basis": _qps_delta(qps),
-        "qps_sentinel": qps_rig,
-    })
-    line = _refresh_line(ingest, qps)
+    detail["buff_cache_gb_post"] = _buff_cache_gb()
+    line = refresh()
     _log(f"done with {_remaining():.0f}s to spare"
          + (f"; budget-skipped: {skipped}" if skipped else ""))
-    # the one-line record is the LAST output — the driver tail-parses it
     print(json.dumps({"detail": detail}))
     print(line, flush=True)
 
 
 if __name__ == "__main__":
-    if len(sys.argv) >= 3 and sys.argv[1] == "--headline":
-        headline_child(sys.argv[2])
-    elif len(sys.argv) >= 4 and sys.argv[1] == "--retime":
-        retime_child(sys.argv[2], sys.argv[3:])
-    elif len(sys.argv) >= 4 and sys.argv[1] == "--retime-iter":
-        retime_child(sys.argv[2], sys.argv[3:], full=True)
-    elif len(sys.argv) >= 3 and sys.argv[1] == "--qps":
-        qps_child(sys.argv[2])
-    else:
-        main()
+    main()

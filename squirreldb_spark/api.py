@@ -46,8 +46,22 @@ MIN_TS_MS = 0
 MAX_TS_MS = 32_503_680_000_000
 
 
+#: Most rows a query response renders; more is a LimitExceeded (422),
+#: never a silently partial answer.
+RESULT_LIMIT = 10_000
+
+
 class LimitExceeded(Exception):
     """A24/A25-style guard tripped (max_evaluated_series / points)."""
+
+
+def collect_at_most(df: DataFrame, limit: int, what: str) -> list:
+    """Collect at most ``limit`` rows; a larger result raises
+    :class:`LimitExceeded` (422 over HTTP) instead of being cut."""
+    rows = df.limit(limit + 1).collect()
+    if len(rows) > limit:
+        raise LimitExceeded(f"more than {limit} {what}")
+    return rows
 
 
 class QueryTimeout(Exception):
@@ -387,15 +401,10 @@ class PromAPI:
         buf = body if decompressed else codec.snappy_decompress(body)
         results: list[list[codec.TimeSeries]] = []
         for q in codec.decode_read_request(buf):
-            rows = (
-                self._read_query_slice(q, opts).orderBy("_lbl", "ts")
-                .limit(limit + 1).collect()
+            rows = collect_at_most(
+                self._read_query_slice(q, opts).orderBy("_lbl", "ts"), limit,
+                "samples in a remote read; negotiate STREAMED_XOR_CHUNKS",
             )
-            if len(rows) > limit:
-                raise LimitExceeded(
-                    f"remote read matched more than {limit} samples; "
-                    "negotiate STREAMED_XOR_CHUNKS"
-                )
             by_series: dict[str, codec.TimeSeries] = {}
             for r in rows:
                 ts = by_series.get(r["_lbl"])
@@ -484,10 +493,10 @@ class PromAPI:
 
     # --------------------------------------------------------- serialization
 
-    def format_vector(self, df: DataFrame, limit: int = 10_000) -> dict:
+    def format_vector(self, df: DataFrame) -> dict:
         """Render an instant-query result as the Prometheus JSON body
         (``resultType: vector`` — one sample per series)."""
-        rows = df.limit(limit).collect()
+        rows = collect_at_most(df, RESULT_LIMIT, "samples in the result")
         label_names = [c for c in df.columns if c not in ("step_ts", "value")]
         result = [
             {
@@ -501,13 +510,13 @@ class PromAPI:
             "data": {"resultType": "vector", "result": result},
         }
 
-    def format_matrix(self, df: DataFrame, limit: int = 10_000) -> dict:
+    def format_matrix(self, df: DataFrame) -> dict:
         """Render a query_range result as the Prometheus JSON body.
 
-        Driver-side by construction (an API response IS a collect); ``limit``
-        bounds the rows pulled to the driver.
+        Driver-side by construction (an API response IS a collect) of at
+        most :data:`RESULT_LIMIT` rows.
         """
-        rows = df.limit(limit).collect()
+        rows = collect_at_most(df, RESULT_LIMIT, "samples in the result")
         series: dict[tuple, dict] = {}
         label_names = [c for c in df.columns if c not in ("step_ts", "value")]
         for r in rows:

@@ -22,7 +22,7 @@ tests/test_http_api.py). One ``PromAPI`` over that relation serves the
 query and its JSON formatting. Write requests only append to the buffer;
 they build nothing. The tenant header injects the tenant as a label at
 write and filters it on every read — queries, /series, label lookups,
-remote read and the matcher dump — mirroring the reference's
+remote read and the index dumps — mirroring the reference's
 __account_id flow (api/remotestorage/write.go:80-170,
 api/promql/queryable.go:153-165).
 
@@ -53,6 +53,7 @@ from squirreldb_spark.api import (
     PromAPI,
     QueryTimeout,
     RequestOptions,
+    collect_at_most,
     run_with_timeout,
 )
 from squirreldb_spark.model import series_json
@@ -61,7 +62,8 @@ from squirreldb_spark.streaming.ingest import partition_date
 #: reference api/api.go: decoded request bodies are size-limited
 MAX_BODY_BYTES = 32 << 20
 
-#: most series one /api/v1/series or /debug/index_dump_by_labels answers
+#: most series one /api/v1/series or /debug/index_dump* answers; more
+#: is a LimitExceeded (422)
 SERIES_LIMIT = 10_000
 
 _WRITE_SCHEMA = "labels map<string,string>, ts long, value double, ttl_s long"
@@ -173,12 +175,19 @@ def _match_series(api: PromAPI, params: dict,
     df = functools.reduce(DataFrame.unionByName, [
         api.series(m, start, end, opts) for m in params.get("match[]", ["{}"])
     ]).distinct()
-    rows = df.limit(SERIES_LIMIT + 1).collect()
-    if len(rows) > SERIES_LIMIT:
-        raise LimitExceeded(f"more than {SERIES_LIMIT} series match")
+    rows = collect_at_most(df, SERIES_LIMIT, "series match")
     if "series" in df.columns:
         return [r["series"] for r in rows]
     return [_canonical_series_json(r.asDict()) for r in rows]
+
+
+def _dump_series(points: DataFrame) -> bytes:
+    """The index dump CSV of every series in a map-labelled relation."""
+    rows = collect_at_most(
+        points.select(series_json(F.col("labels")).alias("s")).distinct(),
+        SERIES_LIMIT, "series match",
+    )
+    return _dump_csv(r["s"] for r in rows)
 
 
 def _dump_csv(series_jsons) -> bytes:
@@ -814,13 +823,9 @@ class PromHTTPServer:
             if path == "/debug/index_dump":
                 # A40: full id -> labels dump as CSV lines, like the
                 # reference IndexDumper.Dump (cassandra/index/verify.go)
-                rows = (
-                    api().points
-                    .select(series_json(F.col("labels")).alias("s"))
-                    .distinct().limit(10_000).collect()
-                )
                 self._send_bytes(
-                    handler, 200, _dump_csv(r["s"] for r in rows),
+                    handler, 200,
+                    _dump_series(api()._scoped(self._opts(handler))),
                     content_type="text/csv; charset=utf-8", encoding=None,
                 )
                 return
@@ -875,14 +880,12 @@ class PromHTTPServer:
                 )
                 lo = int(day.timestamp() * 1000)
                 hi = lo + 86_400_000
-                rows = (
-                    api().points
-                    .filter((F.col("ts") >= lo) & (F.col("ts") < hi))
-                    .select(series_json(F.col("labels")).alias("s"))
-                    .distinct().limit(10_000).collect()
-                )
+                points = api()._scoped(self._opts(handler))
                 self._send_bytes(
-                    handler, 200, _dump_csv(r["s"] for r in rows),
+                    handler, 200,
+                    _dump_series(points.filter(
+                        (F.col("ts") >= lo) & (F.col("ts") < hi)
+                    )),
                     content_type="text/csv; charset=utf-8", encoding=None,
                 )
                 return

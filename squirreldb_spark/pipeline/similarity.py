@@ -56,7 +56,7 @@ def _to_double(col: str) -> str:
 #: experiment replaced every 64-element fold with an unrolled
 #: ``(0 + a0*b0) + a1*b1 + ...`` chain behind a ``size() = 64`` guard
 #: (HOFs are CodegenFallback, guide §4.1, so this looked like a win on
-#: paper).  Measured with bench.py --retime at sf0.1 it was a large NET
+#: paper).  Measured in isolated bench re-times at sf0.1 it was a large NET
 #: LOSS: the guarded form more than doubles every expression tree, the
 #: pair-join stages (with_cosine over candidate pairs, the per-centroid
 #: score array) blew janino's 64 KB method limit ("Code grows beyond

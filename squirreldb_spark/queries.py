@@ -4676,6 +4676,10 @@ _VERIFY_FIRST: list[str] = [
     "emb_knn_purity",
     "emb_knn_reciprocity",
     "emb_top_pc",
+    # ts_set_or: `or` is one windowed pass over both sides instead of a
+    # persisted left side plus an anti-join (it displaced ts_tenant_filter,
+    # the last entry of the attested backfill below)
+    "ts_set_or",
     # --- (2) r6-era backfill: the ENTIRE remaining r6 cohort (VERDICT
     # r12 order #4 — after this window no catalog row's newest
     # attestation predates r8; the 49-row r8 cohort rolls to r14) ---
@@ -4717,7 +4721,6 @@ _VERIFY_FIRST: list[str] = [
     "ts_retention",
     "ts_series_interning",
     "ts_stitch_preagg_raw",
-    "ts_tenant_filter",
 ]
 
 

@@ -13,7 +13,9 @@ import os
 from pyspark.sql import SparkSession
 
 #: Dynamic confs applied to every session (ours or driver-provided).
-#: These are deliberately all runtime-settable SQLConf entries.
+#: These are deliberately all runtime-settable SQLConf entries.  A change
+#: here reaches every query, so it needs the full test tier
+#: (``pytest -m "slow or not slow"``), not only the default one.
 _DYNAMIC_CONFS: dict[str, str] = {
     # testdata parquet uses INT64 TIMESTAMP(NANOS) which vanilla Spark
     # rejects; read them as raw nanosecond longs and convert explicitly.

@@ -6,7 +6,7 @@ return 0/1; the set operators are semi/anti joins:
 
   and    -> left semi join on match labels
   unless -> left anti join
-  or     -> left ∪ (right anti left)
+  or     -> left ∪ right rows whose keys no left row has (one window)
 
 These join shapes are exactly what Catalyst optimizes best — the match-label
 join is a shuffled hash join (or broadcast when one side is a small
@@ -15,9 +15,11 @@ sub-expression), and AQE picks the strategy at runtime from observed sizes.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 def _ieee_div(l, r):
@@ -150,14 +152,18 @@ def set_op(left: DataFrame, right: DataFrame, on: Sequence[str], op: str) -> Dat
         for c in left.columns:
             if c not in right.columns and c not in meta:
                 right = right.withColumn(c, F.lit(""))
-        # r14: persisted — `or` is the one set op that references a side
-        # twice (the union output AND the anti-join key set), and
-        # task-level input metrics showed both references re-evaluating
-        # the whole left selector subtree (grid + lookback + scans).
-        # The pinned table is the evaluated left VECTOR (labels +
-        # step_ts + value, grid-bounded), materialized inside the query.
-        left = left.persist()
-        lk = left.select(*keys).distinct()
-        extra = right.join(lk, on=keys, how="left_anti")
-        return left.unionByName(extra.select(*left.columns))
+        # one pass over each side: tag the rows by side and keep a right
+        # row only when no left row shares its match keys and step. A
+        # null key matches nothing, as in an anti-join.
+        tagged = left.withColumn("_side", F.lit(0)).unionByName(
+            right.select(*left.columns).withColumn("_side", F.lit(1))
+        ).withColumn(
+            "_no_left", F.min("_side").over(Window.partitionBy(*keys)) == 1
+        )
+        null_key = functools.reduce(
+            lambda a, b: a | b, [F.col(k).isNull() for k in keys]
+        )
+        return tagged.filter(
+            (F.col("_side") == 0) | F.col("_no_left") | null_key
+        ).drop("_side", "_no_left")
     raise ValueError(op)

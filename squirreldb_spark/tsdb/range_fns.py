@@ -236,9 +236,11 @@ def over_time(
 ) -> DataFrame:
     """`<fn>_over_time(m[range])` — grouped aggregate over the range vector.
 
-    ``quantile_over_time`` uses Spark's exact ``percentile`` (linear
-    interpolation, matching PromQL's quantile; SURVEY §2B flags
-    percentile_approx as unacceptable).
+    ``quantile_over_time`` collects each window's values
+    (``collect_list``) and applies ``prom_quantile_expr``: upstream's
+    exact linear-interpolation quantile, NaN sorting first. Spark's
+    ``percentile`` sorts NaN last, and SURVEY §2B flags
+    percentile_approx as unacceptable.
     """
     keys = list(keys)
     rs = range_select(points, keys, step_ms, range_ms, grid=grid)

@@ -610,9 +610,10 @@ def test_debug_mutable_dump(base, written):
     assert entries and entries[0]["associated_values"] == ["a", "b"]
 
 
-def _get_raw(url: str) -> tuple[int, bytes]:
+def _get_raw(url: str, headers: dict | None = None) -> tuple[int, bytes]:
+    req = urllib.request.Request(url, headers=headers or {})
     try:
-        with urllib.request.urlopen(url) as resp:
+        with urllib.request.urlopen(req) as resp:
             return resp.status, resp.read()
     except urllib.error.HTTPError as ex:
         return ex.code, ex.read()
@@ -1008,3 +1009,75 @@ def test_series_over_partitioned_history_prunes_dates(spark, tmp_path):
         assert not seg.startswith("]") and "date" in seg[:seg.index("]")], plan
     finally:
         srv.stop()
+
+
+def test_or_queries_leave_no_cached_tables(spark, base, written):
+    """`or` reads its sides once, with no persist: N `or` queries through
+    the daemon leave the cache manager empty after every response."""
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    q = urllib.parse.quote(
+        'http_requests_total{inst="a"} or http_requests_total{inst="b"}'
+    )
+    for _ in range(3):
+        status, out = _get(
+            f"{base}/api/v1/query_range?query={q}&start=0&end=130&step=60",
+            {"X-SquirrelDB-Tenant": "t0"},
+        )
+        assert status == 200
+        assert {e["metric"]["inst"] for e in out["data"]["result"]} == {
+            "a", "b"}
+        assert cache.isEmpty()
+
+
+def test_debug_index_dump_is_tenant_scoped(base, written):
+    status, body = _get_raw(f"{base}/debug/index_dump",
+                            {"X-SquirrelDB-Tenant": "t0"})
+    lines = body.decode().splitlines()
+    assert status == 200 and len(lines) >= 2
+    assert all(json.loads(l.split(",", 1)[1])["__account_id"] == "t0"
+               for l in lines)
+    for path in ("/debug/index_dump", "/debug/index_dump_by_shard?date=1970-01-01"):
+        status, body = _get_raw(f"{base}{path}",
+                                {"X-SquirrelDB-Tenant": "other"})
+        assert status == 200 and body == b""
+
+
+@pytest.fixture(scope="module")
+def many_base(spark):
+    """A daemon holding 10,001 one-sample series: one past every cap."""
+    srv = PromHTTPServer(spark).start()
+    b = f"http://127.0.0.1:{srv.port}"
+    series = [
+        codec.TimeSeries(labels={"__name__": "many", "i": str(i)},
+                         samples=[codec.Sample(1.0, 1_000)])
+        for i in range(10_001)
+    ]
+    status, _ = _post(
+        f"{b}/api/v1/write", codec.encode_remote_write_body(series),
+        {"Content-Encoding": "snappy",
+         "Content-Type": "application/x-protobuf"},
+    )
+    assert status == 204
+    yield b
+    srv.stop()
+
+
+def test_query_result_past_limit_is_rejected(many_base):
+    """A result past 10,000 rows is a 422, not an arbitrary subset."""
+    status, out = _get(f"{many_base}/api/v1/query?query=many&time=2")
+    assert status == 422 and out["errorType"] == "execution"
+    status, out = _get(
+        f"{many_base}/api/v1/query_range?query=many&start=2&end=2&step=60")
+    assert status == 422 and out["errorType"] == "execution"
+    # one series fewer is answered whole
+    q = urllib.parse.quote('many{i!="0"}')
+    status, out = _get(f"{many_base}/api/v1/query?query={q}&time=2")
+    assert status == 200 and len(out["data"]["result"]) == 10_000
+
+
+def test_debug_index_dump_past_limit_is_rejected(many_base):
+    for path in ("/debug/index_dump", "/debug/index_dump_by_shard?date=1970-01-01"):
+        status, out = _get(f"{many_base}{path}")
+        assert status == 422 and out["errorType"] == "execution"
+
