@@ -3,17 +3,19 @@
 
 One process, one Spark session, these blocks in order:
 
-1. warm-up, then the headline block: every plan warmed at sf0.001, then
-   5 reps per query;
+1. warm-up, then the headline block: 5 reps per query;
 2. the QPS harness (concurrent API queriers);
 3. the secondary block, the iterative block and the ingest bench.
 
-Each query is forced end-to-end with a noop-format write (full
-computation, no driver collect overhead); construction stays outside the
-timer except in the iterative block, whose kernels materialize inside
-``fn()``.  ``$SPARK_GRAFT_BENCH_BUDGET`` (seconds, default 3600) bounds
-the run: the headline block always completes, and a later block that
-does not fit is skipped and named in ``budget_skipped``.
+Each query's plan is warmed once at sf0.001 right before its own reps.
+Every warm and every rep runs in its own pin scope: it rebuilds the
+builder's pins and releases them after its timer stops.  Each query is
+forced end-to-end with a noop-format write (full computation, no driver
+collect overhead); construction stays outside the timer except in the
+iterative block, whose kernels materialize inside ``fn()``.
+``$SPARK_GRAFT_BENCH_BUDGET`` (seconds, default 3600) bounds the run:
+the headline block always completes, and a later block that does not
+fit is skipped and named in ``budget_skipped``.
 
 Prints a ``{"detail": ...}`` line, then ONE final JSON line (the last
 stdout line):
@@ -34,6 +36,12 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+#: plan warm-ups run on the sf0.001 set beside SF_DIR (SF_DIR itself
+#: when there is none)
+WARM_SF_DIR = os.path.join(os.path.dirname(os.path.normpath(SF_DIR)),
+                           "sf0.001")
+if not os.path.isdir(WARM_SF_DIR):
+    WARM_SF_DIR = SF_DIR
 BENCH_BUDGET = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "3600"))
 _T0 = time.monotonic()
 #: the driver tail-captures 2000 chars of output
@@ -270,7 +278,7 @@ def _warm(spark, CATALOG) -> None:
     import glob
 
     for warm in ("ts_rate", "ts_quantile_over_time"):
-        CATALOG[warm].fn(spark, "/root/testdata/sf0.001").write.format(
+        CATALOG[warm].fn(spark, WARM_SF_DIR).write.format(
             "noop"
         ).mode("overwrite").save()
     for f in glob.glob(os.path.join(SF_DIR, "*.parquet")):
@@ -281,15 +289,19 @@ def _warm(spark, CATALOG) -> None:
                 pass
 
 
-def _release_pins() -> int:
-    """Drain the builders' scoped persists.  Called outside every timed
-    region (after a query's last rep, after a warm-up), so no timed rep's
-    warm-cache state changes within its own query."""
-    try:
-        from squirreldb_spark.pipeline._pins import release_pins
-        return release_pins()
-    except Exception:
-        return 0
+def _run_once(spark, CATALOG, name: str, sf_dir: str, full: bool) -> float:
+    """One noop write of ``name`` at ``sf_dir`` inside its own pin scope;
+    returns its seconds.  The timer stops before the scope releases the
+    builder's pins, so every rep rebuilds them and none is timed."""
+    from squirreldb_spark.pipeline._pins import pin_scope
+
+    with pin_scope():
+        t0 = time.perf_counter()
+        df = CATALOG[name].fn(spark, sf_dir)
+        if not full:
+            t0 = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
 
 
 def _time_reps(
@@ -297,15 +309,18 @@ def _time_reps(
     full: bool = False,
     reserve: float | None = None,
 ) -> tuple[dict[str, float], dict[str, list[float]]]:
-    """Time ``reps`` noop writes per query.  Returns (best of the first
-    two reps, every sample): a single sample conflates GC pauses and
-    stage-scheduling jitter with plan cost, and the full list lets
-    median/min/spread be read against the query's own variance.
+    """Time ``reps`` noop writes per query, each right after one untimed
+    warm of the same plan at sf0.001 (a first rep otherwise pays a
+    1.5-3x compilation/codegen premium; a query service is plan-warm).
+    Returns (best of the first two reps, every sample): a single sample
+    conflates GC pauses and stage-scheduling jitter with plan cost, and
+    the full list lets median/min/spread be read against the query's own
+    variance.
 
     ``full`` brackets construction too.  ``reserve`` stops the block
-    between queries once fewer seconds than that are left (the headline
-    passes None: it must complete).  A query that raises is logged, kept
-    in ``_ERRORS`` and left out of the result."""
+    before a query's warm once fewer seconds than that are left (the
+    headline passes None: it must complete).  A query that raises is
+    logged, kept in ``_ERRORS`` and left out of the result."""
     best: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
     for name in names:
@@ -313,43 +328,17 @@ def _time_reps(
             _log(f"budget: truncating block before {name!r} "
                  f"({_remaining():.0f}s left, reserve {reserve:.0f}s)")
             break
-        runs: list[float] = []
         try:
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                df = CATALOG[name].fn(spark, SF_DIR)
-                if not full:
-                    t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
+            _run_once(spark, CATALOG, name, WARM_SF_DIR, full)
+            runs = [_run_once(spark, CATALOG, name, SF_DIR, full)
+                    for _ in range(reps)]
         except Exception as exc:
             _log(f"{name} failed: {exc!r:.300}")
             _ERRORS[name] = f"{exc!r:.200}"
         else:
             best[name] = round(min(runs[:2]), 3)
             samples[name] = [round(s, 3) for s in runs]
-        _release_pins()  # scope builder pins to their own query's reps
     return best, samples
-
-
-def _warm_plans(spark, CATALOG, names: list[str],
-                reserve: float | None = None) -> None:
-    """Warm every named plan at sf0.001: each query's first rep otherwise
-    pays a 1.5-3x per-plan compilation/codegen premium, and a production
-    query service is plan-warm.  ``reserve`` stops the loop like
-    :func:`_time_reps` does."""
-    for i, name in enumerate(names):
-        if reserve is not None and _remaining() < reserve:
-            _log(f"budget: stopping plan warm-up at {i}/{len(names)} "
-                 f"({_remaining():.0f}s left, reserve {reserve:.0f}s)")
-            break
-        try:
-            CATALOG[name].fn(spark, "/root/testdata/sf0.001").write.format(
-                "noop"
-            ).mode("overwrite").save()
-        except Exception as exc:  # its timed reps will record the error
-            _log(f"{name} warm-up failed: {exc!r:.300}")
-        _release_pins()  # sf0.001 warm pins must not shadow timed reps
 
 
 def _stats(samples: dict[str, list[float]]) -> tuple[dict, dict]:
@@ -474,7 +463,6 @@ def main() -> None:
 
     _log("headline block")
     _warm(spark, CATALOG)
-    _warm_plans(spark, CATALOG, BENCH_QUERIES)
     detail["buff_cache_gb_pre"] = _buff_cache_gb()
     timings, t_samples = _time_reps(spark, CATALOG, BENCH_QUERIES, reps=5)
     t_median, t_spread = _stats(t_samples)
@@ -510,7 +498,6 @@ def main() -> None:
 
     def block(key: str, names: list[str], reps: int, reserve: float,
               full: bool = False) -> None:
-        _warm_plans(spark, CATALOG, names, reserve=reserve)
         best, samples = _time_reps(spark, CATALOG, names, reps, full=full,
                                    reserve=reserve)
         med, spread = _stats(samples)

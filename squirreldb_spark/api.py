@@ -327,16 +327,18 @@ class PromAPI:
     def labels(self, opts: RequestOptions | None = None) -> list[str]:
         """/api/v1/labels — fixed-schema label columns (+ __name__); with
         a dynamic map column, also every label NAME present in the data
-        (the reference's label-names index scan, index.go:1903-2136)."""
+        (the reference's label-names index scan, index.go:1903-2136).
+        More than :data:`RESULT_LIMIT` names raises
+        :class:`LimitExceeded`."""
         names = set(self.label_cols) | {"__name__"}
         if self.labels_map_col is not None:
-            rows = (
+            rows = collect_at_most(
                 self._scoped(opts)
                 .select(
                     F.explode(F.map_keys(F.col(self.labels_map_col))).alias("k")
                 )
-                .distinct()
-                .collect()
+                .distinct(),
+                RESULT_LIMIT, "label names",
             )
             names |= {r.k for r in rows}
         return sorted(names)

@@ -602,7 +602,11 @@ class PromHTTPServer:
                 )
                 return
             if path == "/api/v1/series":
-                sjs = _match_series(api(), params, self._opts(handler))
+                opts = self._opts(handler)
+                sjs = run_with_timeout(
+                    self.spark, lambda: _match_series(api(), params, opts),
+                    self._timeout_ms(p),
+                )
                 self._send_json(
                     handler, 200,
                     {"status": "success", "data": [json.loads(s) for s in sjs]},
@@ -610,15 +614,25 @@ class PromHTTPServer:
                 return
             if path == "/api/v1/labels":
                 opts = self._opts(handler)
+                names = run_with_timeout(
+                    self.spark, lambda: api().labels(opts),
+                    self._timeout_ms(p),
+                )
                 self._send_json(
-                    handler, 200,
-                    {"status": "success", "data": api().labels(opts)},
+                    handler, 200, {"status": "success", "data": names},
                 )
                 return
             m = re.match(r"^/api/v1/label/([^/]+)/values$", path)
             if m:
                 opts = self._opts(handler)
-                rows = api().label_values(m.group(1), opts).collect()
+                rows = run_with_timeout(
+                    self.spark,
+                    lambda: collect_at_most(
+                        api().label_values(m.group(1), opts),
+                        SERIES_LIMIT, "label values",
+                    ),
+                    self._timeout_ms(p),
+                )
                 self._send_json(
                     handler, 200,
                     {"status": "success",

@@ -1,81 +1,55 @@
-"""Scoped within-query persists (VERDICT r14 #5).
+"""Query-scoped persists.
 
 Several query builders persist a within-query intermediate (a bucketed
 corpus projection, a 3-longs-per-frame pHash table, a 1-row max-ts agg …)
-because broadcast subtrees are never runtime-reuse-deduped — every
-consumer re-runs the subtree's full input scan.  Those pins are rebuilt
-per invocation inside the timed region (not cross-run caching), but a
-bare ``df.persist()`` has no release path: across a bench session that
-invokes 250+ builders, every pinned table stays in the storage pool
-until the session dies.  LRU eviction makes that a degradation problem
-rather than an OOM, and at 100 TB the bucketed projections are
-corpus-sized — an unbounded pin set is a real budget violation.
+because broadcast subtrees are never runtime-reuse-deduped: every
+consumer re-runs the subtree's full input scan.  A persist needs an
+owner that releases it, or every pinned table stays in the storage pool
+until the session dies.
 
-:func:`pin` bounds growth two ways:
+:func:`pin_scope` is that owner.  It records every frame :func:`pinned`
+persists while it is open and unpersists them all on exit, so a caller
+that opens one scope per query (the bench opens one per rep) holds at
+most that query's pins.  The open scope lives in a
+:class:`contextvars.ContextVar`, so each thread sees only its own:
+concurrent queries never release each other's pin lists.
 
-* one live pin per ``key`` (builder + role): re-invoking a builder with
-  different arguments releases the previous copy instead of stacking a
-  new one next to it;
-* a run-wide registry that :func:`release_pins` drains — the bench
-  harness calls it between queries (outside every timed region), so the
-  storage pool holds at most one query's pins at a time.
-
-Spark's CacheManager dedups persists by canonicalized plan: re-invoking
-a builder with *identical* arguments re-registers the same plan and
-shares the existing entry.  ``pin`` therefore only unpersists a same-key
-predecessor when the plans differ (``sameSemantics``) — unpersisting a
-shared entry would silently unpin the new reference too.
+With no scope open, :func:`pinned` returns the frame unchanged: a
+persist with no owner could never be released.  A pin only saves work,
+so a builder's result is the same with or without a scope.
 """
 
 from __future__ import annotations
 
-import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame
 
-_LOCK = threading.Lock()
-_PINS: dict[str, DataFrame] = {}
+_SCOPE: ContextVar[list[DataFrame] | None] = ContextVar("pin_scope",
+                                                        default=None)
 
 
-def pin(key: str, df: DataFrame) -> DataFrame:
-    """``df.persist()`` scoped to one live copy per builder ``key``."""
-    new = df.persist()
-    with _LOCK:
-        old = _PINS.get(key)
-        _PINS[key] = new
-    if old is not None and old is not new:
-        try:
-            same = old.sameSemantics(new)
-        except Exception:
-            same = False
-        if not same:
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-    return new
+@contextmanager
+def pin_scope() -> Iterator[list[DataFrame]]:
+    """Own the persists made inside the ``with`` block; unpersist them
+    (blocking, so the storage is free again) on exit."""
+    pins: list[DataFrame] = []
+    token = _SCOPE.set(pins)
+    try:
+        yield pins
+    finally:
+        _SCOPE.reset(token)
+        for df in pins:
+            df.unpersist(blocking=True)
 
 
-def pinned(key: str):
-    """Curried :func:`pin` for ``DataFrame.transform``: replaces a chained
-    ``.persist()`` with ``.transform(pinned("builder.role"))``."""
-    return lambda df: pin(key, df)
-
-
-def release_pins() -> int:
-    """Unpersist every registered pin; returns how many were released.
-
-    Safe at any point outside a timed region: an unpersisted plan that is
-    still referenced simply recomputes (correctness unaffected).
-    """
-    with _LOCK:
-        pins = list(_PINS.values())
-        _PINS.clear()
-    released = 0
-    for df in pins:
-        try:
-            df.unpersist()
-            released += 1
-        except Exception:
-            pass
-    return released
+def pinned(df: DataFrame) -> DataFrame:
+    """``df.persist()`` owned by the open :func:`pin_scope`, or ``df``
+    itself when none is open.  Chains as ``.transform(pinned)``."""
+    pins = _SCOPE.get()
+    if pins is None:
+        return df
+    pins.append(df.persist())
+    return pins[-1]

@@ -2862,7 +2862,7 @@ def detector_agreement(
     # One md5 pass now feeds all three; the pinned table is (id, hash).
     hashed = docs.select(
         F.col(id_col), F.md5(F.col(text_col).cast("binary")).alias("_h")
-    ).transform(pinned("dedup.detector_agreement.hashed"))
+    ).transform(pinned)
     # n_exact = sum of C(g,2) over identical-text group sizes: exact pair
     # COUNT without enumerating pairs (the quadratic the advice flagged).
     ex_n = (

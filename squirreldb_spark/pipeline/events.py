@@ -230,7 +230,7 @@ def rfm_segments(events: DataFrame) -> DataFrame:
     # subtrees are rebuilt per consumer (no exchange reuse across
     # branches), so every boundary/scoring branch re-scanned raw events
     # just to recompute this one row.
-    now = events.agg(F.max("ts").alias("now_ts")).transform(pinned("events.rfm_segments.now"))
+    now = events.agg(F.max("ts").alias("now_ts")).transform(pinned)
     per_user = (
         events.groupBy("user_id")
         .agg(
@@ -1368,7 +1368,7 @@ def hll_setops(
         )
         .groupBy("k", "bucket")
         .agg(F.max("rank").alias("r"))
-        .transform(pinned("events.hll_setops.sparse"))
+        .transform(pinned)
     )
     buckets = (
         sparse.select("k")
@@ -1436,7 +1436,7 @@ def hll_setops(
     # of re-deriving it from raw events per branch
     su = events.select(
         F.col(key_col).alias("k"), F.col(id_col).alias("i")
-    ).distinct().transform(pinned("events.hll_setops.su"))
+    ).distinct().transform(pinned)
     ia = su.select(F.col("k").alias("type_a"), "i")
     ib = su.select(F.col("k").alias("type_b"), "i")
     inter = (

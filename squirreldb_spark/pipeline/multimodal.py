@@ -1034,15 +1034,16 @@ def keyframe_select(
     consumers with NO exchange boundary between them — so runtime
     exchange reuse (which dedups the self-join sides elsewhere in this
     module) cannot fire, and a task-level execution count measured the
-    Arrow decode+pHash pass running 5 TIMES per query at k=3.  Pinned:
-    3 longs per frame, payloads excluded, materialized inside the
-    timed action on first use — the decode now runs once.
+    Arrow decode+pHash pass running 5 TIMES per query at k=3.  Pinned
+    inside an open ``pin_scope``: 3 longs per frame, payloads excluded,
+    materialized inside the timed action on first use — the decode then
+    runs once.
     """
     from pyspark.sql import Window
 
     ph = frame_phashes(
         binary_table, n_frames=n_frames, frame_len=frame_len
-    ).transform(pinned("multimodal.keyframe_select.ph"))
+    ).transform(pinned)
     sel = [
         ph.filter(F.col("frame_idx") == 0).select(
             "doc_id",

@@ -2163,7 +2163,7 @@ def ivf_nprobe_sweep(
     """
     exact = cosine_knn(
         emb, k=k, n_queries=n_queries, id_col=id_col, vec_col=vec_col
-    ).select("q_id", "c_id").transform(pinned("similarity.ivf_nprobe_sweep.exact"))
+    ).select("q_id", "c_id").transform(pinned)
     centroids = train_ivf(emb, id_col=id_col, vec_col=vec_col,
                           cache_key=cache_key)
     scores = _centroid_scores_expr(centroids)
@@ -2175,7 +2175,7 @@ def ivf_nprobe_sweep(
             F.col(id_col).alias("c_id"), F.col("v").alias("cv"), "cell",
             F.col("_vn").alias("cn"),
         )
-        .transform(pinned("similarity.ivf_nprobe_sweep.cells"))
+        .transform(pinned)
     )
     out = None
     for p in probes:
@@ -2692,7 +2692,7 @@ def hubness(
     # three.  Norm + bucket fold once per row, parquet read once.
     bucketed = base.withColumn(
         "bucket", F.expr(bucket_expr("v", planes))
-    ).transform(pinned("similarity.hubness.bucketed"))
+    ).transform(pinned)
     q = bucketed.select(
         F.col(id_col).alias("q_id"), F.col("v").alias("qv"), "bucket",
         F.col("_n").alias("qn"),
@@ -3182,7 +3182,7 @@ def knn_label_purity(
     # the corpus; one projection pass feeds both (the hubness treatment)
     bucketed = base.withColumn(
         "bucket", F.expr(bucket_expr("v", planes))
-    ).transform(pinned("similarity.knn_label_purity.bucketed"))
+    ).transform(pinned)
     q = bucketed.select(
         F.col(id_col).alias("q_id"),
         F.col("label").alias("q_label"),
@@ -3413,14 +3413,14 @@ def sq_bits_sweep(
     """
     base0 = emb.select(
         F.col(id_col), F.expr(_to_double(vec_col)).alias("v")
-    ).transform(pinned("similarity.sq_bits_sweep.base0"))
+    ).transform(pinned)
     stats = base0.agg(
         F.array(*[F.min(F.col("v")[i]) for i in range(dim)]).alias("lo"),
         F.array(*[F.max(F.col("v")[i]) for i in range(dim)]).alias("hi"),
-    ).transform(pinned("similarity.sq_bits_sweep.stats"))
+    ).transform(pinned)
     exact = cosine_knn(
         emb, k=k, n_queries=n_queries, id_col=id_col, vec_col=vec_col
-    ).select("q_id", "c_id").transform(pinned("similarity.sq_bits_sweep.exact"))
+    ).select("q_id", "c_id").transform(pinned)
     base = base0.crossJoin(F.broadcast(stats))
     out = None
     for bits in bits_list:
@@ -3699,7 +3699,7 @@ def knn_reciprocity(
     # the corpus; one projection pass feeds both (the hubness treatment)
     bucketed = base.withColumn(
         "bucket", F.expr(bucket_expr("v", planes))
-    ).transform(pinned("similarity.knn_reciprocity.bucketed"))
+    ).transform(pinned)
     q = bucketed.select(
         F.col(id_col).alias("q_id"), F.col("v").alias("qv"), "bucket",
         F.col("_n").alias("qn"),
@@ -3719,7 +3719,7 @@ def knn_reciprocity(
     # The pinned edge list is corpus x k two-long fingerprint rows.
     edges = _topk_per_query(scored, k, carry=[]).select(
         "q_id", "c_id"
-    ).transform(pinned("similarity.knn_reciprocity.edges"))
+    ).transform(pinned)
     rev = edges.select(
         F.col("c_id").alias("q_id"), F.col("q_id").alias("c_id"),
         F.lit(1).alias("_rev"),

@@ -4680,6 +4680,20 @@ _VERIFY_FIRST: list[str] = [
     # persisted left side plus an anti-join (it displaced ts_tenant_filter,
     # the last entry of the attested backfill below)
     "ts_set_or",
+    # pins are owned by a pin_scope and persist nothing outside one: the
+    # five pinned builders not yet in the window enter here (the other
+    # four, emb_hubness, emb_knn_purity, emb_knn_reciprocity and
+    # ev_rfm_segments, already are), plus api_series and
+    # ts_mutable_labels, whose planner paths changed after their newest
+    # attestation.  They displaced the last seven entries of the
+    # attested backfill below (ts_label_values .. ts_stitch_preagg_raw).
+    "ev_hll_setops",
+    "mm_keyframe_select",
+    "doc_detector_agreement",
+    "emb_ivf_nprobe_sweep",
+    "emb_sq_bits_sweep",
+    "api_series",
+    "ts_mutable_labels",
     # --- (2) r6-era backfill: the ENTIRE remaining r6 cohort (VERDICT
     # r12 order #4 — after this window no catalog row's newest
     # attestation predates r8; the 49-row r8 cohort rolls to r14) ---
@@ -4714,13 +4728,6 @@ _VERIFY_FIRST: list[str] = [
     "tpch_q10_returned_items",
     "tpch_q6_forecast_revenue",
     "ts_instant_selector",
-    "ts_label_values",
-    "ts_of_last_over_time",
-    "ts_of_max_over_time",
-    "ts_of_min_over_time",
-    "ts_retention",
-    "ts_series_interning",
-    "ts_stitch_preagg_raw",
 ]
 
 

@@ -2,6 +2,9 @@
 
 These run without Spark: they pin what the driver parses (the last
 stdout line), independently of how fast the host is.
+
+The ``_time_reps`` checks at the end are the exception: they run a fake
+two-entry catalog, whose builder pins a tiny frame, on the test session.
 """
 
 from __future__ import annotations
@@ -85,3 +88,44 @@ def test_sigterm_reprints_line_and_exits_143():
     assert proc.returncode == 143
     doc = json.loads(proc.stdout.strip().splitlines()[-1])
     assert doc["value"] == 0.5 and doc["queries"] == {"q": 0.5}
+
+
+class _FakeDef:
+    """A catalog entry whose builder pins a tiny frame and records each
+    call's data directory and whether the CacheManager was empty then."""
+
+    def __init__(self, calls: list):
+        self.calls = calls
+
+    def fn(self, spark, sf_dir):
+        from squirreldb_spark.pipeline._pins import pinned
+
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        self.calls.append((sf_dir, cache.isEmpty()))
+        return spark.range(5).selectExpr("id * 7 as v").transform(pinned)
+
+
+def test_time_reps_warms_then_releases_pins_every_rep(spark):
+    spark.catalog.clearCache()
+    calls: dict[str, list] = {"a": [], "b": []}
+    catalog = {n: _FakeDef(c) for n, c in calls.items()}
+    best, samples = bench._time_reps(spark, catalog, ["a", "b"], reps=3)
+    assert set(best) == set(samples) == {"a", "b"}
+    assert all(len(s) == 3 for s in samples.values())
+    for c in calls.values():
+        # one warm-up on the sf0.001 set, then the timed reps
+        assert [d for d, _ in c] == [bench.WARM_SF_DIR] + [bench.SF_DIR] * 3
+        # every call starts with the previous call's pins released
+        assert all(empty for _, empty in c)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_time_reps_stops_before_warming_past_reserve(spark, monkeypatch):
+    left = iter([1000.0, 10.0])
+    monkeypatch.setattr(bench, "_remaining", lambda: next(left, 10.0))
+    calls: dict[str, list] = {"a": [], "b": []}
+    catalog = {n: _FakeDef(c) for n, c in calls.items()}
+    best, samples = bench._time_reps(spark, catalog, ["a", "b"], reps=2,
+                                     reserve=100.0)
+    assert set(samples) == {"a"} and len(calls["a"]) == 3
+    assert calls["b"] == []  # not even warmed

@@ -378,6 +378,29 @@ def test_query_timeout_returns_prometheus_error_shape(spark):
         srv.stop()
 
 
+def test_metadata_reads_run_under_the_query_timeout(spark):
+    """/series, /labels and label values are killed at the engine
+    deadline like /query: query_timeout_ms=1 expires before any of
+    their Spark jobs finishes."""
+    srv = PromHTTPServer(spark, query_timeout_ms=1).start()
+    try:
+        b = f"http://127.0.0.1:{srv.port}"
+        series = [codec.TimeSeries(labels={"__name__": "m", "job": "a"},
+                                   samples=[codec.Sample(1.0, 10_000)])]
+        status, _ = _post(
+            f"{b}/api/v1/write", codec.encode_remote_write_body(series),
+            {"Content-Encoding": "snappy",
+             "Content-Type": "application/x-protobuf"},
+        )
+        assert status == 204
+        for path in ("/api/v1/series?match[]=m", "/api/v1/labels",
+                     "/api/v1/label/job/values"):
+            status, out = _get(f"{b}{path}")
+            assert status == 503 and out["errorType"] == "timeout", path
+    finally:
+        srv.stop()
+
+
 def test_sample_budget_returns_422(spark):
     """The engine MaxSamples analog (50M upstream) trips with no
     per-request headers at all."""
@@ -1074,6 +1097,33 @@ def test_query_result_past_limit_is_rejected(many_base):
     q = urllib.parse.quote('many{i!="0"}')
     status, out = _get(f"{many_base}/api/v1/query?query={q}&time=2")
     assert status == 200 and len(out["data"]["result"]) == 10_000
+
+
+def test_label_reads_past_limit_are_rejected(spark, many_base):
+    """Label values and label names answer at most 10,000 entries; more
+    is a 422, not an uncapped collect."""
+    status, out = _get(f"{many_base}/api/v1/label/i/values")
+    assert status == 422 and out["errorType"] == "execution"
+    status, out = _get(f"{many_base}/api/v1/label/__name__/values")
+    assert status == 200 and out["data"] == ["many"]
+    status, out = _get(f"{many_base}/api/v1/labels")
+    assert status == 200 and set(out["data"]) == {"__name__", "i"}
+    srv = PromHTTPServer(spark).start()
+    try:
+        b = f"http://127.0.0.1:{srv.port}"
+        labels = {"__name__": "wide", **{f"l{i}": "v" for i in range(10_001)}}
+        status, _ = _post(
+            f"{b}/api/v1/write",
+            codec.encode_remote_write_body([codec.TimeSeries(
+                labels=labels, samples=[codec.Sample(1.0, 1_000)])]),
+            {"Content-Encoding": "snappy",
+             "Content-Type": "application/x-protobuf"},
+        )
+        assert status == 204
+        status, out = _get(f"{b}/api/v1/labels")
+        assert status == 422 and out["errorType"] == "execution"
+    finally:
+        srv.stop()
 
 
 def test_debug_index_dump_past_limit_is_rejected(many_base):
