@@ -211,8 +211,8 @@ def ingest_bench(spark) -> dict:
     from squirreldb_spark.streaming.ingest import (
         decode_write_stream,
         validate_map,
+        write_points,
     )
-    from pyspark.sql import functions as F
 
     bodies = []
     n_samples = 0
@@ -236,13 +236,8 @@ def ingest_bench(spark) -> dict:
     payloads = spark.createDataFrame(bodies, "body binary").repartition(32)
 
     def write(path: str) -> None:
-        out = validate_map(decode_write_stream(payloads), tenant="bench")
-        (
-            out.withColumn("date", F.to_date(F.timestamp_millis(F.col("ts"))))
-            .write.partitionBy("date")
-            .mode("overwrite")
-            .parquet(path)
-        )
+        write_points(validate_map(decode_write_stream(payloads), tenant="bench"),
+                     path)
 
     with tempfile.TemporaryDirectory() as tmp:
         # One untimed run first: Python-worker spin-up for the mapInPandas

@@ -64,10 +64,6 @@ def read_uvarint(buf: bytes, pos: int) -> tuple[int, int]:
             raise ValueError("varint too long")
 
 
-def _zigzag(n: int) -> int:  # only needed for sint fields; prompb has none
-    return (n << 1) ^ (n >> 63)
-
-
 def _int64(n: int) -> int:
     """Two's-complement int64 from an unsigned varint value."""
     return n - (1 << 64) if n >= 1 << 63 else n
@@ -754,10 +750,6 @@ def encode_remote_write_body(series: list[TimeSeries]) -> bytes:
 
 def encode_remote_write_body_v2(series: list[TimeSeries]) -> bytes:
     return snappy_compress(encode_write_request_v2(series))
-
-
-def decode_remote_read_body(body: bytes) -> list[Query]:
-    return decode_read_request(snappy_decompress(body))
 
 
 def encode_remote_read_response_body(results: list[list[TimeSeries]]) -> bytes:

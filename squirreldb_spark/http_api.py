@@ -10,26 +10,27 @@ prompb+snappy wire bytes. No third-party framework: ``http.server`` is
 enough because every endpoint is one DataFrame program + one driver-side
 serialization.
 
-Every request that reads sees ONE points relation, built once on first
-use: the parquet history (``base_points``) unioned with the remote-write
-buffer. The buffer relation is built in the history's schema — the same
-``labels MAP<STRING,STRING>`` tall frame the streaming ingest path
-produces, including its ``date`` partition column — so a written sample
+Samples live in one :class:`~squirreldb_spark.streaming.ingest.PointStore`:
+the parquet history (``base_points``), the parquet it has flushed, and a
+bounded in-memory head of recent writes. A remote write is validated by
+the streaming path's rules and appended to the head; a full head (or
+``/debug/flush``) is flushed into the streaming sink's date-partitioned
+layout. Every request that reads sees ONE points relation, taken on
+first use from the store in the history's columns, so a written sample
 is immediately queryable and survives the planner's partition pruning
 (write -> /query_range round trips over an empty store and over a
 date-partitioned history are tested end-to-end in
 tests/test_http_api.py). One ``PromAPI`` over that relation serves the
-query and its JSON formatting. Write requests only append to the buffer;
-they build nothing. The tenant header injects the tenant as a label at
-write and filters it on every read — queries, /series, label lookups,
-remote read and the index dumps — mirroring the reference's
+query and its JSON formatting. The tenant header injects the tenant as a
+label at write and filters it on every read — queries, /series, label
+lookups, remote read and the index dumps — mirroring the reference's
 __account_id flow (api/remotestorage/write.go:80-170,
 api/promql/queryable.go:153-165).
 
 Headers honored (types/types.go:171-195):
 
 * ``X-SquirrelDB-Tenant``        tenant scope (write: injected label)
-* ``X-SquirrelDB-TTL``           per-write TTL seconds (recorded per row)
+* ``X-SquirrelDB-TTL``           per-write TTL seconds (kept as a per-series expiry)
 * ``X-SquirrelDB-Forced-Matcher``  ``name=value`` implicit equality
 * ``X-SquirrelDB-Max-Evaluated-Series`` / ``-Max-Evaluated-Points``
 * ``X-SquirrelDB-ForceRaw`` / ``X-SquirrelDB-ForcePreAggregated``
@@ -37,10 +38,13 @@ Headers honored (types/types.go:171-195):
 
 from __future__ import annotations
 
+import datetime
 import functools
+import itertools
 import json
 import re
 import threading
+from collections import Counter
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
@@ -56,8 +60,8 @@ from squirreldb_spark.api import (
     collect_at_most,
     run_with_timeout,
 )
-from squirreldb_spark.model import series_json
-from squirreldb_spark.streaming.ingest import partition_date
+from squirreldb_spark.model import canonical_series_json, series_json
+from squirreldb_spark.streaming.ingest import PointStore
 
 #: reference api/api.go: decoded request bodies are size-limited
 MAX_BODY_BYTES = 32 << 20
@@ -66,7 +70,8 @@ MAX_BODY_BYTES = 32 << 20
 #: is a LimitExceeded (422)
 SERIES_LIMIT = 10_000
 
-_WRITE_SCHEMA = "labels map<string,string>, ts long, value double, ttl_s long"
+_DUMPS = ("/debug/index_dump", "/debug/index_dump_by_labels",
+          "/debug/index_dump_by_expiration", "/debug/index_dump_by_shard")
 
 
 def _parse_time_s(raw: str) -> int:
@@ -75,8 +80,6 @@ def _parse_time_s(raw: str) -> int:
     try:
         return int(float(raw) * 1000)
     except (TypeError, ValueError):
-        import datetime
-
         dt = datetime.datetime.fromisoformat(raw.replace("Z", "+00:00"))
         if dt.tzinfo is None:
             dt = dt.replace(tzinfo=datetime.timezone.utc)
@@ -87,19 +90,6 @@ def _now_ms() -> int:
     import time
 
     return int(time.time() * 1000)
-
-
-def _canonical_series_json(labels: dict) -> str:
-    """The driver-side replay of :func:`model.series_json`'s
-    ``to_json(map<string,string>)`` canonical form: sorted keys, compact
-    separators, every value STRINGIFIED (a long label column would
-    otherwise print unquoted and give the same series a different 60-bit
-    id across /debug/index_dump and /debug/index_dump_by_labels), null
-    (absent) labels dropped like a labels map never holds them."""
-    return json.dumps(
-        {k: str(v) for k, v in labels.items() if v is not None},
-        sort_keys=True, separators=(",", ":"),
-    )
 
 
 #: Prometheus config the reference reports on /status/config: it passes
@@ -178,7 +168,7 @@ def _match_series(api: PromAPI, params: dict,
     rows = collect_at_most(df, SERIES_LIMIT, "series match")
     if "series" in df.columns:
         return [r["series"] for r in rows]
-    return [_canonical_series_json(r.asDict()) for r in rows]
+    return [canonical_series_json(r.asDict()) for r in rows]
 
 
 def _dump_series(points: DataFrame) -> bytes:
@@ -227,11 +217,10 @@ class PromHTTPServer:
     """A live /api/v1 endpoint set over Spark.
 
     ``base_points`` (optional) is the history, e.g. the date-partitioned
-    parquet the streaming ingest path writes. Remote writes accumulate in
-    a driver-side buffer (config-sized for tests; the production ingest
-    path is Structured Streaming, streaming/ingest.py). A reading request
-    builds one points relation — the history plus the buffer in the
-    history's schema (:meth:`_points`) — and one :class:`PromAPI` over it
+    parquet the streaming ingest path writes. It and every remote write
+    live in :attr:`store`, a :class:`PointStore` whose in-memory head is
+    bounded and flushes to parquet. A reading request takes one points
+    relation from the store and builds one :class:`PromAPI` over it
     (:meth:`_api`) that serves both the query and its formatting.
     """
 
@@ -250,7 +239,7 @@ class PromHTTPServer:
         **api_kwargs,
     ):
         self.spark = spark
-        self.base_points = base_points
+        self.store = PointStore(spark, base_points, tenant_label)
         self.host = host
         self._requested_port = port
         self.tenant_label = tenant_label
@@ -269,8 +258,6 @@ class PromHTTPServer:
         from squirreldb_spark.tsdb.mutable import MutableLabelStore
 
         self.mutable_store = MutableLabelStore()
-        #: rows written via /api/v1/write: (labels, ts, value, ttl_s)
-        self._written: list[tuple[dict, int, float, int | None]] = []
         self._lock = threading.Lock()
         self._httpd: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
@@ -282,32 +269,9 @@ class PromHTTPServer:
         #: /metrics, api/api.go:211): keyed (family, ((label, value),...))
         #: so the exposition can emit one # TYPE line per family with
         #: properly quoted label values
-        self._counters: dict[tuple[str, tuple[tuple[str, str], ...]], int] = {}
+        self._counters: Counter[tuple[str, tuple[tuple[str, str], ...]]] = Counter()
 
     # ------------------------------------------------------------- store
-
-    def _points(self) -> DataFrame:
-        """The points relation: the history unioned with the write buffer.
-
-        The buffer relation carries exactly the history's columns, the
-        ``date`` partition derived as the streaming sink derives it, so
-        the planner's partition pruning keeps written rows."""
-        with self._lock:
-            rows = list(self._written)
-        base = self.base_points
-        if base is not None and not rows:
-            return base
-        written = self.spark.createDataFrame(rows, _WRITE_SCHEMA)
-        if base is None:
-            return written.drop("ttl_s")
-        cols = {c: F.col(c) for c in written.columns}
-        cols["date"] = partition_date(F.col("ts"))
-        missing = [c for c in base.columns if c not in cols]
-        if missing:
-            raise ValueError(f"remote writes cannot fill history columns {missing}")
-        return base.unionByName(written.select(*[
-            cols[f.name].cast(f.dataType).alias(f.name) for f in base.schema
-        ]))
 
     def _api(self) -> PromAPI:
         kwargs = dict(
@@ -320,25 +284,16 @@ class PromHTTPServer:
             max_samples=self.max_samples,
         )
         kwargs.update(self.api_kwargs)
-        return PromAPI(self._points(), **kwargs)
+        return PromAPI(self.store.relation(), **kwargs)
 
     def ingest(self, series: list[codec.TimeSeries],
                tenant: str | None, ttl_s: int | None) -> int:
-        """Buffer decoded remote-write series; returns samples accepted."""
-        rows = []
-        for ts in series:
-            labels = dict(ts.labels)
-            if tenant is not None:
-                labels[self.tenant_label] = tenant
-            # A3: drop empty-valued labels (reference write validation)
-            labels = {k: v for k, v in labels.items() if v != ""}
-            for s in ts.samples:
-                rows.append((labels, s.timestamp_ms, s.value, ttl_s))
+        """Append decoded remote-write series to the store; returns the
+        samples kept."""
+        n = self.store.append(series, tenant, ttl_s)
         with self._lock:
-            self._written.extend(rows)
-            key = ("ingested_samples_total", ())
-            self._counters[key] = self._counters.get(key, 0) + len(rows)
-        return len(rows)
+            self._counters["ingested_samples_total", ()] += n
+        return n
 
     # --------------------------------------------------------- lifecycle
 
@@ -384,6 +339,7 @@ class PromHTTPServer:
             self._httpd.shutdown()
             self._httpd.server_close()
             self._httpd = None
+        self.store.stop()
 
     # ----------------------------------------------------------- routing
 
@@ -454,8 +410,7 @@ class PromHTTPServer:
     def _route(self, handler, body: bytes) -> None:
         url = urlparse(handler.path)
         with self._lock:
-            key = ("requests_total", (("path", url.path),))
-            self._counters[key] = self._counters.get(key, 0) + 1
+            self._counters["requests_total", (("path", url.path),)] += 1
         params = parse_qs(url.query)
         if body and handler.headers.get("Content-Type", "").startswith(
             "application/x-www-form-urlencoded"
@@ -469,6 +424,9 @@ class PromHTTPServer:
         # the request's one points relation and PromAPI, built on first
         # use; write requests never build it
         api = functools.cache(self._api)
+
+        def timed(fn):
+            return run_with_timeout(self.spark, fn, self._timeout_ms(p))
 
         try:
             path = url.path
@@ -560,53 +518,34 @@ class PromHTTPServer:
                 out = api().remote_read(raw, decompressed=True, opts=opts)
                 self._send_bytes(handler, 200, out)
                 return
-            if path == "/api/v1/query_range":
+            if path in ("/api/v1/query", "/api/v1/query_range"):
                 opts = self._opts(handler)
-                self._capture_query(p("query"))
-                start = _parse_time_s(p("start"))
-                end = _parse_time_s(p("end"))
-                step = int(float(p("step", "60")) * 1000)
+                q = p("query")
+                self._capture_query(q)
+                if path == "/api/v1/query":
+                    # `time` is optional and defaults to current server
+                    # time (upstream API semantics)
+                    traw = p("time")
+                    t = _now_ms() if traw is None else _parse_time_s(traw)
 
-                def run_range():
-                    store = api()
-                    df = store.query_range(
-                        p("query"), start, end, step, opts=opts
-                    )
-                    return _unpack_series(store.format_matrix(df))
+                    def run():
+                        store = api()
+                        return store.format_vector(store.query(q, t, opts=opts))
+                else:
+                    start = _parse_time_s(p("start"))
+                    end = _parse_time_s(p("end"))
+                    step = int(float(p("step", "60")) * 1000)
 
-                self._send_json(
-                    handler, 200,
-                    run_with_timeout(
-                        self.spark, run_range, self._timeout_ms(p)
-                    ),
-                )
-                return
-            if path == "/api/v1/query":
-                opts = self._opts(handler)
-                self._capture_query(p("query"))
-                # `time` is optional and defaults to current server time
-                # (upstream API semantics)
-                traw = p("time")
-                t = _now_ms() if traw is None else _parse_time_s(traw)
+                    def run():
+                        store = api()
+                        return store.format_matrix(
+                            store.query_range(q, start, end, step, opts=opts))
 
-                def run_instant():
-                    store = api()
-                    df = store.query(p("query"), t, opts=opts)
-                    return _unpack_series(store.format_vector(df))
-
-                self._send_json(
-                    handler, 200,
-                    run_with_timeout(
-                        self.spark, run_instant, self._timeout_ms(p)
-                    ),
-                )
+                self._send_json(handler, 200, _unpack_series(timed(run)))
                 return
             if path == "/api/v1/series":
                 opts = self._opts(handler)
-                sjs = run_with_timeout(
-                    self.spark, lambda: _match_series(api(), params, opts),
-                    self._timeout_ms(p),
-                )
+                sjs = timed(lambda: _match_series(api(), params, opts))
                 self._send_json(
                     handler, 200,
                     {"status": "success", "data": [json.loads(s) for s in sjs]},
@@ -614,10 +553,7 @@ class PromHTTPServer:
                 return
             if path == "/api/v1/labels":
                 opts = self._opts(handler)
-                names = run_with_timeout(
-                    self.spark, lambda: api().labels(opts),
-                    self._timeout_ms(p),
-                )
+                names = timed(lambda: api().labels(opts))
                 self._send_json(
                     handler, 200, {"status": "success", "data": names},
                 )
@@ -625,24 +561,23 @@ class PromHTTPServer:
             m = re.match(r"^/api/v1/label/([^/]+)/values$", path)
             if m:
                 opts = self._opts(handler)
-                rows = run_with_timeout(
-                    self.spark,
-                    lambda: collect_at_most(
-                        api().label_values(m.group(1), opts),
-                        SERIES_LIMIT, "label values",
-                    ),
-                    self._timeout_ms(p),
-                )
+                rows = timed(lambda: collect_at_most(
+                    api().label_values(m.group(1), opts),
+                    SERIES_LIMIT, "label values",
+                ))
                 self._send_json(
                     handler, 200,
                     {"status": "success",
                      "data": [r["value"] for r in rows]},
                 )
                 return
-            if path == "/api/v1/format_query":
+            if path in ("/api/v1/format_query", "/api/v1/parse_query"):
                 # upstream web/api/v1 formatQuery (mounted by the
-                # reference via v1.NewAPI, api/api.go:163): parse +
-                # prettify; parse failures are bad_data like /query
+                # reference via v1.NewAPI, api/api.go:163) prettifies;
+                # parse_query (v3.4+) answers the translated AST JSON
+                # (web/api/v1/translate_ast.go shape). Parse failures are
+                # bad_data like /query.
+                from squirreldb_spark.promql.ast_json import parse_query_json
                 from squirreldb_spark.promql.prettier import format_query
 
                 q = p("query")
@@ -655,30 +590,8 @@ class PromHTTPServer:
                                   "no expression found in input"},
                     )
                     return
-                self._send_json(
-                    handler, 200,
-                    {"status": "success", "data": format_query(q)},
-                )
-                return
-            if path == "/api/v1/parse_query":
-                # upstream parse_query (v3.4+): translated AST JSON
-                # (web/api/v1/translate_ast.go shape)
-                from squirreldb_spark.promql.ast_json import parse_query_json
-
-                q = p("query")
-                if q is None:
-                    self._send_json(
-                        handler, 400,
-                        {"status": "error", "errorType": "bad_data",
-                         "error": 'invalid parameter "query": '
-                                  "unknown position: parse error: "
-                                  "no expression found in input"},
-                    )
-                    return
-                self._send_json(
-                    handler, 200,
-                    {"status": "success", "data": parse_query_json(q)},
-                )
+                fn = format_query if path.endswith("format_query") else parse_query_json
+                self._send_json(handler, 200, {"status": "success", "data": fn(q)})
                 return
             if path in _MOCKED_V1_ROUTES:
                 code, payload = _MOCKED_V1_ROUTES[path]
@@ -702,23 +615,20 @@ class PromHTTPServer:
                     )
 
                 with self._lock:
-                    counters = dict(self._counters)
-                    buffered = len(self._written)
+                    counters = sorted(self._counters.items())
                 lines: list[str] = []
-                for family in sorted({k[0] for k in counters}):
+                for family, group in itertools.groupby(
+                    counters, key=lambda kv: kv[0][0]
+                ):
                     lines.append(f"# TYPE squirreldb_{family} counter")
-                    for (fam, labels), n in sorted(counters.items()):
-                        if fam != family:
-                            continue
-                        if labels:
-                            lbl = ",".join(
-                                f'{k}="{esc(v)}"' for k, v in labels
-                            )
-                            lines.append(f"squirreldb_{family}{{{lbl}}} {n}")
-                        else:
-                            lines.append(f"squirreldb_{family} {n}")
+                    for (_, labels), n in group:
+                        lbl = ",".join(f'{k}="{esc(v)}"' for k, v in labels)
+                        lines.append(f"squirreldb_{family}{{{lbl}}} {n}"
+                                     if lbl else f"squirreldb_{family} {n}")
+                # the gauge reports the store's in-memory head only
                 lines.append("# TYPE squirreldb_buffered_points gauge")
-                lines.append(f"squirreldb_buffered_points {buffered}")
+                lines.append(
+                    f"squirreldb_buffered_points {self.store.head_samples}")
                 self._send_bytes(
                     handler, 200, ("\n".join(lines) + "\n").encode(),
                     content_type="text/plain; version=0.0.4",
@@ -774,12 +684,10 @@ class PromHTTPServer:
                 )
                 return
             if path == "/debug/flush":
-                # the parquet/buffer store is immediately queryable; the
-                # reference flushes its temporary store here
-                with self._lock:
-                    buffered = len(self._written)
+                # the reference flushes its temporary store here: the
+                # head goes out as parquet
                 self._send_json(
-                    handler, 200, {"status": "ok", "points": buffered}
+                    handler, 200, {"status": "ok", "points": self.store.flush()}
                 )
                 return
             if path == "/debug/mutable_dump":
@@ -819,10 +727,7 @@ class PromHTTPServer:
             if path in ("/debug", "/debug/"):
                 # reference debugHelpHandler: plain-text endpoint listing
                 lines = [
-                    "/debug/index_info", "/debug/index_verify",
-                    "/debug/index_dump", "/debug/index_dump_by_labels",
-                    "/debug/index_dump_by_expiration",
-                    "/debug/index_dump_by_shard",
+                    "/debug/index_info", "/debug/index_verify", *_DUMPS,
                     "/debug/index_block (501: n/a by design)",
                     "/debug/index_unblock (501: n/a by design)",
                     "/debug/toggle_debug_query", "/debug/preaggregate",
@@ -834,72 +739,40 @@ class PromHTTPServer:
                     content_type="text/plain; charset=utf-8", encoding=None,
                 )
                 return
-            if path == "/debug/index_dump":
-                # A40: full id -> labels dump as CSV lines, like the
-                # reference IndexDumper.Dump (cassandra/index/verify.go)
-                self._send_bytes(
-                    handler, 200,
-                    _dump_series(api()._scoped(self._opts(handler))),
-                    content_type="text/csv; charset=utf-8", encoding=None,
-                )
-                return
-            if path == "/debug/index_dump_by_labels":
-                # matcher-restricted dump (reference indexDumpByLabels):
-                # the /api/v1/series selection
-                sjs = _match_series(api(), params, self._opts(handler))
-                self._send_bytes(
-                    handler, 200, _dump_csv(sjs),
-                    content_type="text/csv; charset=utf-8", encoding=None,
-                )
-                return
-            if path == "/debug/index_dump_by_expiration":
-                # reference: ids expiring on ?date=YYYY-MM-DD (daily
-                # expiration bitsets). Our analogue: per-series expiry =
-                # max(write ts + per-write TTL) over the daemon buffer.
+            if path in _DUMPS:
+                # A40: id -> labels dumps as CSV lines, like the reference
+                # IndexDumper.Dump (cassandra/index/verify.go)
                 date = p("date")
-                if not date:
+                if path.endswith(("_expiration", "_shard")) and not date:
                     raise ValueError('expect one parameter "date"')
-                expiry: dict[str, float] = {}
-                with self._lock:
-                    rows = list(self._written)
-                for labels, ts_ms, _val, ttl_s in rows:
-                    if ttl_s is None:
-                        continue
-                    sj = _canonical_series_json(labels)
-                    exp = ts_ms / 1000 + ttl_s
-                    expiry[sj] = max(expiry.get(sj, 0), exp)
-                import datetime as _dt
-
-                matching = sorted(
-                    sj for sj, exp in expiry.items()
-                    if _dt.datetime.fromtimestamp(
-                        exp, _dt.timezone.utc
-                    ).strftime("%Y-%m-%d") == date
-                )
+                if path == "/debug/index_dump":
+                    csv = _dump_series(api()._scoped(self._opts(handler)))
+                elif path == "/debug/index_dump_by_labels":
+                    # matcher-restricted (reference indexDumpByLabels):
+                    # the /api/v1/series selection
+                    csv = _dump_csv(
+                        _match_series(api(), params, self._opts(handler)))
+                elif path == "/debug/index_dump_by_expiration":
+                    # reference: ids expiring on ?date=YYYY-MM-DD (daily
+                    # expiration bitsets). Our analogue: the store's
+                    # per-series max(write ts + per-write TTL).
+                    csv = _dump_csv(
+                        sj for sj, exp in self.store.expiry().items()
+                        if datetime.datetime.fromtimestamp(
+                            exp, datetime.timezone.utc
+                        ).strftime("%Y-%m-%d") == date
+                    )
+                else:
+                    # the reference's 7-day postings shard maps to our
+                    # date partition (SURVEY §1.5): series active on ?date=
+                    lo = int(datetime.datetime.strptime(date, "%Y-%m-%d")
+                             .replace(tzinfo=datetime.timezone.utc)
+                             .timestamp() * 1000)
+                    csv = _dump_series(
+                        api()._scoped(self._opts(handler)).filter(
+                            F.col("ts").between(lo, lo + 86_399_999)))
                 self._send_bytes(
-                    handler, 200, _dump_csv(matching),
-                    content_type="text/csv; charset=utf-8", encoding=None,
-                )
-                return
-            if path == "/debug/index_dump_by_shard":
-                # the reference's 7-day postings shard maps to our date
-                # partition (SURVEY §1.5): dump series active on ?date=
-                date = p("date")
-                if not date:
-                    raise ValueError('expect one parameter "date"')
-                import datetime as _dt
-
-                day = _dt.datetime.strptime(date, "%Y-%m-%d").replace(
-                    tzinfo=_dt.timezone.utc
-                )
-                lo = int(day.timestamp() * 1000)
-                hi = lo + 86_400_000
-                points = api()._scoped(self._opts(handler))
-                self._send_bytes(
-                    handler, 200,
-                    _dump_series(points.filter(
-                        (F.col("ts") >= lo) & (F.col("ts") < hi)
-                    )),
+                    handler, 200, csv,
                     content_type="text/csv; charset=utf-8", encoding=None,
                 )
                 return

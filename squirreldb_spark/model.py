@@ -19,6 +19,7 @@ types/metric.go:35). DuckDB oracle equivalent: ``epoch_ms(ts)``.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -76,10 +77,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The TSDB fact view: (user_id, event_type, ts ms, value).
 
@@ -98,6 +95,18 @@ def series_json(labels: Column) -> Column:
     fingerprint (planner, API budgets, debug dumps, downsample) is this
     expression."""
     return F.to_json(F.map_from_entries(F.array_sort(F.map_entries(labels))))
+
+
+def canonical_series_json(labels: dict) -> str:
+    """The driver-side replay of :func:`series_json`: sorted keys, compact
+    separators, every value STRINGIFIED (a long label column would
+    otherwise print unquoted and give the same series a different 60-bit
+    id across /debug/index_dump and /debug/index_dump_by_labels), null
+    (absent) labels dropped like a labels map never holds them."""
+    return json.dumps(
+        {k: str(v) for k, v in labels.items() if v is not None},
+        sort_keys=True, separators=(",", ":"),
+    )
 
 
 #: 60-bit content hash of the canonical label encoding — the series_id.

@@ -15,8 +15,12 @@ most that query's pins.  The open scope lives in a
 concurrent queries never release each other's pin lists.
 
 With no scope open, :func:`pinned` returns the frame unchanged: a
-persist with no owner could never be released.  A pin only saves work,
-so a builder's result is the same with or without a scope.
+persist with no owner could never be released.  Neither does it record
+a frame whose plan is already cached: the cache entry is keyed by plan,
+so the scope that cached it first owns it, and an inner scope that
+pinned the same plan would otherwise release the outer scope's pin.  A
+pin only saves work, so a builder's result is the same with or without
+a scope.
 """
 
 from __future__ import annotations
@@ -25,6 +29,7 @@ from collections.abc import Iterator
 from contextlib import contextmanager
 from contextvars import ContextVar
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 _SCOPE: ContextVar[list[DataFrame] | None] = ContextVar("pin_scope",
@@ -47,9 +52,10 @@ def pin_scope() -> Iterator[list[DataFrame]]:
 
 def pinned(df: DataFrame) -> DataFrame:
     """``df.persist()`` owned by the open :func:`pin_scope`, or ``df``
-    itself when none is open.  Chains as ``.transform(pinned)``."""
+    itself when none is open or its plan is already cached.  Chains as
+    ``.transform(pinned)``."""
     pins = _SCOPE.get()
-    if pins is None:
+    if pins is None or df.storageLevel != StorageLevel.NONE:
         return df
     pins.append(df.persist())
     return pins[-1]

@@ -18,6 +18,10 @@ Spark mapping (SURVEY §1.5): a streaming source feeds two sinks —
   that are still stored raw but skip pre-aggregation. Identical semantics,
   expressed as one `withWatermark().groupBy(window(...))`.
 
+The HTTP daemon writes through :class:`PointStore`, whose in-memory head
+(A5) flushes (A6) through :func:`write_points`, the batch twin of
+:func:`points_sink`.
+
 Ingest-time rules mirrored from the reference:
 * future-timestamp cap +48 h (config/default.go:100),
 * null/invalid sample rejection (api/remotestorage/write.go:185-231),
@@ -26,9 +30,17 @@ Ingest-time rules mirrored from the reference:
 
 from __future__ import annotations
 
+import functools
+import shutil
+import tempfile
+import threading
+import time
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from squirreldb_spark.model import canonical_series_json
 
 EVENT_SCHEMA = (
     "event_id long, ts long, user_id long, event_type string, value double, props string"
@@ -79,6 +91,15 @@ def decode_write_stream(payloads: DataFrame, body_col: str = "body") -> DataFram
     )
 
 
+def _valid_samples(stream: DataFrame, now_ms: int | None) -> DataFrame:
+    """The sample rules both validators share: a value, ``ts > 0`` and,
+    given ``now_ms``, no later than ``now_ms + MAX_FUTURE_MS``."""
+    out = stream.filter(F.col("value").isNotNull() & (F.col("ts") > 0))
+    if now_ms is None:
+        return out
+    return out.filter(F.col("ts") <= F.lit(now_ms + MAX_FUTURE_MS))
+
+
 def validate_map(
     stream: DataFrame, tenant: str = "default", now_ms: int | None = None,
     tenant_label: str = "__account_id", ttl_seconds: int | None = None,
@@ -88,21 +109,15 @@ def validate_map(
     and inject/replace the tenant label inside the map (write.go:82-109
     builder.Set semantics)."""
     out = (
-        stream.filter(F.col("value").isNotNull())
+        _valid_samples(stream, now_ms)
         .withColumn(
             "labels", F.map_filter("labels", lambda k, v: v != F.lit(""))
         )
         .filter(F.element_at("labels", F.lit("__name__")).isNotNull())
-        .filter(F.col("ts").isNotNull() & (F.col("ts") > 0))
-    )
-    if now_ms is not None:
-        out = out.filter(F.col("ts") <= F.lit(now_ms + MAX_FUTURE_MS))
-    out = out.withColumn(
-        "labels",
-        F.map_concat(
+        .withColumn("labels", F.map_concat(
             F.map_filter("labels", lambda k, v: k != F.lit(tenant_label)),
             F.create_map(F.lit(tenant_label), F.lit(tenant)),
-        ),
+        ))
     )
     if ttl_seconds is not None:
         # per-write TTL (X-SquirrelDB-TTL, write.go timeToLiveSeconds):
@@ -117,14 +132,11 @@ def validate(stream: DataFrame, tenant: str = "default", now_ms: int | None = No
 
     Pure narrow filters — no shuffle, fully pushed into the source scan.
     """
-    out = (
-        stream.filter(F.col("value").isNotNull())
+    return (
+        _valid_samples(stream, now_ms)
         .filter(F.col("event_type").isNotNull() & (F.col("event_type") != ""))
-        .filter(F.col("ts").isNotNull() & (F.col("ts") > 0))
+        .withColumn("tenant", F.lit(tenant))
     )
-    if now_ms is not None:
-        out = out.filter(F.col("ts") <= F.lit(now_ms + MAX_FUTURE_MS))
-    return out.withColumn("tenant", F.lit(tenant))
 
 
 def partition_date(ts: Column) -> Column:
@@ -134,17 +146,25 @@ def partition_date(ts: Column) -> Column:
     return F.to_date(F.timestamp_millis(ts))
 
 
+def _with_date(points: DataFrame) -> DataFrame:
+    return points.withColumn("date", partition_date(F.col("ts")))
+
+
+def write_points(valid: DataFrame, path: str) -> None:
+    """Batch raw append: ``valid`` (event or map-labelled points) plus its
+    ``date`` partition, appended to the date-partitioned parquet table at
+    ``path`` (the Spark analogue of the 5-day base_ts partitions,
+    tsdb.go:39). :func:`points_sink` is its streaming twin."""
+    _with_date(valid).write.partitionBy("date").mode("append").parquet(path)
+
+
 def points_sink(
     valid: DataFrame, path: str, checkpoint: str, available_now: bool = True
 ) -> StreamingQuery:
-    """Raw append sink, partitioned by UTC date for pruning + retention
-    (the Spark analogue of the 5-day base_ts partitions, tsdb.go:39)."""
-    pts = valid.select(
-        "user_id", "event_type", "tenant", "ts", "value",
-        partition_date(F.col("ts")).alias("date"),
-    )
+    """Streaming raw append in :func:`write_points`' layout; exactly-once
+    through the sink's manifest."""
     writer = (
-        pts.writeStream.format("parquet")
+        _with_date(valid).writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .partitionBy("date")
@@ -207,8 +227,123 @@ def run_ingest(
         "points": f"{out_dir}/points",
         "downsample": f"{out_dir}/downsample_5m",
     }
-    q1 = points_sink(valid, paths["points"], f"{out_dir}/_cp_points")
+    events = valid.select("user_id", "event_type", "tenant", "ts", "value")
+    q1 = points_sink(events, paths["points"], f"{out_dir}/_cp_points")
     q2 = downsample_sink(valid, paths["downsample"], f"{out_dir}/_cp_downsample")
     q1.awaitTermination(timeout_s)
     q2.awaitTermination(timeout_s)
     return paths
+
+
+#: samples the in-memory head holds before it is flushed to parquet; a
+#: head sample costs about 180 B, so the head stays under about 47 MB
+HEAD_SAMPLES = 2 ** 18
+
+
+class PointStore:
+    """The daemon's samples: the history, the parquet the store flushed
+    and an in-memory head of recent writes (A5/A6).
+
+    :meth:`append` keeps what :func:`validate_map` keeps. A full head, or
+    :meth:`flush`, goes out through :func:`write_points` into a private
+    directory that :meth:`stop` removes. Appends, flushes and the
+    snapshot :meth:`relation` takes share one lock, and a snapshot copies
+    the head rows and fixes its parquet file listing, so a read sees each
+    acknowledged sample exactly once.
+    """
+
+    def __init__(self, spark: SparkSession, history: DataFrame | None = None,
+                 tenant_label: str = "__account_id"):
+        self.spark = spark
+        self.history = history
+        self.tenant_label = tenant_label
+        self._head: list[tuple[dict, int, float]] = []
+        self._dir: str | None = None
+        self._flushed: DataFrame | None = None
+        #: canonical series JSON -> max(ts + TTL) in epoch seconds, over
+        #: the writes that carried a TTL
+        self._expiry: dict[str, float] = {}
+        self._lock = threading.RLock()
+
+    @property
+    def head_samples(self) -> int:
+        return len(self._head)
+
+    def append(self, series, tenant: str | None = None,
+               ttl_s: int | None = None) -> int:
+        """A2/A3 + A5: validate, set the tenant label and append to the
+        head; returns the samples kept."""
+        horizon = int(time.time() * 1000) + MAX_FUTURE_MS
+        rows: list[tuple[dict, int, float]] = []
+        expiry: dict[str, float] = {}
+        for ts in series:
+            labels = {k: v for k, v in ts.labels.items() if v != ""}
+            if "__name__" not in labels:
+                continue
+            if tenant is not None:
+                labels[self.tenant_label] = tenant
+            first = len(rows)
+            for s in ts.samples:
+                if 0 < s.timestamp_ms <= horizon:
+                    rows.append((labels, s.timestamp_ms, s.value))
+            if ttl_s is not None and len(rows) > first:
+                key = canonical_series_json(labels)
+                exp = max(r[1] for r in rows[first:]) / 1000 + ttl_s
+                expiry[key] = max(exp, expiry.get(key, exp))
+        with self._lock:
+            for key, exp in expiry.items():
+                self._expiry[key] = max(exp, self._expiry.get(key, exp))
+            todo = rows
+            while todo:
+                room = HEAD_SAMPLES - len(self._head)
+                self._head.extend(todo[:room])
+                todo = todo[room:]
+                if len(self._head) >= HEAD_SAMPLES:
+                    self.flush()
+        return len(rows)
+
+    def flush(self) -> int:
+        """Write the head out as parquet; returns the samples written."""
+        with self._lock:
+            n = len(self._head)
+            if n:
+                if self._dir is None:
+                    self._dir = tempfile.mkdtemp(prefix="squirreldb-points-")
+                write_points(self._head_frame(self._head), self._dir)
+                self._flushed = self.spark.read.parquet(self._dir)
+                self._head = []
+            return n
+
+    def _head_frame(self, rows: list) -> DataFrame:
+        return _with_date(self.spark.createDataFrame(
+            rows, "labels map<string,string>, ts long, value double"))
+
+    def relation(self) -> DataFrame:
+        """History ∪ flushed ∪ head in the history's columns (with no
+        history: ``labels, ts, value, date``); the history itself while
+        nothing was written."""
+        with self._lock:
+            rows = list(self._head)
+            parts = [] if self._flushed is None else [self._flushed]
+        history = self.history
+        if history is not None and not (rows or parts):
+            return history
+        if rows or not parts:
+            parts.append(self._head_frame(rows))
+        if history is not None:
+            parts = [history] + [df.select(*[
+                F.col(f.name).cast(f.dataType).alias(f.name)
+                for f in history.schema]) for df in parts]
+        return functools.reduce(DataFrame.unionByName, parts)
+
+    def expiry(self) -> dict[str, float]:
+        """Series JSON -> expiry epoch seconds, for series written with a TTL."""
+        with self._lock:
+            return dict(self._expiry)
+
+    def stop(self) -> None:
+        """Remove the flushed parquet."""
+        with self._lock:
+            if self._dir is not None:
+                shutil.rmtree(self._dir, ignore_errors=True)
+            self._dir = self._flushed = None

@@ -1,4 +1,4 @@
-"""Storage maintenance operators: dedup, retention, limits, label APIs.
+"""Storage maintenance operators: dedup, retention, label APIs, index checks.
 
 * A7  — sort + dedup points: keep the most recent write per (series, ts)
   (types/metric.go:71-109, batch/batch.go:701-735). NaN ordering rule:
@@ -8,7 +8,6 @@
   reference (cassandra/index/index.go:2594-2742) collapse into a partition-
   pruned delete / filter on the time column.
 * A22 — LabelValues / LabelNames: distinct over the series dimension.
-* A25/A26 — per-query series/points limits enforced as cheap count guards.
 """
 
 from __future__ import annotations
@@ -83,18 +82,6 @@ def clamp_future(points: DataFrame, now_ms: int, max_future_seconds: int = 48 * 
 def label_values(series_dim: DataFrame, column: str) -> DataFrame:
     """A22: sorted distinct values of one label."""
     return series_dim.select(column).distinct().orderBy(column)
-
-
-def check_series_limit(series_dim: DataFrame, max_series: int) -> None:
-    """A25: abort if the matcher resolved to too many series.
-
-    ``max_series`` falsy = unlimited (the reference's default) — return
-    before launching any Spark job."""
-    if not max_series:
-        return
-    n = series_dim.limit(max_series + 1).count()
-    if n > max_series:
-        raise RuntimeError(f"max_evaluated_series exceeded: {n} > {max_series}")
 
 
 def verify_index(

@@ -276,8 +276,9 @@ def test_remote_read_streamed_chunks(spark):
         series = [
             codec.TimeSeries(
                 labels={"__name__": "stream_metric", "inst": f"i{j}"},
+                # ts > 0: a sample at 0 is invalid and dropped at write
                 samples=[
-                    codec.Sample(float(j * 100 + k), 1_000 * k)
+                    codec.Sample(float(j * 100 + k), 1_000 * (k + 1))
                     for k in range(10)
                 ],
             )
@@ -328,7 +329,7 @@ def test_remote_read_streamed_chunks(spark):
                         (s.value, s.timestamp_ms) for s in smp
                     )
         assert got == {
-            f"i{j}": [(float(j * 100 + k), 1_000 * k) for k in range(10)]
+            f"i{j}": [(float(j * 100 + k), 1_000 * (k + 1)) for k in range(10)]
             for j in range(3)
         }
     finally:
@@ -850,15 +851,14 @@ def test_canonical_series_json_matches_spark_to_json(spark):
     labels dropped — so the 60-bit ids agree across the two dumps."""
     from pyspark.sql import functions as F
 
-    from squirreldb_spark.http_api import _canonical_series_json
-    from squirreldb_spark.model import series_json
+    from squirreldb_spark.model import canonical_series_json, series_json
 
     df = spark.createDataFrame(
         [({"job": "api", "shard": "7", "inst": "a"},)], "labels map<string,string>"
     )
     want = df.select(series_json(F.col("labels")).alias("s")).collect()[0]["s"]
     # column-store row shape: a long-typed label and a NULL label
-    got = _canonical_series_json(
+    got = canonical_series_json(
         {"job": "api", "shard": 7, "inst": "a", "extra": None}
     )
     assert got == want
@@ -939,11 +939,9 @@ def test_parse_query_endpoint(base):
 def test_writes_after_partitioned_history_are_queryable(spark, tmp_path):
     """Remote writes after a date-partitioned history (built the
     streaming-ingest way: decode_write_stream -> validate_map ->
-    partitionBy("date")) are read together with it. The write buffer is
-    built in the history's schema, so the planner's date pruning keeps
-    the written rows instead of dropping them for a null ``date``."""
-    from pyspark.sql import functions as F
-
+    write_points) are read together with it. The store serves writes in
+    the history's columns, so the planner's date pruning keeps the
+    written rows instead of dropping them for a null ``date``."""
     from squirreldb_spark.streaming import ingest
 
     labels = {"__name__": "m", "job": "node"}
@@ -955,10 +953,9 @@ def test_writes_after_partitioned_history_are_queryable(spark, tmp_path):
         [(bytearray(codec.encode_remote_write_body([history])),)], "body binary"
     )
     path = str(tmp_path / "history")
-    (
-        ingest.validate_map(ingest.decode_write_stream(bodies), tenant="t1")
-        .withColumn("date", ingest.partition_date(F.col("ts")))
-        .write.partitionBy("date").parquet(path)
+    ingest.write_points(
+        ingest.validate_map(ingest.decode_write_stream(bodies), tenant="t1"),
+        path,
     )
     srv = PromHTTPServer(spark, base_points=spark.read.parquet(path)).start()
     try:
@@ -997,8 +994,6 @@ def test_series_over_partitioned_history_prunes_dates(spark, tmp_path):
     """/api/v1/series selects through the engine's time bound, so over a
     date-partitioned history (built the streaming-ingest way) its scan
     carries a ``date`` partition filter, and it stays tenant-scoped."""
-    from pyspark.sql import functions as F
-
     from squirreldb_spark.api import RequestOptions
     from squirreldb_spark.streaming import ingest
 
@@ -1011,10 +1006,9 @@ def test_series_over_partitioned_history_prunes_dates(spark, tmp_path):
         [(bytearray(codec.encode_remote_write_body([history])),)], "body binary"
     )
     path = str(tmp_path / "history")
-    (
-        ingest.validate_map(ingest.decode_write_stream(bodies), tenant="t1")
-        .withColumn("date", ingest.partition_date(F.col("ts")))
-        .write.partitionBy("date").parquet(path)
+    ingest.write_points(
+        ingest.validate_map(ingest.decode_write_stream(bodies), tenant="t1"),
+        path,
     )
     srv = PromHTTPServer(spark, base_points=spark.read.parquet(path)).start()
     try:
@@ -1131,3 +1125,204 @@ def test_debug_index_dump_past_limit_is_rejected(many_base):
         status, out = _get(f"{many_base}{path}")
         assert status == 422 and out["errorType"] == "execution"
 
+
+
+# ------------------------------------------------------------ point store
+
+_SNAPPY = {"Content-Encoding": "snappy",
+           "Content-Type": "application/x-protobuf"}
+
+
+def _gauge(b: str) -> int:
+    _, text = _get_raw(f"{b}/metrics")
+    for line in text.decode().splitlines():
+        if line.startswith("squirreldb_buffered_points "):
+            return int(line.split()[1])
+    raise AssertionError("no squirreldb_buffered_points line")
+
+
+def _count(b: str, tenant: str = "t1") -> int:
+    """Every sample of metric ``w`` through one count_over_time read."""
+    q = urllib.parse.quote("sum(count_over_time(w[1h]))")
+    status, out = _get(f"{b}/api/v1/query?query={q}&time=3600",
+                       {"X-SquirrelDB-Tenant": tenant})
+    assert status == 200, out
+    return sum(int(float(r["value"][1])) for r in out["data"]["result"])
+
+
+def _write_w(b: str, batch: int, n: int, ttl: str | None = None) -> None:
+    """POST ``n`` samples of ``w{batch=...}`` spread over the first hour."""
+    body = codec.encode_remote_write_body([codec.TimeSeries(
+        labels={"__name__": "w", "batch": str(batch)},
+        samples=[codec.Sample(float(k), 1_000 + 10_000 * k) for k in range(n)],
+    )])
+    headers = dict(_SNAPPY, **{"X-SquirrelDB-Tenant": "t1"})
+    if ttl is not None:
+        headers["X-SquirrelDB-TTL"] = ttl
+    status, _ = _post(f"{b}/api/v1/write", body, headers)
+    assert status == 204
+
+
+@pytest.fixture
+def store_server(spark, monkeypatch):
+    from squirreldb_spark.streaming import ingest
+
+    monkeypatch.setattr(ingest, "HEAD_SAMPLES", 40)
+    srv = PromHTTPServer(spark).start()
+    yield srv, f"http://127.0.0.1:{srv.port}"
+    srv.stop()
+
+
+def test_write_validation_matches_validate_map(spark):
+    """The daemon keeps exactly the samples the streaming path keeps: a
+    series without ``__name__``, empty-valued labels and a sample past
+    now + 48 h are dropped, and only kept samples are counted."""
+    import time
+
+    from squirreldb_spark.streaming import ingest
+
+    future = int(time.time() * 1000) + 49 * 3600 * 1000
+    body = codec.encode_remote_write_body([
+        codec.TimeSeries(labels={"__name__": "v", "job": "a", "empty": ""},
+                         samples=[codec.Sample(1.0, 10_000),
+                                  codec.Sample(2.0, future)]),
+        codec.TimeSeries(labels={"job": "noname"},
+                         samples=[codec.Sample(3.0, 10_000)]),
+    ])
+    srv = PromHTTPServer(spark).start()
+    try:
+        b = f"http://127.0.0.1:{srv.port}"
+        tenant = {"X-SquirrelDB-Tenant": "t1"}
+        status, _ = _post(f"{b}/api/v1/write", body, dict(_SNAPPY, **tenant))
+        assert status == 204
+        status, out = _get(
+            f"{b}/api/v1/series?match[]=%7Bjob%3D~%22.%2B%22%7D"
+            "&start=0&end=32503680000", tenant)
+        assert status == 200
+        assert out["data"] == [{"__name__": "v", "job": "a", "__account_id": "t1"}]
+        status, out = _get(f"{b}/api/v1/query?query=v&time={future // 1000}",
+                           tenant)
+        assert status == 200 and out["data"]["result"] == []
+        _, text = _get_raw(f"{b}/metrics")
+        assert "squirreldb_ingested_samples_total 1\n" in text.decode()
+
+        def samples(df):
+            return sorted((tuple(sorted(r["labels"].items())), r["ts"], r["value"])
+                          for r in df.collect())
+
+        streamed = ingest.validate_map(
+            ingest.decode_write_stream(
+                spark.createDataFrame([(bytearray(body),)], "body binary")),
+            tenant="t1", now_ms=int(time.time() * 1000),
+        )
+        assert samples(srv.store.relation()) == samples(streamed)
+    finally:
+        srv.stop()
+
+
+def test_sustained_writes_keep_the_head_bounded(store_server):
+    """Writes past several bounds flush; the head never holds more than
+    the bound and a read sees every acknowledged sample exactly once."""
+    srv, b = store_server
+    for i in range(10):
+        _write_w(b, i, 15)
+        assert _gauge(b) <= 40
+    assert srv.store.head_samples == 150 - 3 * 40
+    assert _count(b) == 150
+
+
+def test_read_overlapping_a_flush_sees_each_sample_once(store_server):
+    """A relation taken before a flush, and reads running while flushes
+    happen, count every acknowledged sample once."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    srv, b = store_server
+    _write_w(b, 0, 30)
+    before = srv.store.relation()
+    assert srv.store.flush() == 30
+    _write_w(b, 1, 30)
+    between = srv.store.relation()
+    assert srv.store.flush() == 30
+    assert before.count() == 30 and between.count() == 60
+    _write_w(b, 2, 30)
+    with ThreadPoolExecutor(max_workers=3) as ex:
+        reads = [ex.submit(_count, b) for _ in range(2)]
+        flushed = ex.submit(_get, f"{b}/debug/flush")
+        assert [r.result(timeout=300) for r in reads] == [90, 90]
+        assert flushed.result(timeout=300)[1]["points"] == 30
+    assert _count(b) == 90
+
+
+def test_debug_flush_empties_the_head(store_server):
+    srv, b = store_server
+    _write_w(b, 0, 25)
+    assert _gauge(b) == 25
+    status, out = _get(f"{b}/debug/flush")
+    assert status == 200 and out["points"] == 25
+    assert _gauge(b) == 0
+    assert _count(b) == 25
+
+
+def test_expiration_dump_survives_a_flush(store_server):
+    srv, b = store_server
+    _write_w(b, 0, 5, ttl="86400")
+    _write_w(b, 1, 5)
+    url = f"{b}/debug/index_dump_by_expiration?date=1970-01-02"
+    _, dump = _get_raw(url)
+    assert len(dump.decode().splitlines()) == 1
+    _get(f"{b}/debug/flush")
+    assert _get_raw(url)[1] == dump
+
+
+def test_stop_removes_the_flushed_parquet(spark, monkeypatch):
+    import os
+
+    from squirreldb_spark.streaming import ingest
+
+    monkeypatch.setattr(ingest, "HEAD_SAMPLES", 10)
+    srv = PromHTTPServer(spark).start()
+    _write_w(f"http://127.0.0.1:{srv.port}", 0, 12)
+    path = srv.store._dir
+    assert path and os.listdir(path)
+    srv.stop()
+    assert not os.path.exists(path)
+
+
+def test_concurrent_appends_lose_no_sample(spark, monkeypatch):
+    """More appending threads than cores, a short switch interval and a
+    small bound: every kept sample is in the relation exactly once and
+    the head never passes the bound."""
+    import sys
+    import threading
+
+    from squirreldb_spark.streaming import ingest
+
+    monkeypatch.setattr(ingest, "HEAD_SAMPLES", 300)
+    store = ingest.PointStore(spark)
+    peak = []
+
+    def writer(w: int) -> None:
+        for i in range(20):
+            store.append([codec.TimeSeries(
+                labels={"__name__": "w", "writer": str(w), "i": str(i)},
+                samples=[codec.Sample(1.0, 1_000 + k) for k in range(10)],
+            )], "t1", 60)
+            peak.append(store.head_samples)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=writer, args=(w,)) for w in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    try:
+        assert max(peak) <= 300
+        assert store.relation().count() == 8 * 20 * 10
+        assert len(store.expiry()) == 8 * 20
+    finally:
+        store.stop()

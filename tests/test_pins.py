@@ -52,6 +52,26 @@ def test_nested_scope_releases_only_its_own_pins(spark):
     assert _cache(spark).isEmpty()
 
 
+def test_nested_scope_pinning_the_same_plan_keeps_the_outer_pin(spark):
+    """The cache is keyed by plan: an inner scope that pins a fresh frame
+    with the outer pin's plan must not release the outer pin on exit."""
+    spark.catalog.clearCache()
+
+    def build():
+        return spark.range(12).selectExpr("id * 7 as v")
+
+    with pin_scope():
+        outer = build().transform(pinned)
+        outer.count()
+        with pin_scope():
+            inner = build().transform(pinned)
+            assert inner.count() == 12
+        assert outer.storageLevel.useMemory
+        assert not _cache(spark).isEmpty()
+    assert not outer.storageLevel.useMemory
+    assert _cache(spark).isEmpty()
+
+
 def test_scope_releases_pins_when_the_query_raises(spark):
     spark.catalog.clearCache()
     try:

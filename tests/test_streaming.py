@@ -144,9 +144,7 @@ def test_remote_write_payload_stream_decodes_end_to_end(spark, tmpdir):
     decoded = ingest.decode_write_stream(stream)
     valid = ingest.validate_map(decoded, tenant="t1")
     out_dir = f"{tmpdir}/decoded_out"
-    q = (valid.writeStream.format("parquet").option("path", out_dir)
-         .option("checkpointLocation", f"{tmpdir}/_cp_dec")
-         .trigger(availableNow=True).start())
+    q = ingest.points_sink(valid, out_dir, f"{tmpdir}/_cp_dec")
     q.awaitTermination(120)
 
     rows = spark.read.parquet(out_dir).collect()
@@ -179,9 +177,7 @@ def test_remote_write_to_promql_query_full_loop(spark, tmpdir):
     stream = spark.readStream.schema("body binary").parquet(src)
     valid = ingest.validate_map(ingest.decode_write_stream(stream), tenant="t9")
     store = f"{tmpdir}/rw_store"
-    q = (valid.writeStream.format("parquet").option("path", store)
-         .option("checkpointLocation", f"{tmpdir}/_cp_rw")
-         .trigger(availableNow=True).start())
+    q = ingest.points_sink(valid, store, f"{tmpdir}/_cp_rw")
     q.awaitTermination(120)
 
     pts = spark.read.parquet(store)
