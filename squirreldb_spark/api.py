@@ -31,6 +31,7 @@ and ``date`` partition pruning, with no lookback.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -161,6 +162,7 @@ class PromAPI:
         preagg_until_ms: int | None = None,
         labels_map_col: str | None = None,
         max_samples: int | None = None,
+        rows_bound: int | None = None,
     ):
         self.points = points
         self.label_cols = tuple(label_cols)
@@ -179,6 +181,9 @@ class PromAPI:
         #: always-on total-sample budget (the reference engine's
         #: MaxSamples=50M, api/promql/engine.go:39-41); None = unlimited
         self.max_samples = max_samples
+        #: an upper bound on ``points``' rows (None = unknown), e.g. the
+        #: PointStore snapshot's; it lets :meth:`_guard` skip its count
+        self.rows_bound = rows_bound
 
     # ------------------------------------------------------------ internals
 
@@ -220,11 +225,20 @@ class PromAPI:
         """A25/A26 series/points limits plus the engine sample budget
         (``max_samples``), counted on the relation the query reads
         (:attr:`PromQLEngine.scanned`: tenant-scoped, time-bounded to the
-        AST's own sample window and partition-pruned) — one scanned-rows
-        count, only when a limit is configured."""
+        AST's own sample window and partition-pruned).
+
+        The sample limits (``max_samples``, ``max_evaluated_points``) take
+        one exact scanned-rows count — unless :attr:`rows_bound` is at
+        most every one of them: ``scanned`` is a filter of ``points``, so
+        it cannot exceed a limit its whole relation stays under, and no
+        count runs (upstream counts while loading and pays no separate
+        pass either). The series limit takes a distinct count, only when
+        its header is sent."""
         max_points = opts.max_evaluated_points if opts else None
         max_series = opts.max_evaluated_series if opts else None
-        if max_points is not None or self.max_samples is not None:
+        budgets = [b for b in (self.max_samples, max_points) if b is not None]
+        if budgets and (self.rows_bound is None
+                        or self.rows_bound > min(budgets)):
             n = scanned.count()
             if self.max_samples is not None and n > self.max_samples:
                 raise LimitExceeded(
@@ -324,28 +338,47 @@ class PromAPI:
             return pts.select(F.col("__series__").alias("series")).distinct()
         return pts.select(*self.label_cols).distinct()
 
-    def labels(self, opts: RequestOptions | None = None) -> list[str]:
+    def _matching(self, cols: list, matchers: list[str] | None,
+                  start_ms: int, end_ms: int,
+                  opts: RequestOptions | None) -> DataFrame:
+        """``cols`` over the raw samples that any of the ``matchers``
+        selectors picks in the inclusive ``[start, end]`` (a union, as
+        for repeated ``match[]`` params); with no matchers, every sample
+        of the tenant-scoped relation in that range."""
+        sels = ([parser.parse(m) for m in matchers] if matchers
+                else [VectorSelector(None, ())])
+        return functools.reduce(DataFrame.unionByName, [
+            self._select(sel, start_ms, end_ms, opts).select(*cols)
+            for sel in sels
+        ])
+
+    def labels(self, opts: RequestOptions | None = None,
+               matchers: list[str] | None = None,
+               start_ms: int = MIN_TS_MS, end_ms: int = MAX_TS_MS) -> list[str]:
         """/api/v1/labels — fixed-schema label columns (+ __name__); with
-        a dynamic map column, also every label NAME present in the data
-        (the reference's label-names index scan, index.go:1903-2136).
-        More than :data:`RESULT_LIMIT` names raises
-        :class:`LimitExceeded`."""
+        a dynamic map column, also every label NAME of the samples
+        ``matchers`` selects in ``[start, end]`` (the reference's
+        label-names index scan, index.go:1903-2136). More than
+        :data:`RESULT_LIMIT` names raises :class:`LimitExceeded`."""
         names = set(self.label_cols) | {"__name__"}
         if self.labels_map_col is not None:
             rows = collect_at_most(
-                self._scoped(opts)
-                .select(
-                    F.explode(F.map_keys(F.col(self.labels_map_col))).alias("k")
-                )
-                .distinct(),
+                self._matching(
+                    [F.explode(F.map_keys(F.col(self.labels_map_col)))
+                     .alias("k")],
+                    matchers, start_ms, end_ms, opts,
+                ).distinct(),
                 RESULT_LIMIT, "label names",
             )
             names |= {r.k for r in rows}
         return sorted(names)
 
-    def label_values(self, name: str,
-                     opts: RequestOptions | None = None) -> DataFrame:
-        """/api/v1/label/<name>/values."""
+    def label_values(self, name: str, opts: RequestOptions | None = None,
+                     matchers: list[str] | None = None,
+                     start_ms: int = MIN_TS_MS,
+                     end_ms: int = MAX_TS_MS) -> DataFrame:
+        """/api/v1/label/<name>/values over the samples ``matchers``
+        selects in ``[start, end]``."""
         col = self.name_label if name == "__name__" else name
         if col in self.label_cols:
             expr = F.col(col).cast("string")
@@ -354,8 +387,8 @@ class PromAPI:
         else:
             raise ValueError(f"unknown label {name!r}")
         return (
-            self._scoped(opts)
-            .select(expr.alias("value"))
+            self._matching([expr.alias("value")], matchers, start_ms,
+                           end_ms, opts)
             .filter(F.col("value").isNotNull())
             .distinct()
             .orderBy("value")

@@ -27,6 +27,18 @@ lookups, remote read and the index dumps — mirroring the reference's
 __account_id flow (api/remotestorage/write.go:80-170,
 api/promql/queryable.go:153-165).
 
+Serving-sized reads. The server makes one serving session
+(:func:`~squirreldb_spark.session.serving_session`: a sibling of the
+caller's session on the same SparkContext, with AQE off and one shuffle
+partition). A request's relation is built there while the whole store
+fits in one scan split — history plus flushed parquet by Catalyst size,
+plus an estimate for the head, at most the caller's
+``spark.sql.files.maxPartitionBytes`` — because such a scan is one task
+anyway; a larger store is read in the caller's session with its AQE.
+The caller's confs are never changed. The relation also comes with an
+upper bound on its rows, which lets the sample budgets skip their count
+job while the whole store is under them (:meth:`PromAPI._guard`).
+
 Headers honored (types/types.go:171-195):
 
 * ``X-SquirrelDB-Tenant``        tenant scope (write: injected label)
@@ -61,6 +73,7 @@ from squirreldb_spark.api import (
     run_with_timeout,
 )
 from squirreldb_spark.model import canonical_series_json, series_json
+from squirreldb_spark.session import serving_session
 from squirreldb_spark.streaming.ingest import PointStore
 
 #: reference api/api.go: decoded request bodies are size-limited
@@ -154,14 +167,19 @@ _MOCKED_V1_ROUTES: dict[str, tuple[int, dict]] = {
 }
 
 
+def _time_range(params: dict) -> tuple[int, int]:
+    """The ``start``/``end`` params in epoch ms; all of time by default."""
+    return (_parse_time_s(params.get("start", ["0"])[0]),
+            _parse_time_s(params.get("end", ["32503680000"])[0]))
+
+
 def _match_series(api: PromAPI, params: dict,
                   opts: RequestOptions) -> list[str]:
     """Canonical label-set JSON of every series a ``match[]`` selector
     picks in ``[start, end]``; repeated ``match[]`` params are a union
     (upstream API semantics). More than :data:`SERIES_LIMIT` raises
     :class:`LimitExceeded` instead of answering with a partial list."""
-    start = _parse_time_s(params.get("start", ["0"])[0])
-    end = _parse_time_s(params.get("end", ["32503680000"])[0])
+    start, end = _time_range(params)
     df = functools.reduce(DataFrame.unionByName, [
         api.series(m, start, end, opts) for m in params.get("match[]", ["{}"])
     ]).distinct()
@@ -219,9 +237,11 @@ class PromHTTPServer:
     ``base_points`` (optional) is the history, e.g. the date-partitioned
     parquet the streaming ingest path writes. It and every remote write
     live in :attr:`store`, a :class:`PointStore` whose in-memory head is
-    bounded and flushes to parquet. A reading request takes one points
-    relation from the store and builds one :class:`PromAPI` over it
-    (:meth:`_api`) that serves both the query and its formatting.
+    bounded and flushes to parquet. A reading request takes one store
+    snapshot — a points relation, in the serving session while the
+    store fits in one scan split, and an upper bound on its rows — and
+    builds one :class:`PromAPI` over it (:meth:`_api`) that serves both
+    the query and its formatting.
     """
 
     def __init__(
@@ -239,7 +259,8 @@ class PromHTTPServer:
         **api_kwargs,
     ):
         self.spark = spark
-        self.store = PointStore(spark, base_points, tenant_label)
+        self.store = PointStore(spark, base_points, tenant_label,
+                                serving=serving_session(spark))
         self.host = host
         self._requested_port = port
         self.tenant_label = tenant_label
@@ -284,7 +305,8 @@ class PromHTTPServer:
             max_samples=self.max_samples,
         )
         kwargs.update(self.api_kwargs)
-        return PromAPI(self.store.relation(), **kwargs)
+        points, rows = self.store.snapshot()
+        return PromAPI(points, rows_bound=rows, **kwargs)
 
     def ingest(self, series: list[codec.TimeSeries],
                tenant: str | None, ttl_s: int | None) -> int:
@@ -553,7 +575,8 @@ class PromHTTPServer:
                 return
             if path == "/api/v1/labels":
                 opts = self._opts(handler)
-                names = timed(lambda: api().labels(opts))
+                names = timed(lambda: api().labels(
+                    opts, params.get("match[]"), *_time_range(params)))
                 self._send_json(
                     handler, 200, {"status": "success", "data": names},
                 )
@@ -562,7 +585,8 @@ class PromHTTPServer:
             if m:
                 opts = self._opts(handler)
                 rows = timed(lambda: collect_at_most(
-                    api().label_values(m.group(1), opts),
+                    api().label_values(m.group(1), opts, params.get("match[]"),
+                                       *_time_range(params)),
                     SERIES_LIMIT, "label values",
                 ))
                 self._send_json(

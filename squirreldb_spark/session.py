@@ -4,13 +4,20 @@ The engine targets a large multi-executor cluster over ~100 TB of parquet;
 tests run on ``local[N]``. All settings below are *dynamic* SQL confs so they
 can also be applied to a session we did not create (the verification driver
 passes us its own session) — see :func:`configure_session`.
+
+The HTTP daemon also reads small stores in a :func:`serving_session`: a
+sibling of the caller's session (same SparkContext, own SQLConf) with
+AQE off and one shuffle partition, so a serving-sized read is planned
+once and runs about two jobs instead of one per AQE query stage. The
+caller's session keeps its own confs; :func:`in_session` moves an
+existing DataFrame's plan into the sibling.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Dynamic confs applied to every session (ours or driver-provided).
 #: These are deliberately all runtime-settable SQLConf entries.  A change
@@ -51,6 +58,34 @@ def configure_session(spark: SparkSession) -> SparkSession:
             # a conf may be static on some builds; never fail configuration
             pass
     return spark
+
+
+#: What a serving session sets on top of :data:`_DYNAMIC_CONFS`. A store
+#: that fits in one scan split is read by one task, so one shuffle
+#: partition loses no parallelism, and without AQE the read is not cut
+#: into one Spark job per query stage.
+_SERVING_CONFS: dict[str, str] = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.shuffle.partitions": "1",
+}
+
+
+def serving_session(spark: SparkSession) -> SparkSession:
+    """A new session on ``spark``'s SparkContext (so job groups and
+    cancellation are shared) with the engine's confs plus
+    :data:`_SERVING_CONFS`; ``spark``'s own confs are left untouched."""
+    serving = configure_session(spark.newSession())
+    for key, value in _SERVING_CONFS.items():
+        serving.conf.set(key, value)
+    return serving
+
+
+def in_session(df: DataFrame, session: SparkSession) -> DataFrame:
+    """``df``'s logical plan as a DataFrame of ``session``: it is planned
+    and executed under ``session``'s confs."""
+    jds = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        session._jsparkSession, df._jdf.logicalPlan())
+    return DataFrame(jds, session)
 
 
 def get_session(app_name: str = "squirreldb-spark", cpus: int | None = None) -> SparkSession:

@@ -35,6 +35,7 @@ import shutil
 import tempfile
 import threading
 import time
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,28 +66,35 @@ def decode_write_stream(payloads: DataFrame, body_col: str = "body") -> DataFram
     into samples — the piece between the receiver and :func:`validate`.
 
     Works on any DataFrame/stream with a ``binary`` body column (Kafka
-    value, file stream of captured payloads). Arrow-batched
-    ``mapInPandas`` runs the pure-Python wire codec
-    (:mod:`squirreldb_spark.codec`) executor-side — no driver loop, no
-    shuffle; output is the dynamic-label samples relation
-    ``(labels MAP<STRING,STRING>, ts, value)``.
+    value, file stream of captured payloads). ``mapInArrow`` runs the
+    pure-Python wire codec (:mod:`squirreldb_spark.codec`)
+    executor-side — no driver loop, no shuffle; output is the
+    dynamic-label samples relation ``(labels MAP<STRING,STRING>, ts,
+    value)``. The values go out as an explicit float64 array, so a NaN
+    (a Prometheus staleness marker) stays NaN instead of becoming null.
     """
-    import pandas as pd
+    import pyarrow as pa
 
     def _decode(batches):
         from squirreldb_spark import codec
 
-        for pdf in batches:
+        for batch in batches:
             labels, tss, values = [], [], []
-            for body in pdf[body_col]:
-                for series in codec.decode_remote_write_body(bytes(body)):
+            for body in batch.column(body_col).to_pylist():
+                for series in codec.decode_remote_write_body(body):
+                    items = list(series.labels.items())
                     for s in series.samples:
-                        labels.append(series.labels)
+                        labels.append(items)
                         tss.append(s.timestamp_ms)
                         values.append(s.value)
-            yield pd.DataFrame({"labels": labels, "ts": tss, "value": values})
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(labels, pa.map_(pa.string(), pa.string())),
+                 pa.array(tss, pa.int64()),
+                 pa.array(values, pa.float64())],
+                names=["labels", "ts", "value"],
+            )
 
-    return payloads.mapInPandas(
+    return payloads.select(body_col).mapInArrow(
         _decode, "labels map<string,string>, ts long, value double"
     )
 
@@ -236,8 +244,26 @@ def run_ingest(
 
 
 #: samples the in-memory head holds before it is flushed to parquet; a
-#: head sample costs about 180 B, so the head stays under about 47 MB
+#: head sample costs about 60 B (tracemalloc, 200 series x 10 samples a
+#: write), so the head stays under about 16 MB
 HEAD_SAMPLES = 2 ** 18
+
+#: what a head sample is taken to add to the store's scan size when the
+#: store decides whether a snapshot fits in one scan split: generous,
+#: above both its in-memory cost and its ~10 B in parquet
+HEAD_SAMPLE_BYTES = 180
+
+
+class Snapshot(NamedTuple):
+    """A store relation and an upper bound on its rows."""
+
+    relation: DataFrame
+    rows: int
+
+
+def _size_in_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df`` (file bytes for a parquet scan)."""
+    return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
 
 
 class PointStore:
@@ -247,34 +273,64 @@ class PointStore:
     :meth:`append` keeps what :func:`validate_map` keeps. A full head, or
     :meth:`flush`, goes out through :func:`write_points` into a private
     directory that :meth:`stop` removes. Appends, flushes and the
-    snapshot :meth:`relation` takes share one lock, and a snapshot copies
-    the head rows and fixes its parquet file listing, so a read sees each
+    :meth:`snapshot` share one lock, and a snapshot copies the head
+    entries and fixes its parquet file listing, so a read sees each
     acknowledged sample exactly once.
+
+    A snapshot carries an upper bound on its rows: the history's row
+    count (taken once, here), the rows flushed so far and the head
+    samples it copied. Given a ``serving`` session
+    (:func:`squirreldb_spark.session.serving_session`), a snapshot is
+    built there whenever the whole store fits in one scan split: the
+    history's and the flushed parquet's Catalyst size plus
+    :data:`HEAD_SAMPLE_BYTES` per head sample, against ``spark``'s
+    ``spark.sql.files.maxPartitionBytes``. A larger store is read in
+    ``spark``.
     """
 
     def __init__(self, spark: SparkSession, history: DataFrame | None = None,
-                 tenant_label: str = "__account_id"):
+                 tenant_label: str = "__account_id",
+                 serving: SparkSession | None = None):
         self.spark = spark
-        self.history = history
         self.tenant_label = tenant_label
-        self._head: list[tuple[dict, int, float]] = []
+        self._serving = serving
+        self._split_bytes = (
+            spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+        #: one (labels, [ts], [value]) entry per series per append
+        self._head: list[tuple[dict, list[int], list[float]]] = []
+        self._head_samples = 0
         self._dir: str | None = None
-        self._flushed: DataFrame | None = None
+        #: session -> the history and the flushed parquet, read in it
+        self._history_in = {} if history is None else self._in_sessions(history)
+        self._flushed_in: dict[SparkSession, DataFrame] = {}
+        self._history_bytes = 0 if history is None else _size_in_bytes(history)
+        #: rows and Catalyst bytes of history ∪ flushed
+        self._stored_rows = 0 if history is None else history.count()
+        self._stored_bytes = self._history_bytes
         #: canonical series JSON -> max(ts + TTL) in epoch seconds, over
         #: the writes that carried a TTL
         self._expiry: dict[str, float] = {}
         self._lock = threading.RLock()
 
+    def _in_sessions(self, df: DataFrame) -> dict[SparkSession, DataFrame]:
+        from squirreldb_spark.session import in_session
+
+        out = {self.spark: df}
+        if self._serving is not None:
+            out[self._serving] = in_session(df, self._serving)
+        return out
+
     @property
     def head_samples(self) -> int:
-        return len(self._head)
+        return self._head_samples
 
     def append(self, series, tenant: str | None = None,
                ttl_s: int | None = None) -> int:
         """A2/A3 + A5: validate, set the tenant label and append to the
         head; returns the samples kept."""
         horizon = int(time.time() * 1000) + MAX_FUTURE_MS
-        rows: list[tuple[dict, int, float]] = []
+        entries: list[tuple[dict, list[int], list[float]]] = []
+        n = 0
         expiry: dict[str, float] = {}
         for ts in series:
             labels = {k: v for k, v in ts.labels.items() if v != ""}
@@ -282,59 +338,86 @@ class PointStore:
                 continue
             if tenant is not None:
                 labels[self.tenant_label] = tenant
-            first = len(rows)
+            tss: list[int] = []
+            values: list[float] = []
             for s in ts.samples:
                 if 0 < s.timestamp_ms <= horizon:
-                    rows.append((labels, s.timestamp_ms, s.value))
-            if ttl_s is not None and len(rows) > first:
+                    tss.append(s.timestamp_ms)
+                    values.append(s.value)
+            if not tss:
+                continue
+            entries.append((labels, tss, values))
+            n += len(tss)
+            if ttl_s is not None:
                 key = canonical_series_json(labels)
-                exp = max(r[1] for r in rows[first:]) / 1000 + ttl_s
+                exp = max(tss) / 1000 + ttl_s
                 expiry[key] = max(exp, expiry.get(key, exp))
         with self._lock:
             for key, exp in expiry.items():
                 self._expiry[key] = max(exp, self._expiry.get(key, exp))
-            todo = rows
-            while todo:
-                room = HEAD_SAMPLES - len(self._head)
-                self._head.extend(todo[:room])
-                todo = todo[room:]
-                if len(self._head) >= HEAD_SAMPLES:
+            for labels, tss, values in entries:
+                while len(tss) > HEAD_SAMPLES - self._head_samples:
+                    room = HEAD_SAMPLES - self._head_samples
+                    self._head.append((labels, tss[:room], values[:room]))
+                    self._head_samples = HEAD_SAMPLES
                     self.flush()
-        return len(rows)
+                    tss, values = tss[room:], values[room:]
+                self._head.append((labels, tss, values))
+                self._head_samples += len(tss)
+                if self._head_samples >= HEAD_SAMPLES:
+                    self.flush()
+        return n
 
     def flush(self) -> int:
         """Write the head out as parquet; returns the samples written."""
         with self._lock:
-            n = len(self._head)
+            n = self._head_samples
             if n:
                 if self._dir is None:
                     self._dir = tempfile.mkdtemp(prefix="squirreldb-points-")
-                write_points(self._head_frame(self._head), self._dir)
-                self._flushed = self.spark.read.parquet(self._dir)
-                self._head = []
+                write_points(self._head_frame(self.spark, self._head), self._dir)
+                flushed = self.spark.read.parquet(self._dir)
+                self._flushed_in = self._in_sessions(flushed)
+                self._stored_rows += n
+                self._stored_bytes = self._history_bytes + _size_in_bytes(flushed)
+                self._head, self._head_samples = [], 0
             return n
 
-    def _head_frame(self, rows: list) -> DataFrame:
-        return _with_date(self.spark.createDataFrame(
-            rows, "labels map<string,string>, ts long, value double"))
+    @staticmethod
+    def _head_frame(session: SparkSession, entries: list) -> DataFrame:
+        return _with_date(session.createDataFrame(
+            [(labels, t, v) for labels, tss, values in entries
+             for t, v in zip(tss, values)],
+            "labels map<string,string>, ts long, value double"))
 
-    def relation(self) -> DataFrame:
+    def snapshot(self) -> Snapshot:
         """History ∪ flushed ∪ head in the history's columns (with no
-        history: ``labels, ts, value, date``); the history itself while
-        nothing was written."""
+        history: ``labels, ts, value, date``), the history itself while
+        nothing was written, with an upper bound on its rows."""
         with self._lock:
-            rows = list(self._head)
-            parts = [] if self._flushed is None else [self._flushed]
-        history = self.history
-        if history is not None and not (rows or parts):
-            return history
-        if rows or not parts:
-            parts.append(self._head_frame(rows))
+            head = list(self._head)
+            n_head = self._head_samples
+            flushed = self._flushed_in
+            rows = self._stored_rows + n_head
+            size = self._stored_bytes + n_head * HEAD_SAMPLE_BYTES
+        session = self.spark
+        if self._serving is not None and size <= self._split_bytes:
+            session = self._serving
+        history = self._history_in.get(session)
+        parts = [flushed[session]] if flushed else []
+        if history is not None and not (head or parts):
+            return Snapshot(history, rows)
+        if head or not parts:
+            parts.append(self._head_frame(session, head))
         if history is not None:
             parts = [history] + [df.select(*[
                 F.col(f.name).cast(f.dataType).alias(f.name)
                 for f in history.schema]) for df in parts]
-        return functools.reduce(DataFrame.unionByName, parts)
+        return Snapshot(functools.reduce(DataFrame.unionByName, parts), rows)
+
+    def relation(self) -> DataFrame:
+        """The relation of a :meth:`snapshot`."""
+        return self.snapshot().relation
 
     def expiry(self) -> dict[str, float]:
         """Series JSON -> expiry epoch seconds, for series written with a TTL."""
@@ -346,4 +429,5 @@ class PointStore:
         with self._lock:
             if self._dir is not None:
                 shutil.rmtree(self._dir, ignore_errors=True)
-            self._dir = self._flushed = None
+            self._dir = None
+            self._flushed_in = {}

@@ -366,3 +366,95 @@ def test_sample_budget_sees_at_anchored_selector_window(spark):
     assert capped.query(
         f"rate(cpu[2h] @ {24 * 3600})", time_ms=48 * H
     ).count() >= 0
+
+
+def count_calls(spark, monkeypatch) -> list:
+    """Record every DataFrame.count() made from here on."""
+    cls = type(spark.range(1))
+    calls: list = []
+    orig = cls.count
+
+    def count(df):
+        calls.append(df)
+        return orig(df)
+
+    monkeypatch.setattr(cls, "count", count)
+    return calls
+
+
+def test_sample_budget_skips_its_count_under_the_rows_bound(spark, monkeypatch):
+    """A relation bounded at or under every sample limit cannot exceed
+    one, so no count runs; a bound over any limit brings the exact count
+    back, and it still trips."""
+    rows = [("a", "cpu", h * H, float(h)) for h in range(1, 25)]
+    pts = spark.createDataFrame(rows, "host string, name string, ts long, value double")
+
+    def api(bound, budget):
+        return PromAPI(pts, label_cols=("host", "name"), name_label="name",
+                       lookback_ms=2 * H, max_samples=budget, rows_bound=bound)
+
+    calls = count_calls(spark, monkeypatch)
+    api(24, 24).query_range("cpu", 1 * H, 24 * H, H)
+    api(24, 100).query("cpu", 12 * H, opts=RequestOptions(max_evaluated_points=24))
+    assert calls == []
+    api(25, 24).query_range("cpu", 1 * H, 24 * H, H)
+    assert len(calls) == 1
+    with pytest.raises(LimitExceeded, match="max_evaluated_points"):
+        api(24, 100).query_range("cpu", 1 * H, 24 * H, H,
+                                 opts=RequestOptions(max_evaluated_points=3))
+    with pytest.raises(LimitExceeded, match="max_samples"):
+        api(24, 3).query_range("cpu", 1 * H, 24 * H, H)
+
+
+def _equivalence_rows():
+    rows = []
+    for inst in ("a", "b", "c"):
+        for k in range(61):
+            ts = 10_000 * k
+            rows.append(({"__name__": "c", "job": "j1" if inst != "c" else "j2",
+                          "instance": inst}, ts, float(k * (ord(inst) - 96))))
+            rows.append(({"__name__": "g", "instance": inst}, ts,
+                         float((k * 7 + ord(inst)) % 13)))
+        for le, share in (("0.1", 1), ("0.5", 3), ("+Inf", 4)):
+            for k in range(61):
+                rows.append(({"__name__": "h_bucket", "le": le,
+                              "instance": inst}, 10_000 * k, float(k * share)))
+    return rows
+
+
+@pytest.mark.parametrize("query", [
+    "rate(c[1m])",
+    "sum by (job) (rate(c[1m]))",
+    "topk(2, g)",
+    "quantile_over_time(0.9, g[2m])",
+    "g > 6 or c",
+    "histogram_quantile(0.9, sum by (le) (rate(h_bucket[2m])))",
+    "max_over_time(rate(c[1m])[3m:30s] @ 400)",
+])
+def test_serving_session_gives_identical_rows(spark, query):
+    """A serving session (AQE off, one shuffle partition) and the test
+    session's plans return the same rows for every operator family the
+    daemon serves."""
+    from squirreldb_spark.promql import PromQLEngine
+    from squirreldb_spark.session import serving_session
+
+    serving = serving_session(spark)
+    assert serving.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+    def rows(session):
+        pts = session.createDataFrame(
+            _equivalence_rows(), "labels map<string,string>, ts long, value double")
+        eng = PromQLEngine(pts, label_cols=(), name_label="__name__",
+                           step_ms=30_000, lookback_ms=60_000,
+                           start_ms=120_000, end_ms=600_000,
+                           labels_map_col="labels")
+        out = eng.query_range(query)
+        assert out.sparkSession is session
+        # float sums may add in another order across partitions
+        return sorted(tuple(
+            ("nan" if v != v else round(v, 9)) if isinstance(v, float) else v
+            for v in r) for r in out.collect())
+
+    got = rows(serving)
+    assert got and got == rows(spark)

@@ -1326,3 +1326,194 @@ def test_concurrent_appends_lose_no_sample(spark, monkeypatch):
         assert len(store.expiry()) == 8 * 20
     finally:
         store.stop()
+
+
+# ------------------------------------------------- serving-sized reads
+
+
+def _post_m(b: str, name: str, n: int) -> None:
+    """POST ``n`` samples of metric ``name`` at 10 s, 20 s, ..."""
+    body = codec.encode_remote_write_body([codec.TimeSeries(
+        labels={"__name__": name, "job": "a"},
+        samples=[codec.Sample(float(k), 10_000 * k) for k in range(1, n + 1)],
+    )])
+    assert _post(f"{b}/api/v1/write", body, _SNAPPY)[0] == 204
+
+
+def _job_groups(monkeypatch) -> list[str]:
+    """Record the job group every request sets from here on."""
+    from pyspark import SparkContext
+
+    groups: list[str] = []
+    orig = SparkContext.setJobGroup
+
+    def set_job_group(sc, gid, *a, **kw):
+        groups.append(gid)
+        return orig(sc, gid, *a, **kw)
+
+    monkeypatch.setattr(SparkContext, "setJobGroup", set_job_group)
+    return groups
+
+
+def test_small_store_read_runs_at_most_two_jobs(spark, monkeypatch):
+    """A read over a store that fits in one scan split is planned without
+    AQE in one shuffle partition and skips the sample count: the whole
+    read is at most two Spark jobs."""
+    srv = PromHTTPServer(spark).start()
+    try:
+        b = f"http://127.0.0.1:{srv.port}"
+        _post_m(b, "m", 30)
+        groups = _job_groups(monkeypatch)
+        tracker = spark.sparkContext.statusTracker()
+        for q in ("sum by (job) (rate(m[1m]))", "topk(1, m)"):
+            status, out = _get(f"{b}/api/v1/query_range?query="
+                               f"{urllib.parse.quote(q)}&start=0&end=300&step=30")
+            assert status == 200 and out["data"]["result"], q
+            assert 1 <= len(tracker.getJobIdsForGroup(groups[-1])) <= 2, q
+    finally:
+        srv.stop()
+
+
+def test_read_under_the_store_bound_runs_no_count(spark, monkeypatch):
+    """The store's row bound is under the default 50M budget, so a read
+    counts nothing before it runs."""
+    from test_api import count_calls
+
+    srv = PromHTTPServer(spark).start()
+    try:
+        b = f"http://127.0.0.1:{srv.port}"
+        _post_m(b, "m", 7)
+        counted = count_calls(spark, monkeypatch)
+        status, out = _get(f"{b}/api/v1/query_range?query=m&start=0&end=130&step=10")
+        assert status == 200 and len(out["data"]["result"][0]["values"]) == 13
+        assert counted == []
+    finally:
+        srv.stop()
+
+
+def test_store_bound_over_the_budget_keeps_the_exact_count(spark):
+    """With the store's bound (10 rows) over max_samples=5, the budget is
+    checked on each query's own time slice: an instant read whose 10 s
+    lookback holds 2 samples passes, a range over all 10 is a 422."""
+    srv = PromHTTPServer(spark, max_samples=5, lookback_ms=10_000).start()
+    try:
+        b = f"http://127.0.0.1:{srv.port}"
+        _post_m(b, "few", 3)
+        _post_m(b, "many", 7)
+        assert srv.store.snapshot().rows == 10
+        status, out = _get(f"{b}/api/v1/query?query=many&time=25")
+        assert status == 200 and out["data"]["result"][0]["value"][1] == "2.0"
+        status, out = _get(f"{b}/api/v1/query_range?query=many&start=0&end=130&step=10")
+        assert status == 422 and "max_samples" in out["error"]
+    finally:
+        srv.stop()
+
+
+def test_serving_session_leaves_the_callers_confs(spark):
+    """A small store is read in the serving session (AQE off, one shuffle
+    partition); the caller's session keeps AQE on and its own shuffle
+    partitions after a read."""
+    before = {k: spark.conf.get(k) for k in (
+        "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")}
+    srv = PromHTTPServer(spark).start()
+    try:
+        b = f"http://127.0.0.1:{srv.port}"
+        _post_m(b, "m", 5)
+        assert _get(f"{b}/api/v1/query?query=m&time=50")[0] == 200
+        serving = srv.store.snapshot().relation.sparkSession
+        assert serving is not spark
+        assert serving.conf.get("spark.sql.adaptive.enabled") == "false"
+        assert serving.conf.get("spark.sql.shuffle.partitions") == "1"
+    finally:
+        srv.stop()
+    assert before == {"spark.sql.adaptive.enabled": "true",
+                      "spark.sql.shuffle.partitions": "4"}
+    assert {k: spark.conf.get(k) for k in before} == before
+
+
+def test_store_past_one_scan_split_is_read_in_the_callers_session(spark, tmp_path):
+    """A store larger than spark.sql.files.maxPartitionBytes keeps the
+    caller's session (and its AQE) for reads, history and head alike."""
+    from pyspark.sql import functions as F
+
+    hist = str(tmp_path / "hist")
+    spark.createDataFrame(
+        [({"__name__": "h", "job": "a"}, 10_000 * k, float(k)) for k in range(1, 50)],
+        "labels map<string,string>, ts long, value double",
+    ).withColumn("date", F.to_date(F.timestamp_millis("ts"))).write.partitionBy(
+        "date").parquet(hist)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+    try:
+        srv = PromHTTPServer(spark, base_points=spark.read.parquet(hist)).start()
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    try:
+        b = f"http://127.0.0.1:{srv.port}"
+        assert srv.store.snapshot().relation.sparkSession is spark
+        _post_m(b, "m", 5)
+        snap = srv.store.snapshot()
+        assert snap.relation.sparkSession is spark and snap.rows == 49 + 5
+        status, out = _get(f"{b}/api/v1/query?query=sum(h)%2Bsum(m)&time=50")
+        assert status == 200 and out["data"]["result"][0]["value"][1] == "10.0"
+    finally:
+        srv.stop()
+
+
+# ------------------------------------------------------- label lookups
+
+
+def test_label_lookups_honour_start_end(spark):
+    """/labels and label values read only the samples in [start, end]."""
+    srv = PromHTTPServer(spark).start()
+    try:
+        b = f"http://127.0.0.1:{srv.port}"
+        body = codec.encode_remote_write_body([
+            codec.TimeSeries(labels={"__name__": "early", "job": "a"},
+                             samples=[codec.Sample(1.0, 10_000)]),
+            codec.TimeSeries(labels={"__name__": "late", "zone": "z1"},
+                             samples=[codec.Sample(1.0, 500_000)]),
+        ])
+        assert _post(f"{b}/api/v1/write", body, _SNAPPY)[0] == 204
+        status, out = _get(f"{b}/api/v1/label/__name__/values?start=0&end=200")
+        assert status == 200 and out["data"] == ["early"]
+        status, out = _get(f"{b}/api/v1/label/__name__/values?start=400&end=600")
+        assert status == 200 and out["data"] == ["late"]
+        status, out = _get(f"{b}/api/v1/labels?start=400")
+        assert status == 200 and out["data"] == ["__name__", "zone"]
+        status, out = _get(f"{b}/api/v1/labels?end=200")
+        assert status == 200 and out["data"] == ["__name__", "job"]
+        # no parameters: every sample, as before
+        status, out = _get(f"{b}/api/v1/label/__name__/values")
+        assert status == 200 and out["data"] == ["early", "late"]
+    finally:
+        srv.stop()
+
+
+def test_label_lookups_honour_match(base, written):
+    """``match[]`` restricts both lookups to the selected series; repeated
+    params are a union."""
+    q = urllib.parse.quote('http_requests_total{inst="a"}')
+    status, out = _get(f"{base}/api/v1/label/inst/values?match[]={q}")
+    assert status == 200 and out["data"] == ["a"]
+    status, out = _get(f"{base}/api/v1/label/inst/values?match[]={q}"
+                       f"&match[]=" + urllib.parse.quote('{inst="b"}'))
+    assert status == 200 and out["data"] == ["a", "b"]
+    status, out = _get(f"{base}/api/v1/label/inst/values?match[]=nothing_here")
+    assert status == 200 and out["data"] == []
+    status, out = _get(f"{base}/api/v1/labels?match[]={q}",
+                       {"X-SquirrelDB-Tenant": "t0"})
+    assert status == 200 and {"inst", "job", "__account_id"} <= set(out["data"])
+    status, out = _get(f"{base}/api/v1/labels?match[]=nothing_here")
+    assert status == 200 and out["data"] == ["__name__"]
+
+
+def test_label_lookups_with_params_keep_the_cap(many_base):
+    """The 10,000-entry cap holds under ``match[]`` and a time range."""
+    status, out = _get(f"{many_base}/api/v1/label/i/values?match[]=many"
+                       "&start=0&end=10")
+    assert status == 422 and out["errorType"] == "execution"
+    q = urllib.parse.quote('many{i!="0"}')
+    status, out = _get(f"{many_base}/api/v1/label/i/values?match[]={q}")
+    assert status == 200 and len(out["data"]) == 10_000
+    status, out = _get(f"{many_base}/api/v1/label/i/values?start=5&end=10")
+    assert status == 200 and out["data"] == []

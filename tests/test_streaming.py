@@ -573,3 +573,22 @@ def test_streaming_hll_registers_survive_restart(spark, tmpdir):
     # both pre-restart users are in the closed registers (2 buckets or a
     # shared one with the max rank — either way state survived)
     assert 1 <= len(day_rows) <= 2
+
+
+def test_decode_keeps_nan_staleness_markers(spark):
+    """A NaN sample (a Prometheus staleness marker) survives decoding and
+    validation as NaN, as it does in the daemon's PointStore."""
+    import math
+
+    from squirreldb_spark import codec
+
+    body = codec.encode_remote_write_body([codec.TimeSeries(
+        labels={"__name__": "up", "job": "a"},
+        samples=[codec.Sample(float("nan"), 1_000), codec.Sample(1.0, 2_000)],
+    )])
+    decoded = ingest.decode_write_stream(
+        spark.createDataFrame([(bytearray(body),)], "body binary"))
+    rows = sorted(ingest.validate_map(decoded, tenant="t1").collect(),
+                  key=lambda r: r.ts)
+    assert [r.ts for r in rows] == [1_000, 2_000]
+    assert math.isnan(rows[0].value) and rows[1].value == 1.0
