@@ -22,21 +22,26 @@ DataFrame filters prepended to every selector:
 
 Every read selects through the engine over that tenant-scoped relation,
 like the reference's one queryable (api/promql/queryable.go:153-165):
-queries through :meth:`PromQLEngine.query_range`; ``/series`` and remote
-read (and so the daemon's matcher dump) take raw samples in an inclusive
-``[start, end]`` through :meth:`PromQLEngine.select_raw` — the same
-matcher lowering, label promotion, mutable-label rewrite, ``ts`` bound
-and ``date`` partition pruning, with no lookback.
+queries through :meth:`PromQLEngine.query_range`; ``/series``, the label
+lookups (and so the daemon's index dumps) and remote read take raw
+samples in an inclusive ``[start, end]`` through
+:meth:`PromQLEngine.select_raw` — the same matcher lowering, label
+promotion, mutable-label rewrite, ``ts`` bound and ``date`` partition
+pruning, with no lookback. The formatters unpack a map-labelled result's
+series identity into each ``metric``.
 """
 
 from __future__ import annotations
 
 import functools
+import itertools
+import json
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from squirreldb_spark import codec
 from squirreldb_spark.promql import parser
 from squirreldb_spark.promql.ast import Matcher, VectorSelector
 from squirreldb_spark.promql.planner import PromQLEngine
@@ -323,20 +328,18 @@ class PromAPI:
         """/api/v1/query (instant): a range query with a single step."""
         return self.query_range(promql, time_ms, time_ms, 1, opts)
 
-    def series(self, matchers: str, start_ms: int, end_ms: int,
+    def series(self, matchers: list[str] | None, start_ms: int, end_ms: int,
                opts: RequestOptions | None = None) -> DataFrame:
-        """/api/v1/series: the distinct label sets active in [start, end].
-
-        ``matchers`` is a PromQL selector string (``{job="api"}``). Mirrors
-        the reference's early-exit "series" scan (tsdb/read.go:392-396):
-        Catalyst stops at the distinct of the pruned slice — no values read.
+        """/api/v1/series: the distinct label sets that ``matchers``
+        selects in ``[start, end]`` (:meth:`_matching`), as one ``series``
+        column of canonical sorted-JSON on a map-labelled store, or the
+        ``label_cols`` of a fixed-column one. Mirrors the reference's
+        early-exit "series" scan (tsdb/read.go:392-396): Catalyst stops at
+        the distinct of the pruned slice — no values read.
         """
-        pts = self._select(parser.parse(matchers), start_ms, end_ms, opts)
-        if self.labels_map_col is not None:
-            # dynamic labels: the canonical sorted-JSON label set IS the
-            # series identity
-            return pts.select(F.col("__series__").alias("series")).distinct()
-        return pts.select(*self.label_cols).distinct()
+        cols = ([F.col("__series__").alias("series")]
+                if self.labels_map_col is not None else list(self.label_cols))
+        return self._matching(cols, matchers, start_ms, end_ms, opts).distinct()
 
     def _matching(self, cols: list, matchers: list[str] | None,
                   start_ms: int, end_ms: int,
@@ -429,10 +432,6 @@ class PromAPI:
         layer already paid the snappy decode for response-type
         negotiation — don't pay it twice).
         """
-        import json as _json
-
-        from squirreldb_spark import codec
-
         buf = body if decompressed else codec.snappy_decompress(body)
         results: list[list[codec.TimeSeries]] = []
         for q in codec.decode_read_request(buf):
@@ -440,15 +439,10 @@ class PromAPI:
                 self._read_query_slice(q, opts).orderBy("_lbl", "ts"), limit,
                 "samples in a remote read; negotiate STREAMED_XOR_CHUNKS",
             )
-            by_series: dict[str, codec.TimeSeries] = {}
-            for r in rows:
-                ts = by_series.get(r["_lbl"])
-                if ts is None:
-                    ts = by_series[r["_lbl"]] = codec.TimeSeries(
-                        labels=_json.loads(r["_lbl"])
-                    )
-                ts.samples.append(codec.Sample(r["value"], r["ts"]))
-            results.append(list(by_series.values()))
+            results.append([
+                codec.TimeSeries(labels=labels, samples=list(samples))
+                for _, labels, samples in _series_groups(rows)
+            ])
         return codec.encode_remote_read_response_body(results)
 
     def remote_read_frames(
@@ -472,55 +466,30 @@ class PromAPI:
         ``samples_per_chunk`` (upstream's 120), and a frame flushes as
         soon as it exceeds the budget — no per-query row limit needed.
         """
-        import json as _json
-
-        from squirreldb_spark import codec
-
         buf = body if decompressed else codec.snappy_decompress(body)
         for qi, q in enumerate(codec.decode_read_request(buf)):
-            it = (
+            rows = (
                 self._read_query_slice(q, opts).orderBy("_lbl", "ts")
                 .toLocalIterator()
             )
             frame: list[codec.ChunkedSeries] = []
             frame_size = 0
-            cur_lbl: str | None = None
-            cur_samples: list[codec.Sample] = []
-
-            def flush_chunk():
-                nonlocal frame_size
-                if not cur_samples:
-                    return
-                data = codec.encode_xor_chunk(cur_samples)
-                chunk = (
-                    cur_samples[0].timestamp_ms,
-                    cur_samples[-1].timestamp_ms,
-                    codec.XOR_ENCODING,
-                    data,
-                )
-                if frame and frame[-1].labels == _json.loads(cur_lbl):
-                    frame[-1].chunks.append(chunk)
-                else:
-                    frame.append(codec.ChunkedSeries(
-                        labels=_json.loads(cur_lbl), chunks=[chunk]
-                    ))
-                frame_size += len(data) + len(cur_lbl) + 16
-                cur_samples.clear()
-
-            for r in it:
-                if cur_lbl is not None and (
-                    r["_lbl"] != cur_lbl
-                    or len(cur_samples) >= samples_per_chunk
-                ):
-                    flush_chunk()
+            for lbl, labels, samples in _series_groups(rows):
+                while chunk := list(itertools.islice(samples, samples_per_chunk)):
+                    data = codec.encode_xor_chunk(chunk)
+                    xor = (chunk[0].timestamp_ms, chunk[-1].timestamp_ms,
+                           codec.XOR_ENCODING, data)
+                    if frame and frame[-1].labels is labels:
+                        frame[-1].chunks.append(xor)
+                    else:
+                        frame.append(codec.ChunkedSeries(labels=labels,
+                                                         chunks=[xor]))
+                    frame_size += len(data) + len(lbl) + 16
                     if frame_size >= frame_bytes:
                         yield codec.frame_chunked_message(
                             codec.encode_chunked_read_response(frame, qi)
                         )
                         frame, frame_size = [], 0
-                cur_lbl = r["_lbl"]
-                cur_samples.append(codec.Sample(r["value"], r["ts"]))
-            flush_chunk()
             if frame:
                 yield codec.frame_chunked_message(
                     codec.encode_chunked_read_response(frame, qi)
@@ -535,7 +504,7 @@ class PromAPI:
         label_names = [c for c in df.columns if c not in ("step_ts", "value")]
         result = [
             {
-                "metric": {l: str(r[l]) for l in label_names},
+                "metric": _metric({l: str(r[l]) for l in label_names}),
                 "value": [r["step_ts"] / 1000.0, str(r["value"])],
             }
             for r in rows
@@ -556,10 +525,12 @@ class PromAPI:
         label_names = [c for c in df.columns if c not in ("step_ts", "value")]
         for r in rows:
             key = tuple(str(r[l]) for l in label_names)
-            entry = series.setdefault(
-                key,
-                {"metric": dict(zip(label_names, key)), "values": []},
-            )
+            entry = series.get(key)
+            if entry is None:
+                entry = series[key] = {
+                    "metric": _metric(dict(zip(label_names, key))),
+                    "values": [],
+                }
             entry["values"].append([r["step_ts"] / 1000.0, str(r["value"])])
         for entry in series.values():
             entry["values"].sort(key=lambda v: v[0])
@@ -568,3 +539,27 @@ class PromAPI:
             "data": {"resultType": "matrix", "result": list(series.values())},
         }
 
+
+def _metric(labels: dict[str, str]) -> dict[str, str]:
+    """A result row's label columns as its Prometheus ``metric``. A
+    map-labelled store's rows carry the planner's fingerprints: the
+    canonical sorted-JSON ``__series__`` is unpacked into the label set,
+    the promoted columns added where non-empty (a promoted column holds
+    "" for a label the series lacks, Prometheus missing-label
+    semantics) and the auxiliary ``__series_*`` fingerprints dropped."""
+    fp = labels.pop("__series__", None)
+    labels = {k: v for k, v in labels.items() if not k.startswith("__series_")}
+    if fp is None:
+        return labels
+    metric = json.loads(fp)
+    metric.update({k: v for k, v in labels.items() if v != ""})
+    return metric
+
+
+def _series_groups(rows):
+    """``(labels JSON, labels, samples)`` per series of ``_lbl``/``ts``
+    ordered ``(_lbl, ts, value)`` rows: the JSON parsed once a series,
+    the samples a lazy iterator over that series' rows."""
+    for lbl, group in itertools.groupby(rows, key=lambda r: r["_lbl"]):
+        yield lbl, json.loads(lbl), (
+            codec.Sample(r["value"], r["ts"]) for r in group)

@@ -27,6 +27,18 @@ lookups, remote read and the index dumps — mirroring the reference's
 __account_id flow (api/remotestorage/write.go:80-170,
 api/promql/queryable.go:153-165).
 
+One layout, one series selection. The store holds map-labelled samples
+(``labels MAP<STRING,STRING>, ts, value``), the layout the streaming
+sink (:func:`~squirreldb_spark.streaming.ingest.points_sink`) writes; a
+history in any other layout is refused when the server is made. Like the
+reference's one queryable, every metadata read selects through
+``PromAPI``: ``/series`` and the whole, by-labels and by-shard index
+dumps take their rows from :meth:`PromAPI.series`, the label lookups
+from :meth:`PromAPI.labels` and :meth:`PromAPI.label_values`. Query
+results come back from ``PromAPI``'s formatters with each series'
+labels already unpacked, so this module never sees the planner's
+fingerprint columns.
+
 Serving-sized reads. The server makes one serving session
 (:func:`~squirreldb_spark.session.serving_session`: a sibling of the
 caller's session on the same SparkContext, with AQE off and one shuffle
@@ -65,6 +77,8 @@ from pyspark.sql import functions as F
 
 from squirreldb_spark import codec
 from squirreldb_spark.api import (
+    MAX_TS_MS,
+    MIN_TS_MS,
     LimitExceeded,
     PromAPI,
     QueryTimeout,
@@ -72,7 +86,7 @@ from squirreldb_spark.api import (
     collect_at_most,
     run_with_timeout,
 )
-from squirreldb_spark.model import canonical_series_json, series_json
+from squirreldb_spark.model import series_json
 from squirreldb_spark.session import serving_session
 from squirreldb_spark.streaming.ingest import PointStore
 
@@ -173,29 +187,9 @@ def _time_range(params: dict) -> tuple[int, int]:
             _parse_time_s(params.get("end", ["32503680000"])[0]))
 
 
-def _match_series(api: PromAPI, params: dict,
-                  opts: RequestOptions) -> list[str]:
-    """Canonical label-set JSON of every series a ``match[]`` selector
-    picks in ``[start, end]``; repeated ``match[]`` params are a union
-    (upstream API semantics). More than :data:`SERIES_LIMIT` raises
-    :class:`LimitExceeded` instead of answering with a partial list."""
-    start, end = _time_range(params)
-    df = functools.reduce(DataFrame.unionByName, [
-        api.series(m, start, end, opts) for m in params.get("match[]", ["{}"])
-    ]).distinct()
-    rows = collect_at_most(df, SERIES_LIMIT, "series match")
-    if "series" in df.columns:
-        return [r["series"] for r in rows]
-    return [canonical_series_json(r.asDict()) for r in rows]
-
-
-def _dump_series(points: DataFrame) -> bytes:
-    """The index dump CSV of every series in a map-labelled relation."""
-    rows = collect_at_most(
-        points.select(series_json(F.col("labels")).alias("s")).distinct(),
-        SERIES_LIMIT, "series match",
-    )
-    return _dump_csv(r["s"] for r in rows)
+def _bad_data(error: str) -> dict:
+    """The Prometheus error body of a bad request."""
+    return {"status": "error", "errorType": "bad_data", "error": error}
 
 
 def _dump_csv(series_jsons) -> bytes:
@@ -211,37 +205,18 @@ def _dump_csv(series_jsons) -> bytes:
     return ("\n".join(lines) + "\n").encode() if lines else b""
 
 
-def _unpack_series(out: dict) -> dict:
-    """Finish a formatted query body for the wire: dynamic-label stores
-    return the fingerprint columns; unpack the canonical sorted-JSON
-    ``__series__`` back into the metric object and hide the auxiliary
-    fingerprints."""
-    for entry in out["data"]["result"]:
-        metric = entry["metric"]
-        fp = metric.pop("__series__", None)
-        for k in list(metric):
-            if k.startswith("__series_"):
-                del metric[k]
-        if fp is not None:
-            parsed = json.loads(fp)
-            # promoted columns carry "" for a label the series lacks
-            # (Prometheus missing-label semantics) — not a real label
-            parsed.update({k: v for k, v in metric.items() if v != ""})
-            entry["metric"] = parsed
-    return out
-
-
 class PromHTTPServer:
     """A live /api/v1 endpoint set over Spark.
 
-    ``base_points`` (optional) is the history, e.g. the date-partitioned
-    parquet the streaming ingest path writes. It and every remote write
-    live in :attr:`store`, a :class:`PointStore` whose in-memory head is
-    bounded and flushes to parquet. A reading request takes one store
-    snapshot — a points relation, in the serving session while the
-    store fits in one scan split, and an upper bound on its rows — and
-    builds one :class:`PromAPI` over it (:meth:`_api`) that serves both
-    the query and its formatting.
+    ``base_points`` (optional) is the history, map-labelled like the
+    date-partitioned parquet the streaming ingest path writes; any other
+    layout raises ``ValueError`` here. It and every remote write live in
+    :attr:`store`, a :class:`PointStore` whose in-memory head is bounded
+    and flushes to parquet. A reading request takes one store snapshot —
+    a points relation, in the serving session while the store fits in
+    one scan split, and an upper bound on its rows — and builds one
+    :class:`PromAPI` over it (:meth:`_api`) that serves the query, its
+    formatting and every series selection.
     """
 
     def __init__(
@@ -256,7 +231,6 @@ class PromHTTPServer:
         read_frame_bytes: int = 1 << 20,
         query_timeout_ms: int | None = 120_000,
         max_samples: int | None = 50_000_000,
-        **api_kwargs,
     ):
         self.spark = spark
         self.store = PointStore(spark, base_points, tenant_label,
@@ -273,7 +247,6 @@ class PromHTTPServer:
         #: MaxSamples=50M (api/promql/engine.go:39-41)
         self.query_timeout_ms = query_timeout_ms
         self.max_samples = max_samples
-        self.api_kwargs = api_kwargs
         #: mutable-label management state (POST/DELETE /mutable/names,
         #: /mutable/values — reference api/api.go:230-233)
         from squirreldb_spark.tsdb.mutable import MutableLabelStore
@@ -295,18 +268,14 @@ class PromHTTPServer:
     # ------------------------------------------------------------- store
 
     def _api(self) -> PromAPI:
-        kwargs = dict(
-            label_cols=(),
-            name_label="__name__",
-            labels_map_col="labels",
-            tenant_col=self.tenant_label,
+        points, rows = self.store.snapshot()
+        return PromAPI(
+            points, label_cols=(), name_label="__name__",
+            labels_map_col="labels", tenant_col=self.tenant_label,
             lookback_ms=self.lookback_ms,
             mutable_mapping=self.mutable_store.rows(),
-            max_samples=self.max_samples,
+            max_samples=self.max_samples, rows_bound=rows,
         )
-        kwargs.update(self.api_kwargs)
-        points, rows = self.store.snapshot()
-        return PromAPI(points, rows_bound=rows, **kwargs)
 
     def ingest(self, series: list[codec.TimeSeries],
                tenant: str | None, ttl_s: int | None) -> int:
@@ -332,11 +301,7 @@ class PromHTTPServer:
             def do_POST(self):
                 length = int(self.headers.get("Content-Length") or 0)
                 if length > server.max_body_bytes:
-                    server._send_json(
-                        self, 413,
-                        {"status": "error", "errorType": "bad_data",
-                         "error": "body too large"},
-                    )
+                    server._send_json(self, 413, _bad_data("body too large"))
                     return
                 server._route(self, body=self.rfile.read(length))
 
@@ -449,6 +414,17 @@ class PromHTTPServer:
 
         def timed(fn):
             return run_with_timeout(self.spark, fn, self._timeout_ms(p))
+
+        def series(matchers: list[str] | None, start: int,
+                   end: int) -> list[str]:
+            """Canonical label-set JSON of every series ``matchers``
+            selects in ``[start, end]`` (:meth:`PromAPI.series`); more
+            than :data:`SERIES_LIMIT` is a :class:`LimitExceeded`."""
+            rows = timed(lambda: collect_at_most(
+                api().series(matchers, start, end, self._opts(handler)),
+                SERIES_LIMIT, "series match",
+            ))
+            return [r["series"] for r in rows]
 
         try:
             path = url.path
@@ -563,11 +539,15 @@ class PromHTTPServer:
                         return store.format_matrix(
                             store.query_range(q, start, end, step, opts=opts))
 
-                self._send_json(handler, 200, _unpack_series(timed(run)))
+                self._send_json(handler, 200, timed(run))
+                return
+            if (path in ("/api/v1/series", "/debug/index_dump_by_labels")
+                    and not params.get("match[]")):
+                self._send_json(handler, 400, _bad_data(
+                    "no match[] parameter provided"))
                 return
             if path == "/api/v1/series":
-                opts = self._opts(handler)
-                sjs = timed(lambda: _match_series(api(), params, opts))
+                sjs = series(params["match[]"], *_time_range(params))
                 self._send_json(
                     handler, 200,
                     {"status": "success", "data": [json.loads(s) for s in sjs]},
@@ -606,13 +586,9 @@ class PromHTTPServer:
 
                 q = p("query")
                 if q is None:
-                    self._send_json(
-                        handler, 400,
-                        {"status": "error", "errorType": "bad_data",
-                         "error": 'invalid parameter "query": '
-                                  "unknown position: parse error: "
-                                  "no expression found in input"},
-                    )
+                    self._send_json(handler, 400, _bad_data(
+                        'invalid parameter "query": unknown position: '
+                        "parse error: no expression found in input"))
                     return
                 fn = format_query if path.endswith("format_query") else parse_query_json
                 self._send_json(handler, 200, {"status": "success", "data": fn(q)})
@@ -770,33 +746,30 @@ class PromHTTPServer:
                 if path.endswith(("_expiration", "_shard")) and not date:
                     raise ValueError('expect one parameter "date"')
                 if path == "/debug/index_dump":
-                    csv = _dump_series(api()._scoped(self._opts(handler)))
+                    sjs = series(None, MIN_TS_MS, MAX_TS_MS)
                 elif path == "/debug/index_dump_by_labels":
                     # matcher-restricted (reference indexDumpByLabels):
                     # the /api/v1/series selection
-                    csv = _dump_csv(
-                        _match_series(api(), params, self._opts(handler)))
+                    sjs = series(params["match[]"], *_time_range(params))
                 elif path == "/debug/index_dump_by_expiration":
                     # reference: ids expiring on ?date=YYYY-MM-DD (daily
                     # expiration bitsets). Our analogue: the store's
                     # per-series max(write ts + per-write TTL).
-                    csv = _dump_csv(
+                    sjs = [
                         sj for sj, exp in self.store.expiry().items()
                         if datetime.datetime.fromtimestamp(
                             exp, datetime.timezone.utc
                         ).strftime("%Y-%m-%d") == date
-                    )
+                    ]
                 else:
                     # the reference's 7-day postings shard maps to our
                     # date partition (SURVEY §1.5): series active on ?date=
                     lo = int(datetime.datetime.strptime(date, "%Y-%m-%d")
                              .replace(tzinfo=datetime.timezone.utc)
                              .timestamp() * 1000)
-                    csv = _dump_series(
-                        api()._scoped(self._opts(handler)).filter(
-                            F.col("ts").between(lo, lo + 86_399_999)))
+                    sjs = series(None, lo, lo + 86_399_999)
                 self._send_bytes(
-                    handler, 200, csv,
+                    handler, 200, _dump_csv(sjs),
                     content_type="text/csv; charset=utf-8", encoding=None,
                 )
                 return
@@ -838,10 +811,7 @@ class PromHTTPServer:
             )
         except Exception as ex:  # bad query/params -> Prometheus error body
             self._send_json(
-                handler, 400,
-                {"status": "error", "errorType": "bad_data",
-                 "error": f"{type(ex).__name__}: {ex}"},
-            )
+                handler, 400, _bad_data(f"{type(ex).__name__}: {ex}"))
 
     def _capture_query(self, query: str | None) -> None:
         """When /debug/toggle_debug_query is on, keep the last 100 query

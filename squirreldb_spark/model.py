@@ -101,7 +101,7 @@ def canonical_series_json(labels: dict) -> str:
     """The driver-side replay of :func:`series_json`: sorted keys, compact
     separators, every value STRINGIFIED (a long label column would
     otherwise print unquoted and give the same series a different 60-bit
-    id across /debug/index_dump and /debug/index_dump_by_labels), null
+    id in /debug/index_dump_by_expiration than in the other dumps), null
     (absent) labels dropped like a labels map never holds them."""
     return json.dumps(
         {k: str(v) for k, v in labels.items() if v is not None},

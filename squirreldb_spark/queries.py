@@ -3219,7 +3219,7 @@ def q_api_series(spark, sf_dir):
     api = PromAPI(_pts(spark, sf_dir), label_cols=tuple(KEYS),
                   name_label="event_type", lookback_ms=LOOKBACK_MS)
     return api.series(
-        'purchase{user_id=~"1.*"}', BOUND_START_MS, BOUND_END_MS
+        ['purchase{user_id=~"1.*"}'], BOUND_START_MS, BOUND_END_MS
     )
 
 
@@ -4655,6 +4655,11 @@ WHERE doc_id NOT IN (SELECT doc_id FROM members WHERE NOT is_canonical)
 # so after r13 no attestation predates r8 (whose 49-row cohort rolls to
 # r14).
 #
+# Later changes keep the window at exactly 50: each kernel that changes
+# enters group (1) below and displaces the last entry of the backfill
+# (2).  api_series and api_label_values are both in the window, since
+# /series and the label lookups now share one selection path.
+#
 _VERIFY_FIRST: list[str] = [
     # --- (0) NEW round-13 kernels (ratchet rule: new kernels enter the
     # window in the commit that adds them) ---
@@ -4694,6 +4699,11 @@ _VERIFY_FIRST: list[str] = [
     "emb_sq_bits_sweep",
     "api_series",
     "ts_mutable_labels",
+    # api_label_values: its kernel selects through PromAPI._matching,
+    # the path every series lookup now shares, which changed after its
+    # newest attestation.  It displaced ts_instant_selector, the last
+    # entry of the attested backfill below.
+    "api_label_values",
     # --- (2) r6-era backfill: the ENTIRE remaining r6 cohort (VERDICT
     # r12 order #4 — after this window no catalog row's newest
     # attestation predates r8; the 49-row r8 cohort rolls to r14) ---
@@ -4727,7 +4737,6 @@ _VERIFY_FIRST: list[str] = [
     "promql_double_exp_smoothing",
     "tpch_q10_returned_items",
     "tpch_q6_forecast_revenue",
-    "ts_instant_selector",
 ]
 
 

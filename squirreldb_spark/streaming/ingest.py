@@ -286,11 +286,22 @@ class PointStore:
     :data:`HEAD_SAMPLE_BYTES` per head sample, against ``spark``'s
     ``spark.sql.files.maxPartitionBytes``. A larger store is read in
     ``spark``.
+
+    The history is map-labelled (``labels MAP<STRING,STRING>``, ``ts``,
+    ``value``), the layout :func:`points_sink` writes; any other raises
+    ``ValueError`` here rather than on a first read.
     """
 
     def __init__(self, spark: SparkSession, history: DataFrame | None = None,
                  tenant_label: str = "__account_id",
                  serving: SparkSession | None = None):
+        if history is not None:
+            types = {f.name: f.dataType.simpleString() for f in history.schema}
+            if (types.get("labels") != "map<string,string>"
+                    or not {"ts", "value"} <= types.keys()):
+                raise ValueError(
+                    "a history needs labels map<string,string>, ts and "
+                    f"value columns, got {history.schema.simpleString()}")
         self.spark = spark
         self.tenant_label = tenant_label
         self._serving = serving

@@ -113,7 +113,7 @@ def test_run_with_timeout_passes_fast_work(spark):
 
 
 def test_series_endpoint(api):
-    out = api.series('{name="cpu"}', 0, 48 * H).collect()
+    out = api.series(['{name="cpu"}'], 0, 48 * H).collect()
     assert sorted((r.host, r.name) for r in out) == [("a", "cpu"), ("b", "cpu")]
 
 
@@ -211,10 +211,17 @@ def test_api_dynamic_labels_endpoints(spark):
     assert api.labels() == ["__name__", "dc", "host"]
     vals = [r.value for r in api.label_values("dc").collect()]
     assert vals == ["east"]
-    series = {r.series for r in api.series('{__name__="cpu"}', 0, 30_000).collect()}
+    series = {r.series for r in api.series(['{__name__="cpu"}'], 0, 30_000).collect()}
     assert series == {
         '{"__name__":"cpu","dc":"east","host":"a"}',
         '{"__name__":"cpu","host":"b"}',
+    }
+    # the formatter unpacks the series identity: whole label sets, no
+    # planner fingerprint columns
+    body = api.format_vector(api.query("cpu", 20_000))
+    assert {e["metric"]["host"]: e["metric"] for e in body["data"]["result"]} == {
+        "a": {"__name__": "cpu", "dc": "east", "host": "a"},
+        "b": {"__name__": "cpu", "host": "b"},
     }
     out = api.query_range("sum by (host) (cpu)", 10_000, 20_000, 10_000).collect()
     got = {(r.host, r.step_ts): r.value for r in out}
@@ -297,7 +304,7 @@ def test_series_endpoint_resolves_mutable_matcher(mapi):
     """Regression: /series used to build its engine without the mutable
     mapping, so a mutable matcher that worked in query_range raised."""
     opts = RequestOptions(tenant="t1")
-    out = mapi.series('cpu{group="web"}', 0, 30 * H, opts=opts).collect()
+    out = mapi.series(['cpu{group="web"}'], 0, 30 * H, opts=opts).collect()
     hosts = sorted(r.host for r in out)
     assert hosts == ["a", "b"]
 

@@ -380,9 +380,9 @@ def test_query_timeout_returns_prometheus_error_shape(spark):
 
 
 def test_metadata_reads_run_under_the_query_timeout(spark):
-    """/series, /labels and label values are killed at the engine
-    deadline like /query: query_timeout_ms=1 expires before any of
-    their Spark jobs finishes."""
+    """/series, /labels, label values and the index dumps that select
+    series are killed at the engine deadline like /query:
+    query_timeout_ms=1 expires before any of their Spark jobs finishes."""
     srv = PromHTTPServer(spark, query_timeout_ms=1).start()
     try:
         b = f"http://127.0.0.1:{srv.port}"
@@ -395,7 +395,9 @@ def test_metadata_reads_run_under_the_query_timeout(spark):
         )
         assert status == 204
         for path in ("/api/v1/series?match[]=m", "/api/v1/labels",
-                     "/api/v1/label/job/values"):
+                     "/api/v1/label/job/values", "/debug/index_dump",
+                     "/debug/index_dump_by_labels?match[]=m",
+                     "/debug/index_dump_by_shard?date=1970-01-01"):
             status, out = _get(f"{b}{path}")
             assert status == 503 and out["errorType"] == "timeout", path
     finally:
@@ -738,28 +740,16 @@ def test_debug_mutable_import_dry_run_then_force(base, server, written):
 
 
 def test_streamed_read_planning_error_yields_json_not_corrupt_stream(spark):
-    """Regression: a planning error (unknown label on a fixed-schema
-    store) used to surface AFTER the 200 + streamed headers were
-    committed, splicing a JSON error into the chunk stream. The first
-    frame is now pulled before the headers, so the client gets a proper
-    JSON 400."""
-    import pyspark.sql.functions as SF
-
-    base_pts = spark.createDataFrame(
-        [(1, 10_000, 1.0)], "user_id long, ts long, value double"
-    ).withColumn("__name__", SF.lit("m"))
-    srv = PromHTTPServer(
-        spark,
-        base_points=base_pts,
-        label_cols=("user_id",),
-        labels_map_col=None,
-        tenant_col=None,
-    ).start()
+    """Regression: a planning error (here an invalid regex matcher) used
+    to surface AFTER the 200 + streamed headers were committed, splicing
+    a JSON error into the chunk stream. The first frame is now pulled
+    before the headers, so the client gets a proper JSON 400."""
+    srv = PromHTTPServer(spark).start()
     try:
         body = codec.encode_read_request(
             [codec.Query(
                 start_timestamp_ms=0, end_timestamp_ms=1_000_000,
-                matchers=[("=", "no_such_label", "x")],
+                matchers=[("=~", "job", "(")],
             )],
             accepted_response_types=[codec.READ_STREAMED_XOR_CHUNKS],
         )
@@ -814,6 +804,17 @@ def test_instant_query_defaults_time_to_now(base, written):
     assert status == 200 and out["status"] == "success"
 
 
+def test_series_selection_without_match_gives_upstreams_error(base, written):
+    """/series and the by-labels dump need a match[] param; without one
+    they answer upstream's bad_data error (web/api/v1), not a parse
+    error of a default selector."""
+    for path in ("/api/v1/series", "/debug/index_dump_by_labels"):
+        status, out = _get(f"{base}{path}?start=0&end=200")
+        assert status == 400, path
+        assert out == {"status": "error", "errorType": "bad_data",
+                       "error": "no match[] parameter provided"}, path
+
+
 def test_series_union_of_repeated_match_params(base, written):
     status, out = _get(
         f"{base}/api/v1/series?match[]="
@@ -845,10 +846,11 @@ def test_timeout_accepts_duration_string(base, written):
 
 
 def test_canonical_series_json_matches_spark_to_json(spark):
-    """ADVICE r4: the /debug/index_dump_by_labels fallback must emit the
-    SAME canonical labels JSON as model.series_json's to_json(map) — values
-    stringified (longs quoted), keys sorted, compact separators, null
-    labels dropped — so the 60-bit ids agree across the two dumps."""
+    """The driver-side canonical_series_json must emit the SAME labels
+    JSON as model.series_json's to_json(map) — values stringified (longs
+    quoted), keys sorted, compact separators, null labels dropped: the
+    expiration dump's ids come from the store's driver-side keys, the
+    other dumps' from series_json, and the 60-bit ids must agree."""
     from pyspark.sql import functions as F
 
     from squirreldb_spark.model import canonical_series_json, series_json
@@ -1020,7 +1022,7 @@ def test_series_over_partitioned_history_prunes_dates(spark, tmp_path):
         status, out = _get(url, {"X-SquirrelDB-Tenant": "other"})
         assert status == 200 and out["data"] == []
 
-        df = srv._api().series("m", 0, 600_000, RequestOptions(tenant="t1"))
+        df = srv._api().series(["m"], 0, 600_000, RequestOptions(tenant="t1"))
         plan = df._jdf.queryExecution().executedPlan().toString()
         seg = plan[plan.index("PartitionFilters: [") + len("PartitionFilters: ["):]
         assert not seg.startswith("]") and "date" in seg[:seg.index("]")], plan
@@ -1272,6 +1274,22 @@ def test_expiration_dump_survives_a_flush(store_server):
     assert len(dump.decode().splitlines()) == 1
     _get(f"{b}/debug/flush")
     assert _get_raw(url)[1] == dump
+
+
+def test_history_the_daemon_cannot_serve_is_rejected(spark):
+    """A history that is not map-labelled (labels MAP<STRING,STRING>, ts,
+    value) is refused when the store is made, not found on a first read
+    or after a write was acknowledged."""
+    from squirreldb_spark.streaming import ingest
+
+    fixed = spark.createDataFrame(
+        [(1, "m", 10_000, 1.0)], "user_id long, __name__ string, ts long, value double")
+    with pytest.raises(ValueError, match="labels map<string,string>"):
+        ingest.PointStore(spark, fixed)
+    no_value = spark.createDataFrame(
+        [({"__name__": "m"}, 10_000)], "labels map<string,string>, ts long")
+    with pytest.raises(ValueError):
+        PromHTTPServer(spark, base_points=no_value)
 
 
 def test_stop_removes_the_flushed_parquet(spark, monkeypatch):
