@@ -80,3 +80,32 @@ class BinaryOp:
 class Unary:
     op: str  # '-' or '+'
     expr: object
+
+
+#: the fields holding a node's sub-expressions (a FunctionCall's are its args)
+_CHILD_FIELDS = {
+    MatrixSelector: ("inner",),
+    Subquery: ("inner",),
+    Aggregation: ("expr", "param"),
+    BinaryOp: ("lhs", "rhs"),
+    Unary: ("expr",),
+}
+
+
+def children(node) -> tuple:
+    """A node's sub-expressions, in evaluation order. Literal function
+    args (label names, separators, regexes) and aggregation params are
+    not expressions and are skipped."""
+    if isinstance(node, FunctionCall):
+        kids = node.args
+    else:
+        kids = (getattr(node, f) for f in _CHILD_FIELDS.get(type(node), ()))
+    return tuple(k for k in kids if not isinstance(k, (int, float, str, type(None))))
+
+
+def walk(node):
+    """Every node of the expression, depth first (a node before its
+    children)."""
+    yield node
+    for child in children(node):
+        yield from walk(child)

@@ -27,6 +27,9 @@ downstream aggregation, which groups on the same keys).
 
 from __future__ import annotations
 
+import copy
+import math
+import re
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -39,6 +42,7 @@ from squirreldb_spark.tsdb import aggregation as agg_ops
 from squirreldb_spark.tsdb import binops, range_fns, selectors
 from squirreldb_spark.tsdb import downsample as ds_mod
 from squirreldb_spark.tsdb import functions as fns
+from squirreldb_spark.tsdb import mutable as mut
 from squirreldb_spark.tsdb.grid import data_grid
 
 
@@ -179,100 +183,52 @@ def time_window(node, lookback_ms: int) -> tuple[int, int, list[int]]:
             a + max(-node.offset_ms, 0),
             an,
         )
-    if isinstance(node, A.FunctionCall):
-        children = node.args
-    elif isinstance(node, A.Aggregation):
-        children = (node.expr, node.param)
-    elif isinstance(node, A.BinaryOp):
-        children = (node.lhs, node.rhs)
-    elif isinstance(node, A.Unary):
-        children = (node.expr,)
-    else:
-        children = ()
     behind = ahead = 0
     anchors: list[int] = []
-    for c in children:
-        if c is None or isinstance(c, (int, float, str)):
-            continue
+    for c in A.children(node):
         cb, ca, can = time_window(c, lookback_ms)
         behind, ahead = max(behind, cb), max(ahead, ca)
         anchors.extend(can)
     return behind, ahead, anchors
 
 
-def referenced_labels(node, acc: set[str]) -> None:
-    """Collect every label NAME an expression references: selector
-    matchers (and the bare metric name as ``__name__``), by/without
-    groupings, on/ignoring lists, group_left/right carried labels, and
-    label_replace/label_join source labels."""
-    if isinstance(node, A.VectorSelector):
-        if node.name:
-            acc.add("__name__")
-        for m in node.matchers:
-            acc.add(m.name)
-        return
-    if isinstance(node, A.MatrixSelector):
-        referenced_labels(node.inner, acc)
-        return
-    if isinstance(node, A.Subquery):
-        referenced_labels(node.inner, acc)
-        return
-    if isinstance(node, A.Aggregation):
-        acc.update(node.grouping)
-        referenced_labels(node.expr, acc)
-        if not isinstance(node.param, (int, float, str, type(None))):
-            referenced_labels(node.param, acc)
-        return
-    if isinstance(node, A.BinaryOp):
-        for lst in (node.on, node.ignoring, node.group_labels):
-            if lst:
-                acc.update(lst)
-        referenced_labels(node.lhs, acc)
-        referenced_labels(node.rhs, acc)
-        return
-    if isinstance(node, A.FunctionCall):
-        if node.name == "histogram_quantile":
-            acc.add("le")  # the bucket label is an implicit reference
-        if node.name == "label_replace" and len(node.args) >= 4:
-            if isinstance(node.args[3], str):
-                acc.add(node.args[3])
-        if node.name == "label_join":
-            for a in node.args[3:]:
-                if isinstance(a, str):
-                    acc.add(a)
-        if node.name in ("sort_by_label", "sort_by_label_desc"):
-            # the sort keys are label references too — without this a
-            # dynamic-label (map) store never promotes them to columns
-            for a in node.args[1:]:
-                if isinstance(a, str):
-                    acc.add(a)
-        for a in node.args:
-            if not isinstance(a, (int, float, str)):
-                referenced_labels(a, acc)
-        return
-    if isinstance(node, A.Unary):
-        referenced_labels(node.expr, acc)
+def referenced_labels(node) -> set[str]:
+    """Every label NAME an expression references: selector matchers (and
+    the bare metric name as ``__name__``), by/without groupings,
+    on/ignoring lists, group_left/right carried labels, and
+    label_replace/label_join/sort_by_label source labels."""
+    acc: set[str] = set()
+    for n in A.walk(node):
+        if isinstance(n, A.VectorSelector):
+            if n.name:
+                acc.add("__name__")
+            acc.update(m.name for m in n.matchers)
+        elif isinstance(n, A.Aggregation):
+            acc.update(n.grouping)
+        elif isinstance(n, A.BinaryOp):
+            for lst in (n.on, n.ignoring, n.group_labels):
+                acc.update(lst or ())
+        elif isinstance(n, A.FunctionCall):
+            if n.name == "histogram_quantile":
+                acc.add("le")  # the bucket label is an implicit reference
+            if n.name == "label_replace":
+                sources = n.args[3:4]
+            elif n.name == "label_join":
+                sources = n.args[3:]
+            elif n.name in ("sort_by_label", "sort_by_label_desc"):
+                # the sort keys are label references too — without this a
+                # dynamic-label (map) store never promotes them to columns
+                sources = n.args[1:]
+            else:
+                sources = ()
+            acc.update(a for a in sources if isinstance(a, str))
+    return acc
 
 
-def collect_without_sets(node, acc: set[frozenset]) -> None:
-    """Collect the grouping sets of every ``without (...)`` aggregation —
-    each needs its own label-set fingerprint over a dynamic-label store."""
-    if isinstance(node, A.Aggregation):
-        if node.without:
-            acc.add(frozenset(node.grouping))
-        collect_without_sets(node.expr, acc)
-        if not isinstance(node.param, (int, float, str, type(None))):
-            collect_without_sets(node.param, acc)
-        return
-    if isinstance(node, A.FunctionCall):
-        for a in node.args:
-            if not isinstance(a, (int, float, str)):
-                collect_without_sets(a, acc)
-        return
-    for attr in ("expr", "inner", "lhs", "rhs"):
-        child = getattr(node, attr, None)
-        if child is not None and not isinstance(child, (int, float, str)):
-            collect_without_sets(child, acc)
+def _check_label_name(name: str, kind: str) -> None:
+    """An invalid label name is a query error (upstream ``invalid <kind>``)."""
+    if not re.match(r"^[a-zA-Z_][a-zA-Z0-9_]*$", name):
+        raise ValueError(f"invalid {kind} {name!r}")
 
 
 def without_fp_name(grouping) -> str:
@@ -281,24 +237,6 @@ def without_fp_name(grouping) -> str:
 
     digest = _hl.md5("|".join(sorted(grouping)).encode()).hexdigest()[:8]
     return f"__series_wo_{digest}__"
-
-
-def contains_function(node, fn_name: str) -> bool:
-    """Whether the expression contains a call to ``fn_name``."""
-    if isinstance(node, A.FunctionCall):
-        if node.name == fn_name:
-            return True
-        return any(
-            contains_function(a, fn_name)
-            for a in node.args
-            if not isinstance(a, (int, float, str))
-        )
-    for attr in ("expr", "inner", "lhs", "rhs"):
-        child = getattr(node, attr, None)
-        if child is not None and not isinstance(child, (int, float, str)):
-            if contains_function(child, fn_name):
-                return True
-    return False
 
 
 def aligned_grid(spark, lo_ms: int, hi_ms: int, step_ms: int) -> DataFrame:
@@ -444,9 +382,14 @@ class PromQLEngine:
         if self.labels_map_col is None:
             return self
         m = self.labels_map_col
-        refs: set[str] = set()
-        referenced_labels(node, refs)
-        refs = {self.name_label if r == "__name__" else r for r in refs}
+        # apply the same __name__ -> name_label translation the eval side
+        # uses (see _eval_aggregation), or the without() fingerprint
+        # column computed here and the one looked up there get different
+        # digests and without(__name__) silently fails to merge series
+        def named(labels):
+            return (self.name_label if l == "__name__" else l for l in labels)
+
+        refs = set(named(referenced_labels(node)))
         if self.mutable_mapping is not None:
             # mutable (virtual) labels are resolved by the matcher
             # rewrite, never stored: promoting one would shadow it with
@@ -456,21 +399,17 @@ class PromQLEngine:
                 for r in self.mutable_mapping
                 if r.tenant == self.tenant
             }
-        needs_nole = contains_function(node, "histogram_quantile")
-        wo_sets: set[frozenset] = set()
-        collect_without_sets(node, wo_sets)
-        # apply the same __name__ -> name_label translation the eval side
-        # uses (see _eval_aggregation), or the fingerprint column computed
-        # here and the one looked up there get different digests and
-        # without(__name__) silently fails to merge series
+        nodes = list(A.walk(node))
+        needs_nole = any(
+            isinstance(n, A.FunctionCall) and n.name == "histogram_quantile"
+            for n in nodes
+        )
+        # each without(...) grouping set needs its own label-set fingerprint
         wo_sets = {
-            frozenset(
-                self.name_label if l == "__name__" else l for l in w
-            )
-            for w in wo_sets
+            frozenset(named(n.grouping))
+            for n in nodes
+            if isinstance(n, A.Aggregation) and n.without
         }
-        import copy
-
         def fp_expr(excluded: list[str]):
             """Canonical sorted-JSON fingerprint of the map minus keys."""
             if excluded:
@@ -543,8 +482,6 @@ class PromQLEngine:
         behind, ahead, anchors = time_window(node, self.lookback_ms)
         lo = min([self.start_ms, *anchors]) - behind
         hi = max([self.end_ms, *anchors]) + ahead
-        import copy
-
         eng = copy.copy(self)
         eng.points = _time_bounded(self.points, lo, hi)
         if self.downsample is not None:
@@ -573,7 +510,10 @@ class PromQLEngine:
             if name not in self.label_cols:
                 # A31: a matcher on a mutable (virtual) label rewrites to a
                 # concrete-label isin() before the scan
-                pts = self._apply_mutable_matcher(pts, m, name)
+                pts = mut.rewrite_filter(
+                    pts, self.mutable_mapping or [], self.tenant, m,
+                    self.labels_map_col,
+                )
                 continue
             col = F.col(name).cast("string")
             if m.op == "=":
@@ -588,53 +528,14 @@ class PromQLEngine:
             pts = pts.filter(c)
         return pts
 
-    def _apply_mutable_matcher(self, pts: DataFrame, m, name: str) -> DataFrame:
-        """Rewrite a matcher on a mutable label to concrete values
-        (reference cassandra/mutable/processor.go:52-241): select the
-        mapping rows whose mutable value satisfies the matcher (regex
-        matchers expand over all values), filter on the union of their
-        associated concrete values."""
-        if self.mutable_mapping is None:
-            raise ValueError(f"unknown label {name!r}")
-        import re
-
-        rows = [
-            r for r in self.mutable_mapping
-            if r.tenant == self.tenant and r.mutable_name == name
-        ]
-        if not rows:
-            raise ValueError(f"unknown label {name!r}")
-        values: set[str] = set()
-        for r in rows:
-            v = r.mutable_value
-            hit = {
-                "=": v == m.value,
-                "!=": v != m.value,
-                "=~": re.fullmatch(f"(?:{m.value})", v) is not None,
-                "!~": re.fullmatch(f"(?:{m.value})", v) is None,
-            }[m.op]
-            if hit:
-                values.update(r.associated_values)
-        if not values:
-            return pts.filter(F.lit(False))
-        assoc = rows[0].associated_name
-        if assoc in pts.columns:
-            col = F.col(assoc).cast("string")
-        elif self.labels_map_col is not None:
-            # dynamic-label store: the associated label lives in the map
-            col = F.element_at(F.col(self.labels_map_col), F.lit(assoc))
-        else:
-            raise ValueError(f"unknown associated label {assoc!r}")
-        return pts.filter(col.isin(sorted(values)))
-
     # ----------------------------------------------------- pre-agg routing
 
     def _use_preagg(self) -> bool:
-        """A15 (read.go:60-72): pre-agg iff step >= resolution, with the
-        force flags mirroring the reference's headers; force-raw wins."""
-        if self.downsample is None or self.force_raw:
-            return False
-        return self.force_preagg or self.step_ms >= self.preagg_resolution_ms
+        """A15 (:func:`downsample.use_preagg`) when a pre-agg table is set."""
+        return self.downsample is not None and ds_mod.use_preagg(
+            self.step_ms, self.force_raw, self.force_preagg,
+            self.preagg_resolution_ms,
+        )
 
     def _routed_mat(self, node_arg, fn_name: str):
         """Lower a plain matrix selector against the routed downsample
@@ -676,16 +577,8 @@ class PromQLEngine:
             pts = self._select_points(node)
             if node.at_ms is not None:
                 # @ modifier: evaluate once at the fixed time, replicate the
-                # constant result across the whole grid; @ start()/@ end()
-                # resolve to the grid's boundary in-plan (no collect)
-                if node.at_ms == "start":
-                    fixed = self.grid.agg(F.min("step_ts").alias("step_ts"))
-                elif node.at_ms == "end":
-                    fixed = self.grid.agg(F.max("step_ts").alias("step_ts"))
-                else:
-                    fixed = self.grid.sparkSession.range(1).select(
-                        F.lit(node.at_ms).alias("step_ts")
-                    )
+                # constant result across the whole grid
+                fixed = self._at_frame(node.at_ms, "step_ts")
                 one = selectors.instant_select(
                     pts, self.label_cols, self.step_ms, self.lookback_ms, grid=fixed
                 ).drop("step_ts")
@@ -727,18 +620,9 @@ class PromQLEngine:
                 # the same window at every outer step).  All in-plan, the
                 # VectorSelector-@ convention: T is a 1-row DataFrame; the
                 # inner grid is the absolutely-aligned steps of
-                # (T - offset - range, T - offset]; the evaluated window
-                # then replays at every outer step by shifting each point
-                # to the same relative position in that step's window.
+                # (T - offset - range, T - offset].
                 step = node.step_ms or self.step_ms
-                if node.at_ms == "start":
-                    tdf = self.grid.agg(F.min("step_ts").alias("_t"))
-                elif node.at_ms == "end":
-                    tdf = self.grid.agg(F.max("step_ts").alias("_t"))
-                else:
-                    tdf = self.grid.sparkSession.range(1).select(
-                        F.lit(node.at_ms).alias("_t")
-                    )
+                tdf = self._at_frame(node.at_ms, "_t")
                 teff = (F.col("_t") - F.lit(node.offset_ms)).alias("_te")
                 k = node.range_ms // step + 2
                 offs = self.grid.sparkSession.range(k).select(
@@ -759,27 +643,24 @@ class PromQLEngine:
                     )
                     .select("step_ts")
                 )
-                inner = inner_engine._eval(node.inner)
-                assert isinstance(inner, Vec), (
-                    "subquery inner must be an instant vector")
+            inner = inner_engine._eval(node.inner)
+            assert isinstance(inner, Vec), "subquery inner must be an instant vector"
+            pts = inner.df.withColumnRenamed("step_ts", "ts")
+            if node.at_ms is not None:
                 # the pinned window is step-invariant: keep the single
                 # window's points at their real timestamps and hand the
                 # consumer the 1-row pinned grid. The consuming range
                 # function evaluates once at T_eff and the result is
-                # broadcast across the outer grid (_spread_pinned) —
+                # broadcast across the outer grid (_over_range) —
                 # replicating points per outer step is WRONG for
                 # duplicate-sensitive functions (count/sum/avg/rate):
                 # replicas made for step s also land in the sliding
                 # windows of neighboring steps, inflating their counts.
-                pts = inner.df.withColumnRenamed("step_ts", "ts")
                 pinned = tdf.select(teff).select(
                     F.col("_te").cast("long").alias("step_ts")
                 )
                 return Mat(pts, node.range_ms, labels=inner.labels,
                            pinned_grid=pinned)
-            inner = inner_engine._eval(node.inner)
-            assert isinstance(inner, Vec), "subquery inner must be an instant vector"
-            pts = inner.df.withColumnRenamed("step_ts", "ts")
             if node.offset_ms:
                 pts = pts.withColumn("ts", F.col("ts") + F.lit(node.offset_ms))
             return Mat(pts, node.range_ms, labels=inner.labels)
@@ -841,22 +722,32 @@ class PromQLEngine:
             dropped = True
         if not dropped and not force_check:
             return vec
-        if dropped or force_check:
-            df = self._dup_check(df, labels)
+        df = self._dup_check(df, labels)
         if dropped:
             df = df.select(*labels, "step_ts", "value")
         return Vec(df, tuple(labels))
 
-    def _mat_grid(self, mat: Mat) -> DataFrame:
-        """Grid a range function should evaluate ``mat`` on: the 1-row
-        pinned grid for an ``@``-pinned subquery (evaluate once), the
-        query grid otherwise."""
-        return mat.pinned_grid if mat.pinned_grid is not None else self.grid
+    def _at_frame(self, at_ms, col: str) -> DataFrame:
+        """The ``@`` time as a 1-row frame ``(col)``: ``@ start()`` and
+        ``@ end()`` resolve to the grid's boundary in-plan (no collect),
+        an absolute ``@`` is the literal ms."""
+        if at_ms == "start":
+            return self.grid.agg(F.min("step_ts").alias(col))
+        if at_ms == "end":
+            return self.grid.agg(F.max("step_ts").alias(col))
+        return self.grid.sparkSession.range(1).select(F.lit(at_ms).alias(col))
 
-    def _spread_pinned(self, mat: Mat, df: DataFrame) -> DataFrame:
-        """Broadcast a pinned (step-invariant) range-function result
-        across the outer grid; identity for ordinary range vectors."""
-        if mat.pinned_grid is None:
+    def _over_range(self, mat: Mat, kernel, *args, **kwargs) -> DataFrame:
+        """Apply a range kernel,
+        ``kernel(points, labels, step_ms, range_ms, *args, grid=...)``, to
+        ``mat``. An ``@``-pinned subquery's window is step-invariant: the
+        kernel evaluates once on its 1-row pinned grid and the result is
+        broadcast across the outer grid. Any other range vector evaluates
+        on the query grid."""
+        pinned = mat.pinned_grid
+        df = kernel(mat.points, mat.labels, self.step_ms, mat.range_ms, *args,
+                    grid=self.grid if pinned is None else pinned, **kwargs)
+        if pinned is None:
             return df
         return df.drop("step_ts").crossJoin(F.broadcast(self.grid))
 
@@ -865,27 +756,17 @@ class PromQLEngine:
         if name in _RANGE_FNS:
             mat = self._routed_mat(node.args[0], name) or self._eval(node.args[0])
             assert isinstance(mat, Mat), f"{name} needs a range vector"
-            df = range_fns.extrapolated(
-                mat.points, mat.labels, self.step_ms, mat.range_ms,
-                grid=self._mat_grid(mat), **_RANGE_FNS[name],
-            )
-            df = self._spread_pinned(mat, df)
+            df = self._over_range(mat, range_fns.extrapolated, **_RANGE_FNS[name])
             return self._drop_name(Vec(df, mat.labels))
         if name in _INSTANT_RANGE:
             mat = self._routed_mat(node.args[0], name) or self._eval(node.args[0])
-            df = range_fns.instantaneous(
-                mat.points, mat.labels, self.step_ms, mat.range_ms,
-                is_rate=_INSTANT_RANGE[name], grid=self._mat_grid(mat),
+            df = self._over_range(
+                mat, range_fns.instantaneous, is_rate=_INSTANT_RANGE[name]
             )
-            df = self._spread_pinned(mat, df)
             return self._drop_name(Vec(df, mat.labels))
         if name in _OVER_TIME_FNS:
             mat = self._routed_mat(node.args[0], name) or self._eval(node.args[0])
-            df = range_fns.over_time(
-                mat.points, mat.labels, self.step_ms, mat.range_ms,
-                _OVER_TIME_FNS[name], grid=self._mat_grid(mat),
-            )
-            df = self._spread_pinned(mat, df)
+            df = self._over_range(mat, range_fns.over_time, _OVER_TIME_FNS[name])
             vec = Vec(df, mat.labels)
             # last_over_time is the one *_over_time that KEEPS the metric
             # name (upstream functions.go funcLastOverTime)
@@ -893,33 +774,19 @@ class PromQLEngine:
         if name == "quantile_over_time":
             q = self._eval(node.args[0])
             mat = self._eval(node.args[1])
-            df = range_fns.over_time(
-                mat.points, mat.labels, self.step_ms, mat.range_ms,
-                "quantile", quantile=q, grid=self._mat_grid(mat),
-            )
-            df = self._spread_pinned(mat, df)
+            df = self._over_range(mat, range_fns.over_time, "quantile", quantile=q)
             return self._drop_name(Vec(df, mat.labels))
         if name == "mad_over_time":
             mat = self._eval(node.args[0])
-            df = range_fns.mad_over_time(
-                mat.points, mat.labels, self.step_ms, mat.range_ms,
-                grid=self._mat_grid(mat),
-            )
-            df = self._spread_pinned(mat, df)
+            df = self._over_range(mat, range_fns.mad_over_time)
             return self._drop_name(Vec(df, mat.labels))
         if name in ("resets", "changes"):
             mat = self._eval(node.args[0])
-            df = range_fns.resets_changes(
-                mat.points, mat.labels, self.step_ms, mat.range_ms, name,
-                grid=self._mat_grid(mat),
-            )
-            df = self._spread_pinned(mat, df)
+            df = self._over_range(mat, range_fns.resets_changes, name)
             return self._drop_name(Vec(df, mat.labels))
         if name in _SCALAR_FNS:
             vec = self._eval(node.args[0])
             if isinstance(vec, (int, float)):
-                import math
-
                 py = {
                     "abs": abs, "ceil": math.ceil, "floor": math.floor,
                     "exp": math.exp, "ln": math.log, "log2": math.log2,
@@ -1007,16 +874,12 @@ class PromQLEngine:
             return Vec(df, ())
         if name == "deriv":
             mat = self._eval(node.args[0])
-            df = fns.linreg(mat.points, mat.labels, self.step_ms, mat.range_ms,
-                            grid=self._mat_grid(mat))
-            df = self._spread_pinned(mat, df)
+            df = self._over_range(mat, fns.linreg)
             return self._drop_name(Vec(df, mat.labels))
         if name == "predict_linear":
             mat = self._eval(node.args[0])
             t = float(self._eval(node.args[1]))
-            df = fns.linreg(mat.points, mat.labels, self.step_ms, mat.range_ms,
-                            predict_s=t, grid=self._mat_grid(mat))
-            df = self._spread_pinned(mat, df)
+            df = self._over_range(mat, fns.linreg, predict_s=t)
             return self._drop_name(Vec(df, mat.labels))
         if name in ("holt_winters", "double_exponential_smoothing"):
             # Prometheus 3.x renamed holt_winters; both spellings accepted
@@ -1034,14 +897,9 @@ class PromQLEngine:
                 raise ValueError(
                     f"invalid trend factor. Expected: 0 < tf < 1, got: {tf}"
                 )
-            df = fns.holt_winters(mat.points, mat.labels, self.step_ms,
-                                  mat.range_ms, sf=sf, tf=tf,
-                                  grid=self._mat_grid(mat))
-            df = self._spread_pinned(mat, df)
+            df = self._over_range(mat, fns.holt_winters, sf=sf, tf=tf)
             return self._drop_name(Vec(df, mat.labels))
         if name == "pi":
-            import math
-
             return math.pi
         if name == "time":
             # per-step scalar: evaluation time in epoch seconds
@@ -1060,11 +918,7 @@ class PromQLEngine:
             )
         if name == "absent_over_time":
             mat = self._eval(node.args[0])
-            present = range_fns.over_time(
-                mat.points, mat.labels, self.step_ms, mat.range_ms, "present",
-                grid=self._mat_grid(mat),
-            )
-            present = self._spread_pinned(mat, present)
+            present = self._over_range(mat, range_fns.over_time, "present")
             lbls = self._absent_const_labels(node.args[0])
             return Vec(
                 fns.absent(present, self.grid, mat.labels, const_labels=lbls),
@@ -1117,11 +971,8 @@ class PromQLEngine:
         if name == "label_replace":
             vec = self._eval(node.args[0])
             dst, repl, src, regex = node.args[1:5]
-            import re as _re
-
-            _re.compile(regex)  # invalid regex is a query error (yml:188-210)
-            if not _re.match(r"^[a-zA-Z_][a-zA-Z0-9_]*$", dst):
-                raise ValueError(f"invalid destination label name {dst!r}")
+            re.compile(regex)  # invalid regex is a query error (yml:188-210)
+            _check_label_name(dst, "destination label name")
             df = vec.df
             if src not in df.columns:
                 # a missing source label matches as the empty string
@@ -1134,10 +985,7 @@ class PromQLEngine:
         if name == "label_join":
             vec = self._eval(node.args[0])
             dst, sep = node.args[1], node.args[2]
-            import re as _re
-
-            if not _re.match(r"^[a-zA-Z_][a-zA-Z0-9_]*$", dst):
-                raise ValueError(f"invalid destination label name {dst!r}")
+            _check_label_name(dst, "destination label name")
             sources = list(node.args[3:])
             df = vec.df
             for s in sources:
@@ -1272,11 +1120,7 @@ class PromQLEngine:
 
         if node.op == "count_values":
             lbl = str(node.param)
-            import re as _re
-
-            # upstream: "invalid label name" is a query error
-            if not _re.match(r"^[a-zA-Z_][a-zA-Z0-9_]*$", lbl):
-                raise ValueError(f"invalid label name {lbl!r}")
+            _check_label_name(lbl, "label name")
             # Prometheus label values are STRINGS: upstream formats the
             # sample value with strconv.FormatFloat(v, 'f', -1, 64)
             # (promql count_values), so 2.0 becomes label "2", 0.5 stays
@@ -1320,8 +1164,6 @@ class PromQLEngine:
 
     @staticmethod
     def _scalar_arith(op: str, a: float, b: float) -> float:
-        import math
-
         if op in ("==", "!=", "<", ">", "<=", ">="):
             # scalar comparisons require `bool` in PromQL and yield 0/1;
             # the caller has already validated bool_mode

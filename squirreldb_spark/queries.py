@@ -980,6 +980,7 @@ def q_mm_audio_align(spark, sf_dir):
 
 # ----------------------------------------------- long-tail PromQL functions
 
+from squirreldb_spark.promql.ast import Matcher  # noqa: E402
 from squirreldb_spark.tsdb import functions as fns  # noqa: E402
 from squirreldb_spark.tsdb import mutable as mut  # noqa: E402
 
@@ -1137,7 +1138,9 @@ def q_mutable_labels(spark, sf_dir):
         [("t1", "group", "high", "user_id", [str(u) for u in range(5)])],
         mut.MAPPING_SCHEMA,
     ).collect()
-    pts = mut.rewrite_filter(_pts(spark, sf_dir), mapping, "t1", "group", "high")
+    pts = mut.rewrite_filter(
+        _pts(spark, sf_dir), mapping, "t1", Matcher("group", "=", "high")
+    )
     grid = data_grid(_pts(spark, sf_dir), STEP_MS)
     vec = selectors.instant_select(pts, KEYS, STEP_MS, LOOKBACK_MS, grid=grid)
     out = mut.enrich(vec, mapping, "t1", "group")
@@ -4658,7 +4661,9 @@ WHERE doc_id NOT IN (SELECT doc_id FROM members WHERE NOT is_canonical)
 # Later changes keep the window at exactly 50: each kernel that changes
 # enters group (1) below and displaces the last entry of the backfill
 # (2).  api_series and api_label_values are both in the window, since
-# /series and the label lookups now share one selection path.
+# /series and the label lookups now share one selection path.  Once the
+# planner stated each rule once, the rows on its moved paths not yet in
+# the window (promql_rate_sum .. promql_preagg_route) entered group (1).
 #
 _VERIFY_FIRST: list[str] = [
     # --- (0) NEW round-13 kernels (ratchet rule: new kernels enter the
@@ -4704,6 +4709,13 @@ _VERIFY_FIRST: list[str] = [
     # newest attestation.  It displaced ts_instant_selector, the last
     # entry of the attested backfill below.
     "api_label_values",
+    # their paths moved: rate and absent_over_time through _over_range,
+    # label promotion through the one AST walk, routing through
+    # downsample.use_preagg; they displaced the last four backfill rows
+    "promql_rate_sum",
+    "promql_map_labels",
+    "promql_absent_over_time",
+    "promql_preagg_route",
     # --- (2) r6-era backfill: the ENTIRE remaining r6 cohort (VERDICT
     # r12 order #4 — after this window no catalog row's newest
     # attestation predates r8; the 49-row r8 cohort rolls to r14) ---
@@ -4731,12 +4743,8 @@ _VERIFY_FIRST: list[str] = [
     "ev_attribution",
     "ev_cooccurrence",
     "ev_hll_distinct",
-    "ev_markov_transitions",
     "ev_rfm_segments",
-    "mm_scene_changes",
     "promql_double_exp_smoothing",
-    "tpch_q10_returned_items",
-    "tpch_q6_forecast_revenue",
 ]
 
 

@@ -42,12 +42,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from squirreldb_spark.model import canonical_series_json
+from squirreldb_spark.tsdb.maintenance import MAX_FUTURE_MS, clamp_future
 
 EVENT_SCHEMA = (
     "event_id long, ts long, user_id long, event_type string, value double, props string"
 )
 
-MAX_FUTURE_MS = 48 * 3600 * 1000      # config/default.go:100
 MAX_PAST_DELAY = "8 hours"            # aggregate.go:44-48 MaxPastDelay
 RESOLUTION = "5 minutes"              # tsdb.go:41
 
@@ -103,9 +103,7 @@ def _valid_samples(stream: DataFrame, now_ms: int | None) -> DataFrame:
     """The sample rules both validators share: a value, ``ts > 0`` and,
     given ``now_ms``, no later than ``now_ms + MAX_FUTURE_MS``."""
     out = stream.filter(F.col("value").isNotNull() & (F.col("ts") > 0))
-    if now_ms is None:
-        return out
-    return out.filter(F.col("ts") <= F.lit(now_ms + MAX_FUTURE_MS))
+    return out if now_ms is None else clamp_future(out, now_ms)
 
 
 def validate_map(

@@ -95,11 +95,12 @@ def route_column(function: str) -> str:
     return _FUNC_COLUMN.get(function, "avg")
 
 
-def use_preagg(step_ms: int, force_raw: bool = False, force_preagg: bool = False) -> bool:
+def use_preagg(step_ms: int, force_raw: bool = False, force_preagg: bool = False,
+               resolution_ms: int = RESOLUTION_MS) -> bool:
     """A15: pre-agg iff step >= resolution, unless forced (force-raw wins)."""
     if force_raw:
         return False
-    return force_preagg or step_ms >= RESOLUTION_MS
+    return force_preagg or step_ms >= resolution_ms
 
 
 def as_points(ds: DataFrame, keys: Sequence[str], function: str) -> DataFrame:

@@ -17,6 +17,9 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: A2: how far past now a sample may lie (config/default.go:100, +48 h)
+MAX_FUTURE_MS = 48 * 3600 * 1000
+
 
 def dedup_points(
     points: DataFrame,
@@ -73,7 +76,8 @@ def apply_retention(points: DataFrame, now_ms: int, ttl_seconds: int,
     )
 
 
-def clamp_future(points: DataFrame, now_ms: int, max_future_seconds: int = 48 * 3600,
+def clamp_future(points: DataFrame, now_ms: int,
+                 max_future_seconds: int = MAX_FUTURE_MS // 1000,
                  ts_col: str = "ts") -> DataFrame:
     """Reject samples too far in the future (config/default.go:100, +48 h)."""
     return points.filter(F.col(ts_col) <= F.lit(now_ms + max_future_seconds * 1000))

@@ -11,13 +11,16 @@ driver-side as plain rows (``MAPPING_SCHEMA`` fields as attributes), the
 analogue of the reference's in-process cached store — resolving against it
 runs no Spark job;
 
-* **matcher rewrite** = resolve the mutable matcher against the mapping
-  and turn it into an ``isin(values)`` filter on the associated column
+* **matcher rewrite** = resolve a mutable matcher (``=``, ``!=``, ``=~``
+  or ``!~``) against the mapping and turn it into an ``isin(values)``
+  filter on the associated label, a column or a key of the labels map
   (the regex-free equivalent of the reference's escaped-regex union);
 * **result enrichment** = broadcast join adding the mutable column.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -86,33 +89,43 @@ class MutableLabelStore:
         ]
 
 
-def resolve_values(
-    mapping: list, tenant: str, mutable_name: str, mutable_value: str
-) -> tuple[str, list[str]]:
-    """A31: mutable matcher -> (associated column, concrete values), a
-    driver-side lookup over the mapping rows."""
-    for r in mapping:
-        if (
-            r.tenant == tenant
-            and r.mutable_name == mutable_name
-            and r.mutable_value == mutable_value
-        ):
-            return r.associated_name, list(r.associated_values)
-    return "", []
-
-
 def rewrite_filter(
     points: DataFrame,
     mapping: list,
     tenant: str,
-    mutable_name: str,
-    mutable_value: str,
+    matcher,
+    labels_map_col: str | None = None,
 ) -> DataFrame:
-    """Apply the rewritten mutable matcher as an isin() filter."""
-    col, values = resolve_values(mapping, tenant, mutable_name, mutable_value)
-    if not col:
-        return points.limit(0)
-    return points.filter(F.col(col).cast("string").isin(values))
+    """A31: rewrite ``matcher`` (a PromQL ``Matcher`` on a mutable label)
+    to concrete values (reference cassandra/mutable/processor.go:52-241):
+    the associated values of every mapping row whose mutable value
+    satisfies it (any of the four ops) filter the associated label, a
+    column of ``points`` or a key of ``labels_map_col``. A name the
+    tenant never registered is an unknown label."""
+    rows = [
+        r for r in mapping
+        if r.tenant == tenant and r.mutable_name == matcher.name
+    ]
+    if not rows:
+        raise ValueError(f"unknown label {matcher.name!r}")
+    values: set[str] = set()
+    for r in rows:
+        if matcher.op in ("=", "!="):
+            hit = r.mutable_value == matcher.value
+        else:
+            hit = re.fullmatch(f"(?:{matcher.value})", r.mutable_value) is not None
+        if hit != matcher.op.startswith("!"):
+            values.update(r.associated_values)
+    if not values:
+        return points.filter(F.lit(False))
+    assoc = rows[0].associated_name
+    if assoc in points.columns:
+        col = F.col(assoc).cast("string")
+    elif labels_map_col is not None:
+        col = F.element_at(F.col(labels_map_col), F.lit(assoc))
+    else:
+        raise ValueError(f"unknown associated label {assoc!r}")
+    return points.filter(col.isin(sorted(values)))
 
 
 def enrich(

@@ -6,6 +6,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from squirreldb_spark.promql.ast import Matcher
 from squirreldb_spark.tsdb import functions as fns
 from squirreldb_spark.tsdb import mutable as mut
 
@@ -51,12 +52,25 @@ def test_mutable_label_rewrite_and_enrich(spark):
     pts = spark.createDataFrame(
         [("a", 1, 1.0), ("b", 1, 2.0), ("c", 1, 3.0)], "host string, ts long, value double"
     )
-    filtered = mut.rewrite_filter(pts, mapping, "t1", "group", "web")
+    filtered = mut.rewrite_filter(pts, mapping, "t1", Matcher("group", "=", "web"))
     assert {r.host for r in filtered.collect()} == {"a", "b"}
     enriched = mut.enrich(filtered, mapping, "t1", "group")
     assert all(r.group == "web" for r in enriched.collect())
     # unknown mutable value -> empty
-    assert mut.rewrite_filter(pts, mapping, "t1", "group", "nope").count() == 0
+    assert mut.rewrite_filter(
+        pts, mapping, "t1", Matcher("group", "=", "nope")
+    ).count() == 0
+    # all four ops; an equality value is never compiled as a regex
+    for op, value, hosts in [("!=", "a(", {"a", "b"}), ("=~", "w.*", {"a", "b"}),
+                             ("!~", "w.*", set())]:
+        got = mut.rewrite_filter(pts, mapping, "t1", Matcher("group", op, value))
+        assert {r.host for r in got.collect()} == hosts
+    # the associated label as a key of a labels map
+    mpts = pts.select(F.create_map(F.lit("host"), "host").alias("labels"), "ts")
+    got = mut.rewrite_filter(mpts, mapping, "t1", Matcher("group", "=", "web"), "labels")
+    assert got.count() == 2
+    with pytest.raises(ValueError, match="unknown label"):
+        mut.rewrite_filter(pts, mapping, "t2", Matcher("group", "=", "web"))
 
 
 def test_export_pivot_wide_layout(spark):

@@ -123,6 +123,39 @@ def test_parse_errors(bad):
         parse(bad)
 
 
+def test_ast_walk_labels_and_time_window():
+    """One expression with every node kind: the label names, the sample
+    window and the nodes every planner rule reads through ``walk``."""
+    from squirreldb_spark.promql import ast as A
+    from squirreldb_spark.promql.planner import referenced_labels, time_window
+
+    node = parse(
+        'histogram_quantile(0.9, sum without (instance) (label_join('
+        'label_replace(max_over_time(rate(req{job="api"}[5m])[30m:1m]'
+        ' offset 10m @ 1000), "dst", "$1", "src", "(.*)"),'
+        ' "joined", "-", "a", "b")))'
+        ' * on (le) group_left (extra)'
+        ' -sort_by_label(avg by (pod) (up{env!="dev"} @ 2000), "pod")'
+        " / ignoring (zone) up offset -1m"
+    )
+    # label_replace/label_join destinations are not references
+    assert referenced_labels(node) == {
+        "__name__", "job", "instance", "src", "a", "b", "le", "extra",
+        "pod", "env", "zone",
+    }
+    # behind: 5m range + 30m subquery range + 10m offset; ahead: the
+    # -1m offset; anchors: both absolute @ times, in walk order
+    assert time_window(node, 300_000) == (2_700_000, 60_000,
+                                          [1_000_000, 2_000_000])
+    assert [type(n).__name__ for n in A.walk(node)] == [
+        "BinaryOp", "BinaryOp", "FunctionCall", "NumberLiteral",
+        "Aggregation", "FunctionCall", "FunctionCall", "FunctionCall",
+        "Subquery", "FunctionCall", "MatrixSelector", "VectorSelector",
+        "Unary", "FunctionCall", "Aggregation", "VectorSelector",
+        "VectorSelector",
+    ]
+
+
 # ---------------------------------------------------------------- planner
 
 
